@@ -4,14 +4,17 @@ end-slot derivation (P14) — so a user of the reference's binary can
 switch invocation-for-invocation.
 
 The run itself is the Spark pipeline: RPC source (offline by default;
-pass --rpc-url for a live endpoint) → extract → classify → keyed
-upsert to parquet. ``--continuous`` runs the Structured Streaming job
-the reference's loop only stubbed (``src/main.rs:144-147``).
+pass --rpc-url for a live endpoint) → :func:`.etl.load.load_blocks`,
+which writes both tables from one fetch of each slot. ``--continuous``
+runs the Structured Streaming job the reference's loop only stubbed
+(``src/main.rs:144-147``) and hands each micro-batch to the same
+function; both modes read with the same options.
 """
 
 from __future__ import annotations
 
 import argparse
+import tempfile
 from dataclasses import dataclass
 
 
@@ -93,67 +96,43 @@ def format_number(n: int) -> str:
 
 def run(args: Args) -> dict:
     """Execute the pipeline (reference ``Pipeline::run``,
-    ``src/pipeline.rs:121-167``): source → extract → upsert, then the
-    A1/A3 stats report. Returns the stats dict."""
-    from pyspark.sql import functions as F
-
-    from .etl.extract import extract_transactions, extraction_stats, parse_blocks
-    from .etl.load import stream_upsert, upsert_parquet
+    ``src/pipeline.rs:121-167``): source → :func:`..etl.load.load_blocks`,
+    then the A1/A3 stats report. Returns the stats dict (``{}`` for
+    ``--continuous``, which runs until stopped)."""
+    from .etl.extract import extraction_stats
+    from .etl.load import load_blocks
     from .session import get_spark
     from .sources.rpc import SolanaRpcDataSource
 
     spark = get_spark("block-data-fetcher-spark")
     spark.dataSource.register(SolanaRpcDataSource)
-    mode = "rpc" if args.rpc_url else "offline"
+    start = args.start_slot if args.start_slot is not None else 0
+    options = {
+        "start_slot": start,
+        "end_slot": args.calculate_end_slot(start),
+        "batch_size": args.batch_size,
+        "max_slots_per_trigger": args.batch_size,
+        "mode": "rpc" if args.rpc_url else "offline",
+        "url": args.rpc_url or "",
+        "max_retries": args.max_retries,
+        "retry_delay": args.retry_delay,
+    }
 
     if args.continuous:
         # the intent of the reference's stubbed loop, done properly
-        stream = (
+        q = (
             spark.readStream.format("solana_rpc")
-            .option("start_slot", args.start_slot or 0)
-            .option("mode", mode)
-            .option("url", args.rpc_url or "")
-            .option("max_slots_per_trigger", args.batch_size)
+            .options(**options)
             .load()
-        )
-        txs = extract_transactions(stream).withColumn(
-            "processed_at", F.current_timestamp()
-        )
-        q = stream_upsert(
-            txs,
-            f"{args.output}/transactions",
-            ["signature"],
-            ["processed_at"],
-            trigger_available_now=False,
+            .writeStream.foreachBatch(lambda batch, _: load_blocks(batch, args.output))
+            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_upsert_"))
+            .start()
         )
         q.awaitTermination()
         return {}
 
-    start = args.start_slot if args.start_slot is not None else 0
-    end = args.calculate_end_slot(start)
-    raw = (
-        spark.read.format("solana_rpc")
-        .option("start_slot", start)
-        .option("end_slot", end)
-        .option("batch_size", args.batch_size)
-        .option("mode", mode)
-        .option("url", args.rpc_url or "")
-        .load()
-    )
-    blocks = parse_blocks(raw).withColumn("processed_at", F.current_timestamp())
-    txs = extract_transactions(raw).withColumn(
-        "processed_at", F.current_timestamp()
-    )
-    n_blocks = upsert_parquet(
-        spark, blocks, f"{args.output}/blocks", ["slot"], ["processed_at"]
-    )
-    n_txs = upsert_parquet(
-        spark,
-        txs,
-        f"{args.output}/transactions",
-        ["signature"],
-        ["processed_at"],
-    )
+    raw = spark.read.format("solana_rpc").options(**options).load()
+    n_blocks, n_txs = load_blocks(raw, args.output)
     stats = extraction_stats(spark.read.parquet(f"{args.output}/transactions")).head()
     report = {
         "blocks_loaded": n_blocks,

@@ -68,26 +68,27 @@ def parse_blocks(raw_blocks: DataFrame) -> DataFrame:
     ).where(F.col("blockhash").isNotNull())
 
 
-def flatten_transactions(raw_blocks: DataFrame) -> DataFrame:
-    """(slot, raw) → one row per transaction with its in-block index
-    (reference P1, extract.rs:55-71): posexplode keeps
-    transaction_index; unparseable txs are skipped (ST5)."""
+def _parsed_transactions(raw_blocks: DataFrame) -> tuple[DataFrame, Column]:
+    """(slot, raw) → ``(block_slot, transaction_index, tx)`` per
+    transaction plus its normalized account keys: the prologue of every
+    tx-level extraction (reference P1, extract.rs:55-71)."""
     b = F.from_json("raw", BLOCK_JSON_SCHEMA)
-    return raw_blocks.select(
+    with_tx = raw_blocks.select(
         F.col("slot").cast("long").alias("block_slot"),
         F.posexplode(b["transactions"]).alias("transaction_index", "tx_raw"),
+    ).select(
+        "block_slot",
+        "transaction_index",
+        F.from_json("tx_raw", TX_JSON_SCHEMA).alias("tx"),
     )
+    return with_tx, normalize_account_keys(F.col("tx.message.accountKeys"))
 
 
 def extract_transactions(raw_blocks: DataFrame) -> DataFrame:
     """The full tx-level extraction (reference extract.rs:74-163 +
     enrichment transform.rs:252-335): fields, classification, label,
     first transfer details."""
-    flat = flatten_transactions(raw_blocks)
-    tx = F.from_json("tx_raw", TX_JSON_SCHEMA)
-    with_tx = flat.select("block_slot", "transaction_index", tx.alias("tx"))
-
-    keys = normalize_account_keys(F.col("tx.message.accountKeys"))
+    with_tx, keys = _parsed_transactions(raw_blocks)
     instrs = F.col("tx.message.instructions")
     pids = extract_program_ids(instrs, keys)
     details = first_transfer_details(instrs)
@@ -117,10 +118,7 @@ def extract_transactions(raw_blocks: DataFrame) -> DataFrame:
 def extract_instructions(raw_blocks: DataFrame) -> DataFrame:
     """tx → one row per instruction (reference models.rs:36-43;
     instructions explode to their own table, SURVEY §1.1)."""
-    flat = flatten_transactions(raw_blocks)
-    tx = F.from_json("tx_raw", TX_JSON_SCHEMA)
-    with_tx = flat.select("block_slot", "transaction_index", tx.alias("tx"))
-    keys = normalize_account_keys(F.col("tx.message.accountKeys"))
+    with_tx, keys = _parsed_transactions(raw_blocks)
     exploded = with_tx.select(
         F.try_element_at(F.col("tx.signatures"), F.lit(1)).alias("transaction_signature"),
         keys.alias("account_keys"),
@@ -159,10 +157,8 @@ def account_activity(raw_blocks: DataFrame) -> DataFrame:
     Scale: explode is a generator in the scan stage; the rollup is one
     hash aggregate on address with map-side partials — state is
     O(|addresses|), the same bound as the reference's table."""
-    flat = flatten_transactions(raw_blocks)
-    tx = F.from_json("tx_raw", TX_JSON_SCHEMA)
-    keys = normalize_account_keys(tx["message"]["accountKeys"])
-    exploded = flat.select(
+    with_tx, keys = _parsed_transactions(raw_blocks)
+    exploded = with_tx.select(
         "block_slot",
         F.posexplode(keys).alias("key_index", "address"),
     ).where(F.col("address").isNotNull())

@@ -8,6 +8,9 @@ atomic directory swap. Idempotence contract (ST6): re-loading any
 batch leaves the table unchanged; newest write wins per key, ordered
 by an explicit version column (the reference's `processed_at=NOW()`).
 
+:func:`load_blocks` is the one path that writes the `blocks` and
+`transactions` tables: batch `cli.run` and `--continuous` both call it.
+
 Scale: at 100 TB the swap-rewrite becomes partition-overwrite
 (`partitionOverwriteMode=dynamic` on date/slot-bucket partitions) or a
 Delta/Iceberg MERGE — only touched partitions rewrite; the last-wins
@@ -25,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.windows import last_wins
+from .extract import extract_transactions, parse_blocks
 
 
 def _exists(spark: SparkSession, path: str) -> bool:
@@ -89,6 +93,35 @@ def upsert_parquet(
     return n
 
 
+def load_blocks(raw: DataFrame, out: str) -> tuple[int, int]:
+    """Upsert one fetched ``(slot, raw)`` batch into ``out/blocks`` and
+    ``out/transactions``, the unit the reference loads together
+    (load.rs:154-290). ``raw`` is persisted so each slot is fetched once
+    and both tables come from the same reply. Returns the post-upsert
+    row counts ``(blocks, transactions)``."""
+    spark = raw.sparkSession
+    now = F.current_timestamp()
+    raw = raw.persist()
+    try:
+        n_blocks = upsert_parquet(
+            spark,
+            parse_blocks(raw).withColumn("processed_at", now),
+            f"{out}/blocks",
+            ["slot"],
+            ["processed_at"],
+        )
+        n_txs = upsert_parquet(
+            spark,
+            extract_transactions(raw).withColumn("processed_at", now),
+            f"{out}/transactions",
+            ["signature"],
+            ["processed_at"],
+        )
+    finally:
+        raw.unpersist()
+    return n_blocks, n_txs
+
+
 def merge_aggregate(
     spark: SparkSession,
     partials: DataFrame,
@@ -136,32 +169,12 @@ def merge_aggregate(
     return n
 
 
-def insert_if_absent(
-    spark: SparkSession, incoming: DataFrame, path: str, keys: list[str]
-) -> int:
-    """`ON CONFLICT DO NOTHING` (reference S9): anti-join incoming
-    against existing keys, append only the new rows."""
-    if _exists(spark, path):
-        existing = spark.read.parquet(path)
-        new_rows = incoming.join(existing.select(*keys), keys, "left_anti")
-        merged = existing.unionByName(new_rows)
-    else:
-        merged = incoming
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix="seed_", dir=os.path.dirname(path) or ".")
-    merged.write.mode("overwrite").parquet(tmp)
-    n = spark.read.parquet(tmp).count()
-    _atomic_swap(path, tmp)
-    return n
-
-
 def stream_upsert(
     stream_df: DataFrame,
     path: str,
     keys: list[str],
     order: list[str],
     checkpoint: str | None = None,
-    trigger_available_now: bool = True,
 ):
     """Streaming sink: foreachBatch → keyed upsert (reference S8's
     per-batch atomic transaction; exactly-once-by-key across retries
@@ -173,6 +186,4 @@ def stream_upsert(
     writer = stream_df.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint or tempfile.mkdtemp(prefix="ckpt_upsert_")
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()

@@ -13,6 +13,10 @@ positions; ``latestOffset`` polls the chain head minus a 20-slot
 finality lag — the reference's continuous mode (which its code never
 finished: the loop only logs, ``src/main.rs:144-147``).
 
+Both readers run one fetch loop (``_SlotFetcher._blocks``) over one
+JSON-RPC request helper (``_rpc_call``); ``cli.run`` reads the source
+once in either mode and hands it to :func:`..etl.load.load_blocks`.
+
 Network is OPTIONAL and never on the correctness path: with
 ``mode=offline`` (default) the source emits deterministic synthetic
 blocks shaped like `getBlock` JsonParsed responses, so the full
@@ -105,6 +109,18 @@ RETRY_DELAY_S = 2.0  # reference default, linear backoff (src/cli.rs:100)
 
 
 _RETRYABLE_HTTP = (408, 429, 500, 502, 503, 504)
+# Solana JSON-RPC error codes: the slot was skipped, or the node cannot
+# serve it yet. Any other error object fails the slot.
+_SKIPPED_SLOT_CODES = (-32007, -32009)
+_RETRYABLE_RPC = (-32004, -32005, -32014)
+
+
+class RpcError(Exception):
+    """A JSON-RPC ``error`` object in a reply (the HTTP status was 200)."""
+
+    def __init__(self, code, message):
+        super().__init__(code, message)
+        self.code = code
 
 
 def _is_transient(e: BaseException) -> bool:
@@ -112,15 +128,18 @@ def _is_transient(e: BaseException) -> bool:
     (ADVICE r5: retrying bare Exception burned all attempts + backoff
     sleeps per slot on deterministic failures like 404s or malformed
     JSON). HTTPError subclasses URLError AND OSError, so it is
-    classified first by status code; everything transport-shaped
-    (connection reset, DNS, timeout, truncated/garbled HTTP response)
-    retries; parse/programming errors fail fast."""
+    classified first by status code, and a JSON-RPC error object by its
+    code; everything transport-shaped (connection reset, DNS, timeout,
+    truncated/garbled HTTP response) retries; parse/programming errors
+    fail fast."""
     import http.client
     import socket
     import urllib.error
 
     if isinstance(e, urllib.error.HTTPError):
         return e.code in _RETRYABLE_HTTP
+    if isinstance(e, RpcError):
+        return e.code in _RETRYABLE_RPC
     # http.client.HTTPException covers IncompleteRead/BadStatusLine —
     # a flaky server truncating or garbling a response mid-flight is
     # genuinely transient, but subclasses neither URLError nor
@@ -139,14 +158,13 @@ def _is_transient(e: BaseException) -> bool:
 
 
 def _with_retry(fn, max_retries: int = MAX_RETRIES,
-                delay_s: float = RETRY_DELAY_S, sleep=None,
-                retryable=_is_transient):
+                delay_s: float = RETRY_DELAY_S, sleep=None):
     """Bounded retry with linear backoff around ONE network fetch —
     the reference's extract retry loop (src/pipeline.rs:188-247):
     on failure sleep ``delay_s × attempt_number`` and retry; after
     ``max_retries`` total attempts re-raise the last error. Unlike
-    the reference's broad retry, only TRANSIENT transport errors
-    (``retryable``) are retried — a deterministic 4xx or JSON parse
+    the reference's broad retry, only TRANSIENT errors
+    (:func:`_is_transient`) are retried — a deterministic 4xx or JSON parse
     error surfaces on the first attempt instead of paying
     (max_retries − 1) backoff sleeps per slot. Each retried error is
     logged so flaky endpoints are visible. Applies only to the online
@@ -161,7 +179,7 @@ def _with_retry(fn, max_retries: int = MAX_RETRIES,
         try:
             return fn()
         except Exception as e:
-            if not retryable(e):
+            if not _is_transient(e):
                 raise
             attempt += 1
             if attempt >= max_retries:
@@ -175,33 +193,41 @@ def _with_retry(fn, max_retries: int = MAX_RETRIES,
             sleep(delay_s * attempt)
 
 
-def _fetch_block_rpc(url: str, slot: int, timeout: int = 30):
-    """Network path (gated; never used in tests/correctness runs).
-    Mirrors the reference's getBlock params (src/rpc/mod.rs:64-83)."""
+def _rpc_call(url: str, method: str, params: list, timeout: int):
+    """POST one JSON-RPC request and return its ``result``. An ``error``
+    object raises :class:`RpcError`: it is never read as a null result."""
     import urllib.request
 
     payload = json.dumps(
-        {
-            "jsonrpc": "2.0",
-            "id": 1,
-            "method": "getBlock",
-            "params": [
-                slot,
-                {
-                    "encoding": "jsonParsed",
-                    "transactionDetails": "full",
-                    "rewards": True,
-                    "maxSupportedTransactionVersion": 0,
-                },
-            ],
-        }
+        {"jsonrpc": "2.0", "id": 1, "method": method, "params": params}
     ).encode()
     req = urllib.request.Request(
         url, data=payload, headers={"Content-Type": "application/json"}
     )
     with urllib.request.urlopen(req, timeout=timeout) as resp:
         body = json.load(resp)
+    error = body.get("error")
+    if error is not None:
+        raise RpcError(error.get("code"), error.get("message"))
     return body.get("result")
+
+
+def _fetch_block_rpc(url: str, slot: int, timeout: int = 30):
+    """getBlock with the reference's params (src/rpc/mod.rs:64-83).
+    Returns ``None`` for a slot with no block: ``result: null`` or a
+    skipped-slot error code."""
+    config = {
+        "encoding": "jsonParsed",
+        "transactionDetails": "full",
+        "rewards": True,
+        "maxSupportedTransactionVersion": 0,
+    }
+    try:
+        return _rpc_call(url, "getBlock", [slot, config], timeout)
+    except RpcError as e:
+        if e.code in _SKIPPED_SLOT_CODES:
+            return None
+        raise
 
 
 class _SlotRangePartition(InputPartition):
@@ -210,16 +236,39 @@ class _SlotRangePartition(InputPartition):
         self.end = end
 
 
-class SolanaRpcReader(DataSourceReader):
+class _SlotFetcher:
+    """The options both readers share, and the one per-slot fetch loop
+    they both run."""
+
     def __init__(self, options: dict):
         self.start = int(options.get("start_slot", 0))
-        self.end = int(options.get("end_slot", self.start + 9))
-        self.chunk = int(options.get("batch_size", 10))  # reference cli.rs:34-35
         self.mode = options.get("mode", "offline")
         self.url = options.get("url", "")
         # reference CLI knobs (src/cli.rs:39-43, defaults :99-100)
         self.max_retries = int(options.get("max_retries", MAX_RETRIES))
         self.retry_delay = float(options.get("retry_delay", RETRY_DELAY_S))
+
+    def _blocks(self, first: int, last: int):
+        """Yield ``(slot, raw)`` for slots ``first..last``; a slot with
+        no block yields nothing (log-and-skip, ST5)."""
+        for slot in range(first, last + 1):
+            if self.mode == "offline":
+                yield (slot, synthetic_block(slot))
+                continue
+            result = _with_retry(
+                lambda s=slot: _fetch_block_rpc(self.url, s),
+                self.max_retries,
+                self.retry_delay,
+            )
+            if result is not None:
+                yield (slot, json.dumps(result))
+
+
+class SolanaRpcReader(_SlotFetcher, DataSourceReader):
+    def __init__(self, options: dict):
+        super().__init__(options)
+        self.end = int(options.get("end_slot", self.start + 9))
+        self.chunk = int(options.get("batch_size", 10))  # reference cli.rs:34-35
 
     def partitions(self):
         return [
@@ -228,29 +277,15 @@ class SolanaRpcReader(DataSourceReader):
         ]
 
     def read(self, partition: _SlotRangePartition):
-        for slot in range(partition.start, partition.end + 1):
-            if self.mode == "offline":
-                yield (slot, synthetic_block(slot))
-            else:
-                result = _with_retry(
-                    lambda s=slot: _fetch_block_rpc(self.url, s),
-                    self.max_retries,
-                    self.retry_delay,
-                )
-                if result is not None:  # skipped/absent slot → log-and-skip (ST5)
-                    yield (slot, json.dumps(result))
+        return self._blocks(partition.start, partition.end)
 
 
-class SolanaRpcStreamReader(SimpleDataSourceStreamReader):
+class SolanaRpcStreamReader(_SlotFetcher, SimpleDataSourceStreamReader):
     """Offsets are slot cursors: {"slot": next_unprocessed}."""
 
     def __init__(self, options: dict):
-        self.start = int(options.get("start_slot", 0))
-        self.mode = options.get("mode", "offline")
-        self.url = options.get("url", "")
+        super().__init__(options)
         self.max_batch = int(options.get("max_slots_per_trigger", 10))
-        self.max_retries = int(options.get("max_retries", MAX_RETRIES))
-        self.retry_delay = float(options.get("retry_delay", RETRY_DELAY_S))
         self._offline_head = self.start + FINALITY_LAG + 5
 
     def initialOffset(self):
@@ -262,40 +297,17 @@ class SolanaRpcStreamReader(SimpleDataSourceStreamReader):
             self._offline_head += 3
             head = self._offline_head
         else:
-
-            def _get_slot():
-                import urllib.request
-
-                payload = json.dumps(
-                    {"jsonrpc": "2.0", "id": 1, "method": "getSlot", "params": []}
-                ).encode()
-                req = urllib.request.Request(
-                    self.url,
-                    data=payload,
-                    headers={"Content-Type": "application/json"},
-                )
-                with urllib.request.urlopen(req, timeout=30) as resp:
-                    return json.load(resp)["result"]
-
-            head = _with_retry(_get_slot, self.max_retries, self.retry_delay)
+            head = _with_retry(
+                lambda: _rpc_call(self.url, "getSlot", [], 30),
+                self.max_retries,
+                self.retry_delay,
+            )
         return head - FINALITY_LAG
 
     def read(self, start: dict):
         first = start["slot"]
         last = min(self._latest_final(), first + self.max_batch - 1)
-        rows = []
-        for slot in range(first, last + 1):
-            if self.mode == "offline":
-                rows.append((slot, synthetic_block(slot)))
-            else:
-                result = _with_retry(
-                    lambda s=slot: _fetch_block_rpc(self.url, s),
-                    self.max_retries,
-                    self.retry_delay,
-                )
-                if result is not None:
-                    rows.append((slot, json.dumps(result)))
-        return iter(rows), {"slot": max(first, last + 1)}
+        return iter(list(self._blocks(first, last))), {"slot": max(first, last + 1)}
 
 
 class SolanaRpcDataSource(DataSource):

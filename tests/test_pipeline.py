@@ -14,7 +14,6 @@ from block_data_fetcher_spark.etl.extract import (
     parse_blocks,
 )
 from block_data_fetcher_spark.etl.load import (
-    insert_if_absent,
     stream_upsert,
     upsert_parquet,
 )
@@ -211,17 +210,6 @@ def test_upsert_idempotent(spark, tmp_path):
     upsert_parquet(spark, df3, path, ["k"], ["ts"])
     rows = {r.k: r.v for r in spark.read.parquet(path).collect()}
     assert rows["a"] == 2
-
-
-def test_insert_if_absent(spark, tmp_path):
-    path = str(tmp_path / "registry")
-    seed = spark.createDataFrame([("p1", "Prog1"), ("p2", "Prog2")], "id string, name string")
-    assert insert_if_absent(spark, seed, path, ["id"]) == 2
-    # conflicting row ignored, new row added (reference S9)
-    more = spark.createDataFrame([("p2", "CHANGED"), ("p3", "Prog3")], "id string, name string")
-    assert insert_if_absent(spark, more, path, ["id"]) == 3
-    rows = {r.id: r.name for r in spark.read.parquet(path).collect()}
-    assert rows == {"p1": "Prog1", "p2": "Prog2", "p3": "Prog3"}
 
 
 def test_stream_pipeline_end_to_end(rpc_registered, spark, tmp_path):
@@ -567,7 +555,11 @@ class _RpcStub:
     """Threaded localhost JSON-RPC stub. Per-slot behaviors:
     FLAKY_SLOT → HTTP 500 on the first getBlock, success after;
     NULL_SLOT → 200 with result:null (absent slot → log-and-skip);
-    MISSING_SLOT → HTTP 404 (deterministic → must fail fast).
+    MISSING_SLOT → HTTP 404 (deterministic → must fail fast);
+    SKIPPED_SLOTS → a JSON-RPC error object with that slot-skipped code;
+    TRANSIENT_SLOTS → a JSON-RPC error object with that code on the
+    first getBlock, success after;
+    FATAL_SLOT → a JSON-RPC error object with an unlisted code.
     getSlot always answers HEAD. Hit counts are recorded server-side
     (the fetches run in Spark's Python workers — separate processes —
     so only the server can observe the true attempt counts)."""
@@ -576,6 +568,9 @@ class _RpcStub:
     FLAKY_SLOT = 103
     NULL_SLOT = 106
     MISSING_SLOT = 777
+    SKIPPED_SLOTS = {111: -32007, 112: -32009}
+    TRANSIENT_SLOTS = {113: -32004, 114: -32005, 115: -32014}
+    FATAL_SLOT = 778
 
     def __init__(self):
         import http.server
@@ -608,6 +603,14 @@ class _RpcStub:
                 if slot == stub.FLAKY_SLOT and nth == 1:
                     self.send_error(500, "transient")
                     return
+                code = stub.SKIPPED_SLOTS.get(slot)
+                if code is None and nth == 1:
+                    code = stub.TRANSIENT_SLOTS.get(slot)
+                if slot == stub.FATAL_SLOT:
+                    code = -32602
+                if code is not None:
+                    return self._reply({"jsonrpc": "2.0", "id": 1, "error": {
+                        "code": code, "message": f"slot {slot}"}})
                 result = (
                     None
                     if slot == stub.NULL_SLOT
@@ -679,6 +682,105 @@ def test_rpc_online_404_fails_fast_over_socket(rpc_registered, spark, rpc_stub):
         ).collect()
     # deterministic 404 → exactly ONE attempt, no backoff retries
     assert rpc_stub.hits[rpc_stub.MISSING_SLOT] == 1
+
+
+def test_rpc_error_objects_skip_retry_or_fail(rpc_registered, spark, rpc_stub):
+    """A JSON-RPC error object skips the slot only for the slot-skipped
+    codes; the not-yet-available codes retry, and any other code fails
+    fast."""
+    got = {r.slot for r in _read_online(spark, rpc_stub, 111, 115).collect()}
+    assert got == set(rpc_stub.TRANSIENT_SLOTS)
+    assert {s: rpc_stub.hits[s] for s in range(111, 116)} == {
+        111: 1, 112: 1, 113: 2, 114: 2, 115: 2
+    }
+    with pytest.raises(Exception, match="-32602"):
+        _read_online(
+            spark, rpc_stub, rpc_stub.FATAL_SLOT, rpc_stub.FATAL_SLOT
+        ).collect()
+    assert rpc_stub.hits[rpc_stub.FATAL_SLOT] == 1
+
+
+def _cli_online(stub, out, *flags):
+    from block_data_fetcher_spark.cli import parse_args, run
+
+    return run(parse_args(
+        ["-s", "100", "-n", "10", "-r", stub.url, "-o", str(out), *flags]
+    ))
+
+
+def test_cli_max_retries_reaches_reader(rpc_registered, rpc_stub, tmp_path):
+    """--max-retries 1 leaves no retry for the flaky slot's HTTP 500."""
+    with pytest.raises(Exception):
+        _cli_online(rpc_stub, tmp_path / "o", "--max-retries", "1",
+                    "--retry-delay", "0")
+    assert rpc_stub.hits[rpc_stub.FLAKY_SLOT] == 1
+
+
+def test_cli_fetches_each_slot_once(rpc_registered, rpc_stub, tmp_path):
+    """One cli.run loads both tables from one getBlock per slot; the
+    default --max-retries retries the flaky slot once."""
+    report = _cli_online(rpc_stub, tmp_path / "o", "--retry-delay", "0")
+    assert {s: rpc_stub.hits[s] for s in range(100, 110)} == {
+        s: 2 if s == rpc_stub.FLAKY_SLOT else 1 for s in range(100, 110)
+    }
+    assert report["blocks_loaded"] == 9  # NULL_SLOT skipped
+    assert report["transactions_loaded"] == 36
+
+
+def _committed_slot(q) -> int:
+    """One past the last slot a finished micro-batch of ``q`` committed
+    (the source's offset arrives as a dict repr)."""
+    import ast
+
+    p = q.lastProgress
+    return ast.literal_eval(p["sources"][0]["endOffset"])["slot"] if p else 0
+
+
+def test_cli_continuous_writes_both_tables(rpc_registered, spark, tmp_path):
+    """An offline --continuous run writes blocks and transactions that
+    agree per committed slot: transaction_count = transaction rows."""
+    import threading
+    import time
+
+    from block_data_fetcher_spark.cli import parse_args, run
+
+    out = str(tmp_path / "c")
+    errors = []
+
+    def main():
+        try:
+            run(parse_args(["-s", "500", "-b", "5", "-o", out, "-c"]))
+        except Exception as e:  # reported by the main thread
+            errors.append(e)
+
+    thread = threading.Thread(target=main, daemon=True)
+    thread.start()
+    deadline = time.time() + 120
+    try:
+        while not spark.streams.active and time.time() < deadline:
+            time.sleep(0.05)
+        (q,) = spark.streams.active
+        while _committed_slot(q) < 510 and time.time() < deadline and not errors:
+            time.sleep(0.05)
+        committed = _committed_slot(q)
+    finally:
+        for active in spark.streams.active:
+            active.stop()
+        thread.join(timeout=60)
+    assert not thread.is_alive() and not errors
+    assert committed >= 510
+    blocks = {
+        r.slot: r.transaction_count
+        for r in spark.read.parquet(f"{out}/blocks").where(F.col("slot") < committed).collect()
+    }
+    txs = {
+        r.block_slot: r["count"]
+        for r in spark.read.parquet(f"{out}/transactions")
+        .where(F.col("block_slot") < committed)
+        .groupBy("block_slot").count().collect()
+    }
+    assert set(blocks) == set(range(500, committed))
+    assert blocks == txs
 
 
 def test_rpc_online_stream_respects_finality_lag(rpc_registered, spark, rpc_stub):
