@@ -12,20 +12,35 @@ NULLs which are filtered — the declarative PERMISSIVE analog of the
 reference's log-and-skip (``extract.rs:63-67``, ST5).
 
 Scale: the flatten is a generator inside the scan stage (no shuffle);
-blocks/transactions/instructions derive from one pass over the raw
-data; classification is a map-literal lookup (zero shuffle). At 100 TB
-the only exchanges are the ones the sinks need (partitioning by
-date/slot-bucket at write).
+classification is a map-literal lookup (zero shuffle). Each table still
+parses the block JSON itself: `parse_blocks` and `_parsed_transactions`
+both run `from_json` over it. At 100 TB the only exchanges are the ones
+the sinks need (partitioning by date/slot-bucket at write).
+
+Staging: a derived column that other columns read (account keys,
+program ids, the first transfer, program types, the type) is projected
+in its own `select` and read by name in the next one. Spark cannot
+share work inside higher-order-function lambdas, so an inlined
+``Column`` would re-run its lambdas at every use; `CollapseProject`
+does not merge a stage into the next when that would duplicate a
+non-cheap expression, so each stage runs once per row.
 """
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .parsers import first_transfer_details
+from .parsers import first_transfer, transfer_details
 from .schema import BLOCK_JSON_SCHEMA, TX_JSON_SCHEMA
-from .transform import classify_transaction, label_transaction
+from .transform import (
+    classify_program_types,
+    label_transaction,
+    name_map,
+    program_types,
+)
 
 
 def normalize_account_keys(keys: Column) -> Column:
@@ -68,74 +83,125 @@ def parse_blocks(raw_blocks: DataFrame) -> DataFrame:
     ).where(F.col("blockhash").isNotNull())
 
 
-def _parsed_transactions(raw_blocks: DataFrame) -> tuple[DataFrame, Column]:
-    """(slot, raw) → ``(block_slot, transaction_index, tx)`` per
-    transaction plus its normalized account keys: the prologue of every
-    tx-level extraction (reference P1, extract.rs:55-71)."""
+def _parsed_transactions(raw_blocks: DataFrame) -> DataFrame:
+    """(slot, raw) → ``(block_slot, transaction_index, tx,
+    account_keys)`` per transaction, ``account_keys`` normalized: the
+    prologue of every tx-level extraction (reference P1,
+    extract.rs:55-71)."""
     b = F.from_json("raw", BLOCK_JSON_SCHEMA)
-    with_tx = raw_blocks.select(
-        F.col("slot").cast("long").alias("block_slot"),
-        F.posexplode(b["transactions"]).alias("transaction_index", "tx_raw"),
-    ).select(
-        "block_slot",
-        "transaction_index",
-        F.from_json("tx_raw", TX_JSON_SCHEMA).alias("tx"),
+    return (
+        raw_blocks.select(
+            F.col("slot").cast("long").alias("block_slot"),
+            F.posexplode(b["transactions"]).alias("transaction_index", "tx_raw"),
+        )
+        .select(
+            "block_slot",
+            "transaction_index",
+            F.from_json("tx_raw", TX_JSON_SCHEMA).alias("tx"),
+        )
+        .select(
+            "*",
+            normalize_account_keys(F.col("tx.message.accountKeys")).alias("account_keys"),
+        )
     )
-    return with_tx, normalize_account_keys(F.col("tx.message.accountKeys"))
 
 
 def extract_transactions(raw_blocks: DataFrame) -> DataFrame:
     """The full tx-level extraction (reference extract.rs:74-163 +
     enrichment transform.rs:252-335): fields, classification, label,
-    first transfer details."""
-    with_tx, keys = _parsed_transactions(raw_blocks)
-    instrs = F.col("tx.message.instructions")
-    pids = extract_program_ids(instrs, keys)
-    details = first_transfer_details(instrs)
+    first transfer details — staged so each is computed once per tx
+    (module docstring)."""
+    ids, typed, classified, out = _transaction_stages(raw_blocks.sparkSession.sparkContext._jvm)
+    staged = (
+        _parsed_transactions(raw_blocks)
+        .select(*ids)
+        .select(*typed)
+        .select(*classified)
+        .select(*out)
+    )
+    # log-and-skip analog: a tx with no signature is unparseable
+    return staged.where(F.col("signature").isNotNull())
 
-    out = with_tx.select(
+
+@functools.lru_cache(maxsize=1)
+def _transaction_stages(jvm) -> tuple[tuple, tuple, tuple, tuple]:
+    """The columns of each :func:`extract_transactions` select stage.
+
+    Building them takes ~3,000 py4j round trips (PySpark records the
+    call site of every Column call): ≈0.5 s on a 4-core host, about as
+    long as extracting 40 blocks of 200 txs. A Column is an unresolved
+    expression, valid on any frame that has the names it reads, so the
+    stages are built once per JVM (``jvm`` is only the cache key) and
+    reused."""
+    instrs = F.col("tx.message.instructions")
+    keys = F.col("account_keys")
+    ids = (
         F.try_element_at(F.col("tx.signatures"), F.lit(1)).alias("signature"),
         "block_slot",
         "transaction_index",
         # success = meta.err IS NULL (extract.rs:79)
         F.col("tx.meta.err").isNull().alias("success"),
         F.coalesce(F.col("tx.meta.fee"), F.lit(0)).alias("fee"),
-        pids.alias("program_ids"),
-        classify_transaction(pids).alias("transaction_type"),
-        label_transaction(pids).alias("transaction_label"),
+        extract_program_ids(instrs, keys).alias("program_ids"),
         F.try_element_at(keys, F.lit(1)).alias("signer"),
         F.size(F.col("tx.message.accountKeys")).cast("int").alias("num_accounts"),
         F.size(instrs).cast("int").alias("num_instructions"),
-        details["amount"].alias("amount"),
-        details["token"].alias("token"),
-        details["from_address"].alias("from_address"),
-        details["to_address"].alias("to_address"),
+        first_transfer(instrs).alias("transfer"),
     )
-    # log-and-skip analog: a tx with no signature is unparseable
-    return out.where(F.col("signature").isNotNull())
+    typed = (
+        "*",
+        program_types(F.col("program_ids")).alias("program_types"),
+        transfer_details(F.col("transfer")).alias("details"),
+    )
+    classified = (
+        "*",
+        classify_program_types(F.col("program_ids"), F.col("program_types")).alias(
+            "transaction_type"
+        ),
+    )
+    out = (
+        "signature",
+        "block_slot",
+        "transaction_index",
+        "success",
+        "fee",
+        "program_ids",
+        "transaction_type",
+        label_transaction(F.col("program_ids"), F.col("transaction_type")).alias(
+            "transaction_label"
+        ),
+        "signer",
+        "num_accounts",
+        "num_instructions",
+        F.col("details.amount").alias("amount"),
+        F.col("details.token").alias("token"),
+        F.col("details.from_address").alias("from_address"),
+        F.col("details.to_address").alias("to_address"),
+    )
+    return ids, typed, classified, out
 
 
 def extract_instructions(raw_blocks: DataFrame) -> DataFrame:
     """tx → one row per instruction (reference models.rs:36-43;
     instructions explode to their own table, SURVEY §1.1)."""
-    with_tx, keys = _parsed_transactions(raw_blocks)
-    exploded = with_tx.select(
+    exploded = _parsed_transactions(raw_blocks).select(
         F.try_element_at(F.col("tx.signatures"), F.lit(1)).alias("transaction_signature"),
-        keys.alias("account_keys"),
+        "account_keys",
         F.posexplode(F.col("tx.message.instructions")).alias("instruction_index", "instr"),
     )
-    pid = F.coalesce(
-        F.col("instr.programId"),
-        F.col("instr.program"),
-        F.try_element_at(F.col("account_keys"), F.col("instr.programIdIndex") + 1),
+    with_pid = exploded.select(
+        "*",
+        F.coalesce(
+            F.col("instr.programId"),
+            F.col("instr.program"),
+            F.try_element_at(F.col("account_keys"), F.col("instr.programIdIndex") + 1),
+        ).alias("program_id"),
     )
-    from .transform import name_map
-
-    return exploded.select(
+    return with_pid.select(
         "transaction_signature",
         "instruction_index",
-        pid.alias("program_id"),
-        F.element_at(name_map(), pid).alias("program_name"),
+        "program_id",
+        F.element_at(name_map(), F.col("program_id")).alias("program_name"),
         F.col("instr.parsed.type").alias("instruction_type"),
         F.col("instr.accounts").alias("accounts"),
     ).where(F.col("transaction_signature").isNotNull())
@@ -157,10 +223,9 @@ def account_activity(raw_blocks: DataFrame) -> DataFrame:
     Scale: explode is a generator in the scan stage; the rollup is one
     hash aggregate on address with map-side partials — state is
     O(|addresses|), the same bound as the reference's table."""
-    with_tx, keys = _parsed_transactions(raw_blocks)
-    exploded = with_tx.select(
+    exploded = _parsed_transactions(raw_blocks).select(
         "block_slot",
-        F.posexplode(keys).alias("key_index", "address"),
+        F.posexplode("account_keys").alias("key_index", "address"),
     ).where(F.col("address").isNotNull())
     return exploded.groupBy("address").agg(
         F.min("block_slot").alias("first_seen_slot"),

@@ -24,7 +24,7 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.windows import last_wins
@@ -64,6 +64,25 @@ def _read_batch_marker(path: str) -> int | None:
     return None
 
 
+def _write_swap(df: DataFrame, path: str, batch_id: int | None) -> int:
+    """Write ``df`` to a temp dir beside ``path``, then swap it in with
+    :func:`_atomic_swap`. A ``batch_id`` is written as the
+    ``_last_batch_id`` marker inside the temp dir, so it commits with
+    the data. Returns the rows written, counted by an ``Observation``
+    on the write job itself rather than by reading the table back."""
+    parent = os.path.dirname(path) or "."
+    os.makedirs(parent, exist_ok=True)
+    tmp = tempfile.mkdtemp(prefix="swap_", dir=parent)
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(tmp)
+    n = obs.get["rows"]
+    if batch_id is not None:
+        with open(os.path.join(tmp, _BATCH_MARKER), "w") as fh:
+            fh.write(str(batch_id))
+    _atomic_swap(path, tmp)
+    return n
+
+
 def upsert_parquet(
     spark: SparkSession,
     incoming: DataFrame,
@@ -83,14 +102,7 @@ def upsert_parquet(
         merged = existing.unionByName(incoming)
     else:
         merged = incoming
-    deduped = last_wins(merged, keys, order)
-
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix="upsert_", dir=os.path.dirname(path) or ".")
-    deduped.write.mode("overwrite").parquet(tmp)
-    n = spark.read.parquet(tmp).count()
-    _atomic_swap(path, tmp)
-    return n
+    return _write_swap(last_wins(merged, keys, order), path, None)
 
 
 def load_blocks(raw: DataFrame, out: str) -> tuple[int, int]:
@@ -158,15 +170,7 @@ def merge_aggregate(
     rolled = merged.groupBy(*keys).agg(
         *[F.sum(c).alias(c) for c in value_cols]
     )
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix="mergeagg_", dir=os.path.dirname(path) or ".")
-    rolled.write.mode("overwrite").parquet(tmp)
-    n = spark.read.parquet(tmp).count()
-    if batch_id is not None:
-        with open(os.path.join(tmp, _BATCH_MARKER), "w") as fh:
-            fh.write(str(batch_id))
-    _atomic_swap(path, tmp)
-    return n
+    return _write_swap(rolled, path, batch_id)
 
 
 def stream_upsert(

@@ -68,21 +68,25 @@ def parse_token_transfer(instr: Column) -> Column:
     )
 
 
-def first_transfer_details(instructions: Column) -> Column:
-    """First system- or token-transfer across a tx's instructions wins
-    (reference transform.rs:307-331 break-on-first-match): a struct
-    (amount, token, from_address, to_address) or NULL.
+def first_transfer(instructions: Column) -> Column:
+    """The first system- or token-transfer instruction of a tx, or NULL
+    (reference transform.rs:307-331 break-on-first-match).
 
     `element_at(filter(...), 1)` — the set-oriented restatement of the
     reference's imperative scan-and-break loop (P12).
     """
-    first = F.try_element_at(
+    return F.try_element_at(
         F.filter(
             instructions,
             lambda i: is_system_transfer(i) | is_token_transfer(i),
         ),
         F.lit(1),
     )
+
+
+def transfer_details(first: Column) -> Column:
+    """The :func:`first_transfer` instruction as a struct (amount,
+    token, from_address, to_address), or NULL."""
     sys_d = parse_system_transfer(first)
     tok_d = parse_token_transfer(first)
     return F.when(

@@ -46,9 +46,11 @@ TX_JSON_SCHEMA = """
 """
 
 # getBlock response (one block): header fields + raw transactions.
-# transactions kept as array<string> (raw JSON per tx) so the tx-level
-# parse is a single from_json after explode — one parse per tx, not
-# one parse of a giant blob per block.
+# transactions kept as array<string> (raw JSON per tx): the block parse
+# only splits the blob into per-tx strings, and each tx is parsed with
+# TX_JSON_SCHEMA after the explode. The blob is still read in full once
+# per table: `parse_blocks` and `extract._parsed_transactions` each run
+# from_json over it.
 BLOCK_JSON_SCHEMA = """
     blockhash string,
     previousBlockhash string,

@@ -56,7 +56,13 @@ def program_types(program_ids: Column) -> Column:
 def classify_transaction(program_ids: Column) -> Column:
     """The priority rule chain over a tx's (distinct) program ids
     (transform.rs:82-114). Input: array<string> of program ids."""
-    types = program_types(program_ids)
+    return classify_program_types(program_ids, program_types(program_ids))
+
+
+def classify_program_types(program_ids: Column, types: Column) -> Column:
+    """:func:`classify_transaction` over already-resolved ``types``
+    (``program_types(program_ids)``), so a caller that projects the
+    types as a column resolves them once, not once per rule."""
     has = lambda t: F.array_contains(types, t)  # noqa: E731
     return (
         F.when(has("DEX"), DEX_SWAP)
@@ -71,20 +77,20 @@ def classify_transaction(program_ids: Column) -> Column:
     )
 
 
-def label_transaction(program_ids: Column) -> Column:
+def label_transaction(program_ids: Column, transaction_type: Column) -> Column:
     """Human-readable label `"{type} ({known names, comma-joined})"`
-    (transform.rs:160-203); unknown ids dropped; bare type when no
-    known names."""
+    (transform.rs:160-203) from the tx's program ids and its computed
+    ``transaction_type``; unknown ids dropped; bare type when no known
+    names."""
     m = name_map()
     names = F.filter(
         F.transform(program_ids, lambda pid: F.element_at(m, pid)),
         lambda n: n.isNotNull(),
     )
-    ttype = classify_transaction(program_ids)
     return F.when(
         F.size(names) > 0,
-        F.concat(ttype, F.lit(" ("), F.concat_ws(", ", names), F.lit(")")),
-    ).otherwise(ttype)
+        F.concat(transaction_type, F.lit(" ("), F.concat_ws(", ", names), F.lit(")")),
+    ).otherwise(transaction_type)
 
 
 def registry_df(spark) -> DataFrame:

@@ -837,15 +837,22 @@ def compact_table(
     (manifest-style metadata listing), and the rewrite uses
     ``coalesce`` — a shuffle-FREE merge of input splits into fewer
     tasks — so compaction cost is one read + one write, no exchange.
-    At 100 TB this runs per partition (each day compacts
-    independently, preserving partition pruning); here the single-dir
-    case keeps the plan inspectable. Returns (files_before,
-    files_after)."""
+    ``coalesce`` cannot add tasks, and the reader packs small files
+    into about one split per core, so the files are dealt into
+    ``n_out`` groups and each group is read on its own: the union has
+    at least ``n_out`` splits, whatever the core count. A table is
+    never compacted into more files than it has. At 100 TB this runs
+    per partition (each day compacts independently, preserving
+    partition pruning); here the single-dir case keeps the plan
+    inspectable. Returns (files_before, files_after)."""
+    from functools import reduce
+
     files = list_data_files(src)
     total = sum(sz for _, sz in files)
-    n_out = max(1, -(-total // target_bytes))  # ceil div
-    df = spark.read.parquet(src)
-    df.coalesce(int(n_out)).write.mode("overwrite").parquet(dst)
+    n_out = min(len(files), max(1, -(-total // target_bytes)))  # ceil div
+    reader = spark.read.schema(spark.read.parquet(src).schema).option("basePath", src)
+    groups = [reader.parquet(*[f for f, _ in files[i::n_out]]) for i in range(n_out)]
+    reduce(DataFrame.unionByName, groups).coalesce(n_out).write.mode("overwrite").parquet(dst)
     return len(files), len(list_data_files(dst))
 
 
