@@ -31,10 +31,21 @@ from ..operators.windows import last_wins
 from .extract import extract_transactions, parse_blocks
 
 
-def _exists(spark: SparkSession, path: str) -> bool:
+def _exists(path: str) -> bool:
     return os.path.exists(path) and any(
         f.endswith(".parquet") for f in os.listdir(path)
     )
+
+
+def _restore_aside(path: str) -> None:
+    """Undo a swap that crashed between its two renames: the live
+    table is then missing and its last committed copy sits at
+    `path.old`. Moving it back before `path` is read keeps the next
+    load from treating the table as empty (and its swap from deleting
+    `path.old`, the only copy of every loaded row)."""
+    old = path + ".old"
+    if not os.path.exists(path) and os.path.exists(old):
+        os.replace(old, path)
 
 
 def _atomic_swap(path: str, tmp: str) -> None:
@@ -43,6 +54,8 @@ def _atomic_swap(path: str, tmp: str) -> None:
     aside copy. A crash at any point leaves either the old table at
     `path` or at `path.old` plus the complete new one at `tmp` — never
     a window with NO copy, which the naive rmtree-then-replace had.
+    Readers of the table call :func:`_restore_aside` first, which
+    moves `path.old` back when `path` is missing.
     (On a real object store this is the same two-phase commit a
     Delta/Iceberg snapshot swap gives you for free.)"""
     old = path + ".old"
@@ -73,12 +86,16 @@ def _write_swap(df: DataFrame, path: str, batch_id: int | None) -> int:
     parent = os.path.dirname(path) or "."
     os.makedirs(parent, exist_ok=True)
     tmp = tempfile.mkdtemp(prefix="swap_", dir=parent)
-    obs = Observation()
-    df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(tmp)
-    n = obs.get["rows"]
-    if batch_id is not None:
-        with open(os.path.join(tmp, _BATCH_MARKER), "w") as fh:
-            fh.write(str(batch_id))
+    try:
+        obs = Observation()
+        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(tmp)
+        n = obs.get["rows"]
+        if batch_id is not None:
+            with open(os.path.join(tmp, _BATCH_MARKER), "w") as fh:
+                fh.write(str(batch_id))
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
     _atomic_swap(path, tmp)
     return n
 
@@ -97,7 +114,8 @@ def upsert_parquet(
     Returns the post-upsert row count. The write is
     write-temp-then-swap: readers see the old or the new table, never
     a partial one (the batch-atomicity analog of load.rs:161-287)."""
-    if _exists(spark, path):
+    _restore_aside(path)
+    if _exists(path):
         existing = spark.read.parquet(path)
         merged = existing.unionByName(incoming)
     else:
@@ -158,11 +176,12 @@ def merge_aggregate(
     ``batch_id <= stored`` is skipped: the standard foreachBatch
     idempotence pattern. At 100 TB the stored side is |keys| rows,
     not |events| — the merge cost is bounded by key cardinality."""
+    _restore_aside(path)
     if batch_id is not None and os.path.exists(path):
         stored = _read_batch_marker(path)
         if stored is not None and batch_id <= stored:
             return spark.read.parquet(path).count()
-    if _exists(spark, path):
+    if _exists(path):
         merged = spark.read.parquet(path).unionByName(partials)
     else:
         merged = partials

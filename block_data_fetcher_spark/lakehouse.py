@@ -1,28 +1,12 @@
-"""Pluggable lakehouse table interface (VERDICT r9 stretch item 8).
+"""Versioned parquet table: snapshot-per-commit manifests.
 
 The catalog's time-travel / vacuum / compaction / CDC queries
 (`storage.py`, `operators/analytics.py`) demonstrate the SEMANTICS from
 parquet primitives — manifests, copy-on-write bucket reuse,
-exclusive-file vacuum — and stay the oracle-checked default. This
-module puts the same capability surface behind one interface so a
-deployment with a real table format drops in Delta Lake without
-touching pipeline code:
-
-* :class:`ParquetManifestTable` — self-contained snapshot-per-commit
-  manifests over plain parquet (no extra packages; the engine's
-  default posture, same building blocks as ``q_time_travel``).
-* :class:`DeltaTableAdapter` — the identical interface over
-  ``delta-spark``, import-gated exactly like the live-RPC soak: this
-  container does not ship the package, so the adapter raises a clear
-  error on construction and its parity tests skip; on a cluster with
-  Delta on the classpath the same tests run against both
-  implementations.
-* :class:`IcebergTableAdapter` — the identical interface over Apache
-  Iceberg (classpath-gated the same way), proving the interface isn't
-  shaped around one engine: Delta needed a timestamp-horizon
-  translation for count-based expiry, Iceberg has it natively
-  (``retain_last``) but needs a private version→snapshot-id map
-  because its snapshot ids carry no commit order.
+exclusive-file vacuum. :class:`ParquetManifestTable` puts that
+capability surface behind one small class with no extra packages (same
+building blocks as ``q_time_travel``): commit, versioned read, expire
+and a row-level change feed.
 
 Scale posture: commits are metadata-plus-new-files (never rewrite
 history), reads of old versions are manifest lookups, ``expire`` only
@@ -37,40 +21,112 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from abc import ABC, abstractmethod
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-class LakehouseTable(ABC):
-    """A versioned table: every commit is a new readable snapshot."""
+class ParquetManifestTable:
+    """Snapshot-per-commit manifests over plain parquet.
 
-    @abstractmethod
+    Layout: ``base/v{n}/part-*.parquet`` + ``base/_manifest.json``
+    mapping version → relative file list. Commits never touch prior
+    versions' files; a future COW writer may list another version's
+    files in its manifest (the ``q_time_travel`` bucket-reuse shape),
+    which is why :meth:`expire` computes reference counts instead of
+    deleting version directories blindly."""
+
+    def __init__(self, spark: SparkSession, base: str):
+        self.spark = spark
+        self.base = base
+        os.makedirs(base, exist_ok=True)
+
+    # -- manifest ----------------------------------------------------
+    @property
+    def _manifest_path(self) -> str:
+        return os.path.join(self.base, "_manifest.json")
+
+    def _manifest(self) -> dict[str, list[str]]:
+        try:
+            with open(self._manifest_path) as f:
+                return json.load(f)
+        except OSError:
+            return {}
+
+    def _write_manifest(self, m: dict[str, list[str]]) -> None:
+        # atomic swap — a reader never sees a torn manifest
+        tmp = self._manifest_path + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(m, f, indent=1, sort_keys=True)
+        os.replace(tmp, self._manifest_path)
+
+    # -- snapshots ---------------------------------------------------
     def commit(self, df: DataFrame) -> int:
         """Write ``df`` as the next snapshot; returns its version."""
+        m = self._manifest()
+        version = max((int(v) for v in m), default=0) + 1
+        vdir = os.path.join(self.base, f"v{version}")
+        df.write.mode("overwrite").parquet(vdir)
+        files = sorted(
+            os.path.join(f"v{version}", f)
+            for f in os.listdir(vdir)
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        )
+        m[str(version)] = files
+        self._write_manifest(m)
+        return version
 
-    @abstractmethod
     def read(self, version: int | None = None) -> DataFrame:
         """Snapshot scan; latest when ``version`` is None."""
+        m = self._manifest()
+        if not m:
+            raise FileNotFoundError(f"no snapshots under {self.base}")
+        v = str(version if version is not None else max(int(k) for k in m))
+        if v not in m:
+            raise KeyError(f"version {v} expired or never committed")
+        return self.spark.read.parquet(
+            *[os.path.join(self.base, f) for f in m[v]]
+        )
 
-    @abstractmethod
     def versions(self) -> list[int]:
         """Live snapshot versions, ascending."""
+        return sorted(int(v) for v in self._manifest())
 
-    @abstractmethod
     def expire(self, keep: int) -> int:
         """Drop all but the newest ``keep`` snapshots, deleting only
         files referenced EXCLUSIVELY by expired ones (the invariant
         real VACUUMs get wrong first). Returns files reclaimed."""
+        m = self._manifest()
+        live = sorted((int(v) for v in m), reverse=True)[:keep]
+        keep_files = {f for v in live for f in m[str(v)]}
+        dead_files = {
+            f for v, fl in m.items() if int(v) not in live for f in fl
+        }
+        reclaimed = 0
+        for f in sorted(dead_files - keep_files):
+            target = os.path.join(self.base, f)
+            if os.path.isdir(target):
+                shutil.rmtree(target, ignore_errors=True)
+            else:
+                try:
+                    os.remove(target)
+                except OSError:
+                    continue
+            reclaimed += 1
+        self._write_manifest({str(v): m[str(v)] for v in sorted(live)})
+        # drop now-empty version dirs
+        for d in os.listdir(self.base):
+            p = os.path.join(self.base, d)
+            if d.startswith("v") and os.path.isdir(p) and not os.listdir(p):
+                os.rmdir(p)
+        return reclaimed
 
     def changes(
         self, key_cols: Sequence[str], v_from: int, v_to: int
     ) -> DataFrame:
         """Row-level CDC between two snapshots: (op ∈ insert | delete |
-        update_postimage, *row) — computed the same way for every
-        implementation, from two snapshot reads and a full-row
+        update_postimage, *row), from two snapshot reads and a full-row
         comparison keyed on ``key_cols``. At scale both sides hash-join
         on the key; only differing rows survive."""
         old, new = self.read(v_from), self.read(v_to)
@@ -108,385 +164,3 @@ class LakehouseTable(ABC):
             .where(F.col("op").isNotNull())
             .select("op", *[F.col(f"_row.{c}").alias(c) for c in cols])
         )
-
-
-class ParquetManifestTable(LakehouseTable):
-    """Snapshot-per-commit manifests over plain parquet.
-
-    Layout: ``base/v{n}/part-*.parquet`` + ``base/_manifest.json``
-    mapping version → relative file list. Commits never touch prior
-    versions' files; a future COW writer may list another version's
-    files in its manifest (the ``q_time_travel`` bucket-reuse shape),
-    which is why :meth:`expire` computes reference counts instead of
-    deleting version directories blindly."""
-
-    def __init__(self, spark: SparkSession, base: str):
-        self.spark = spark
-        self.base = base
-        os.makedirs(base, exist_ok=True)
-
-    # -- manifest ----------------------------------------------------
-    @property
-    def _manifest_path(self) -> str:
-        return os.path.join(self.base, "_manifest.json")
-
-    def _manifest(self) -> dict[str, list[str]]:
-        try:
-            with open(self._manifest_path) as f:
-                return json.load(f)
-        except OSError:
-            return {}
-
-    def _write_manifest(self, m: dict[str, list[str]]) -> None:
-        # atomic swap — a reader never sees a torn manifest
-        tmp = self._manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f, indent=1, sort_keys=True)
-        os.replace(tmp, self._manifest_path)
-
-    # -- interface ---------------------------------------------------
-    def commit(self, df: DataFrame) -> int:
-        m = self._manifest()
-        version = max((int(v) for v in m), default=0) + 1
-        vdir = os.path.join(self.base, f"v{version}")
-        df.write.mode("overwrite").parquet(vdir)
-        files = sorted(
-            os.path.join(f"v{version}", f)
-            for f in os.listdir(vdir)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-        m[str(version)] = files
-        self._write_manifest(m)
-        return version
-
-    def read(self, version: int | None = None) -> DataFrame:
-        m = self._manifest()
-        if not m:
-            raise FileNotFoundError(f"no snapshots under {self.base}")
-        v = str(version if version is not None else max(int(k) for k in m))
-        if v not in m:
-            raise KeyError(f"version {v} expired or never committed")
-        return self.spark.read.parquet(
-            *[os.path.join(self.base, f) for f in m[v]]
-        )
-
-    def versions(self) -> list[int]:
-        return sorted(int(v) for v in self._manifest())
-
-    def expire(self, keep: int) -> int:
-        m = self._manifest()
-        live = sorted((int(v) for v in m), reverse=True)[:keep]
-        keep_files = {f for v in live for f in m[str(v)]}
-        dead_files = {
-            f for v, fl in m.items() if int(v) not in live for f in fl
-        }
-        reclaimed = 0
-        for f in sorted(dead_files - keep_files):
-            target = os.path.join(self.base, f)
-            if os.path.isdir(target):
-                shutil.rmtree(target, ignore_errors=True)
-            else:
-                try:
-                    os.remove(target)
-                except OSError:
-                    continue
-            reclaimed += 1
-        self._write_manifest({str(v): m[str(v)] for v in sorted(live)})
-        # drop now-empty version dirs
-        for d in os.listdir(self.base):
-            p = os.path.join(self.base, d)
-            if d.startswith("v") and os.path.isdir(p) and not os.listdir(p):
-                os.rmdir(p)
-        return reclaimed
-
-
-class DeltaTableAdapter(LakehouseTable):
-    """The same interface over Delta Lake. Import-gated: constructing
-    it without ``delta-spark`` on the classpath raises immediately
-    with the dependency named (this sandbox does not ship it; the
-    parity tests skip). ``cite: Delta Lake OSS (delta.io) public
-    API — DeltaTable.history/vacuum, versionAsOf reads.``"""
-
-    def __init__(self, spark: SparkSession, base: str):
-        try:
-            from delta.tables import DeltaTable  # noqa: F401
-        except ImportError as e:  # pragma: no cover — not in sandbox
-            raise RuntimeError(
-                "DeltaTableAdapter needs the delta-spark package "
-                "(pip install delta-spark, plus the spark-submit "
-                "--packages io.delta:delta-spark jars)"
-            ) from e
-        self.spark = spark
-        self.base = base
-
-    # pragma: no cover on every method — exercised only where Delta is
-    # installed; the parity test (tests/test_lakehouse.py) runs them
-    # verbatim there.
-
-    # Expiry floor marker: Delta's history() keeps listing vacuumed-out
-    # versions (the log shrinks on its own logRetention schedule, not
-    # on vacuum), so the LakehouseTable contract — versions() lists
-    # only still-READABLE snapshots — needs implementation-private
-    # metadata, exactly like ParquetManifestTable's _manifest.json.
-    @property
-    def _floor_path(self) -> str:  # pragma: no cover
-        return os.path.join(self.base, "_bdf_expire_floor.json")
-
-    def _floor(self) -> int:  # pragma: no cover
-        try:
-            with open(self._floor_path) as f:
-                return int(json.load(f)["floor"])
-        except (OSError, ValueError, KeyError):
-            return 0
-
-    def _write_floor(self, v: int) -> None:  # pragma: no cover
-        tmp = self._floor_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"floor": v}, f)
-        os.replace(tmp, self._floor_path)
-
-    def commit(self, df: DataFrame) -> int:  # pragma: no cover
-        df.write.format("delta").mode("overwrite").option(
-            "overwriteSchema", "true"
-        ).save(self.base)
-        return self.versions()[-1]
-
-    def read(self, version: int | None = None) -> DataFrame:  # pragma: no cover
-        if version is not None and version not in self.versions():
-            # expired snapshots raise the SAME error class as the
-            # parquet impl — a versionAsOf read below the vacuum floor
-            # would otherwise fail deep in the scan (or, worse, succeed
-            # against partially-deleted files)
-            raise KeyError(f"version {version} expired or never committed")
-        r = self.spark.read.format("delta")
-        if version is not None:
-            r = r.option("versionAsOf", version)
-        return r.load(self.base)
-
-    def versions(self) -> list[int]:  # pragma: no cover
-        from delta.tables import DeltaTable
-
-        hist = DeltaTable.forPath(self.spark, self.base).history()
-        floor = self._floor()
-        return sorted(
-            r["version"]
-            for r in hist.select("version").collect()
-            if r["version"] >= floor
-        )
-
-    def expire(self, keep: int) -> int:  # pragma: no cover
-        """Count-based expiry over Delta's duration-based vacuum
-        (ADVICE r10 medium: ``vacuum(0)`` deleted every file outside
-        the LATEST snapshot, breaking time travel for KEPT versions).
-
-        The retention horizon is derived from commit timestamps: a
-        data file is deleted by ``vacuum(h)`` only if its tombstone
-        (the commit that removed it from the snapshot) is older than
-        ``now - h``. Files referenced EXCLUSIVELY by expired versions
-        are tombstoned AT OR BEFORE the oldest-kept (floor) commit;
-        files a KEPT version still needs are tombstoned by LATER kept
-        commits — so the cutoff sits strictly between the floor
-        commit's timestamp and the next kept commit's. When the two
-        share a timestamp (same-millisecond commits), the cutoff
-        degrades to the floor timestamp itself: boundary tombstones
-        then survive, erring on the keep side of the contract."""
-        import datetime
-
-        from delta.tables import DeltaTable
-
-        dt = DeltaTable.forPath(self.spark, self.base)
-        vs = self.versions()
-        if keep <= 0 or len(vs) <= keep:
-            return 0
-        idx = len(vs) - keep
-        floor_version = vs[idx]
-        ts = {
-            r["version"]: r["timestamp"]
-            for r in dt.history().select("version", "timestamp").collect()
-        }
-        floor_ts = ts[floor_version]
-        if floor_ts.tzinfo is None:
-            now = datetime.datetime.now()
-        else:  # pyspark returns tz-aware under spark.sql.session.timeZone
-            now = datetime.datetime.now(tz=floor_ts.tzinfo)
-        if keep == 1:
-            # keep == latest only: every tombstone belongs to an
-            # expired version — horizon 0 IS the contract here (the
-            # r10 bug was applying it to every keep).
-            cutoff = now
-        else:
-            nxt_ts = ts[vs[idx + 1]]
-            cutoff = (
-                floor_ts + (nxt_ts - floor_ts) / 2
-                if nxt_ts > floor_ts
-                else floor_ts
-            )
-        hours = max(0.0, (now - cutoff).total_seconds() / 3600.0)
-
-        # Short horizons trip Delta's safety check; disable it for the
-        # vacuum ONLY and restore the caller's conf (the r10 adapter
-        # leaked enabled=false into the shared session permanently).
-        key = "spark.databricks.delta.retentionDurationCheck.enabled"
-        try:
-            prev = self.spark.conf.get(key)
-        except Exception:
-            prev = None
-        self.spark.conf.set(key, "false")
-        try:
-            # DRY RUN enumerates the files the real vacuum will delete
-            # (OSS caps the returned list at 1000 paths — the count is
-            # a floor at pathological fan-out, never an over-report).
-            reclaimed = self.spark.sql(
-                f"VACUUM delta.`{self.base}` RETAIN {hours} HOURS DRY RUN"
-            ).count()
-            dt.vacuum(hours)
-        finally:
-            if prev is None:
-                self.spark.conf.unset(key)
-            else:
-                self.spark.conf.set(key, prev)
-        self._write_floor(floor_version)
-        return reclaimed
-
-
-class IcebergTableAdapter(LakehouseTable):
-    """The same interface over Apache Iceberg (classpath-gated like
-    :class:`DeltaTableAdapter`; this sandbox ships neither runtime).
-    ``cite: Apache Iceberg public API — SparkCatalog (hadoop type),
-    VERSION AS OF snapshot reads, snapshots metadata table,
-    system.expire_snapshots procedure.``
-
-    Mapping the contract onto Iceberg's model:
-
-    * **commit** — ``writeTo(...).createOrReplace()`` under a
-      hadoop-type SparkCatalog whose warehouse is ``base``; each commit
-      is one new snapshot.
-    * **versions** — Iceberg snapshot ids are random longs (no commit
-      ordering), so the adapter keeps its own monotonically-increasing
-      version → snapshot-id map in a side manifest, the SAME
-      private-metadata pattern as :class:`ParquetManifestTable` and
-      the Delta floor marker. ``versions()`` intersects the map with
-      the live ``.snapshots`` metadata table, so expired snapshots
-      drop out exactly when Iceberg forgets them.
-    * **read(v)** — ``VERSION AS OF <snapshot-id>``; expired or
-      unknown versions raise ``KeyError`` like the other impls.
-    * **expire(keep)** — the ``system.expire_snapshots`` procedure
-      with ``retain_last => keep, older_than => now``: count-based
-      retention is NATIVE here (no timestamp-horizon translation like
-      Delta needs); the procedure's result row reports the deleted
-      data-file count, which is the return value.
-    """
-
-    CATALOG = "bdf_iceberg"
-
-    def __init__(self, spark: SparkSession, base: str):
-        try:
-            spark.sparkContext._jvm.java.lang.Class.forName(
-                "org.apache.iceberg.spark.SparkCatalog"
-            )
-        except Exception as e:  # pragma: no cover — not in sandbox
-            raise RuntimeError(
-                "IcebergTableAdapter needs the iceberg-spark-runtime "
-                "jar on the classpath (spark-submit --packages "
-                "org.apache.iceberg:iceberg-spark-runtime-...)"
-            ) from e
-        self.spark = spark
-        self.base = base
-        os.makedirs(base, exist_ok=True)
-        # hadoop-type catalog rooted at base; runtime-settable, and
-        # idempotent re-set for a second adapter over the same base
-        spark.conf.set(
-            f"spark.sql.catalog.{self.CATALOG}",
-            "org.apache.iceberg.spark.SparkCatalog",
-        )
-        spark.conf.set(f"spark.sql.catalog.{self.CATALOG}.type", "hadoop")
-        spark.conf.set(f"spark.sql.catalog.{self.CATALOG}.warehouse", base)
-
-    # pragma: no cover on every method below — exercised only where
-    # the Iceberg runtime is installed; the parity tests run them
-    # verbatim there.
-    @property
-    def _ident(self) -> str:  # pragma: no cover
-        return f"{self.CATALOG}.db.t"
-
-    @property
-    def _map_path(self) -> str:  # pragma: no cover
-        return os.path.join(self.base, "_bdf_versions.json")
-
-    def _vmap(self) -> dict[str, int]:  # pragma: no cover
-        try:
-            with open(self._map_path) as f:
-                return {k: int(v) for k, v in json.load(f).items()}
-        except (OSError, ValueError):
-            return {}
-
-    def _write_vmap(self, m: dict[str, int]) -> None:  # pragma: no cover
-        tmp = self._map_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f, indent=1, sort_keys=True)
-        os.replace(tmp, self._map_path)
-
-    def _live_snapshot_ids(self) -> set[int]:  # pragma: no cover
-        return {
-            r["snapshot_id"]
-            for r in self.spark.sql(
-                f"SELECT snapshot_id FROM {self._ident}.snapshots"
-            ).collect()
-        }
-
-    def commit(self, df: DataFrame) -> int:  # pragma: no cover
-        df.writeTo(self._ident).createOrReplace()
-        snap = self.spark.sql(
-            f"SELECT snapshot_id FROM {self._ident}.snapshots "
-            "ORDER BY committed_at DESC, snapshot_id LIMIT 1"
-        ).collect()[0]["snapshot_id"]
-        m = self._vmap()
-        version = max((int(v) for v in m), default=0) + 1
-        m[str(version)] = snap
-        self._write_vmap(m)
-        return version
-
-    def read(self, version: int | None = None) -> DataFrame:  # pragma: no cover
-        if version is None:
-            return self.spark.read.table(self._ident)
-        m = self._vmap()
-        snap = m.get(str(version))
-        if snap is None or snap not in self._live_snapshot_ids():
-            raise KeyError(f"version {version} expired or never committed")
-        return self.spark.sql(
-            f"SELECT * FROM {self._ident} VERSION AS OF {snap}"
-        )
-
-    def versions(self) -> list[int]:  # pragma: no cover
-        live = self._live_snapshot_ids()
-        return sorted(
-            int(v) for v, snap in self._vmap().items() if snap in live
-        )
-
-    def expire(self, keep: int) -> int:  # pragma: no cover
-        vs = self.versions()
-        if keep <= 0 or len(vs) <= keep:
-            return 0
-        row = self.spark.sql(
-            f"CALL {self.CATALOG}.system.expire_snapshots("
-            f"table => 'db.t', "
-            f"older_than => TIMESTAMP '9999-01-01 00:00:00', "
-            f"retain_last => {keep})"
-        ).collect()[0]
-        return int(row["deleted_data_files_count"])
-
-
-def open_table(
-    spark: SparkSession, base: str, impl: str | None = None
-) -> LakehouseTable:
-    """Factory: ``impl`` = "parquet" (default) | "delta" | "iceberg",
-    overridable via ``BDF_LAKEHOUSE_IMPL`` — the env gate mirrors the
-    RPC soak's."""
-    choice = (impl or os.environ.get("BDF_LAKEHOUSE_IMPL") or "parquet").lower()
-    if choice == "delta":
-        return DeltaTableAdapter(spark, base)
-    if choice == "iceberg":
-        return IcebergTableAdapter(spark, base)
-    if choice == "parquet":
-        return ParquetManifestTable(spark, base)
-    raise ValueError(f"unknown lakehouse impl {choice!r}")

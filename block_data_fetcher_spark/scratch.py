@@ -81,7 +81,7 @@ _NOTED_SF_DIR: str | None = None
 # run-keyed scratch fix exists to prevent). The decision is computed
 # once per (fixture dir, fixture bytes) and cached; fixture sizes are
 # cached per dir (the walk is cheap at fixture scale but runs on every
-# get_spark/scratch_base call otherwise).
+# scratch_base call otherwise).
 _FIXTURE_BYTES_CACHE: dict[str, int] = {}
 _BASE_DECISION: dict[tuple[str, int], str] = {}
 
@@ -96,16 +96,15 @@ def note_fixture_dir(sf_dir: str | None) -> None:
 def _fixture_dir() -> str:
     """The active fixture dir: the last noted per-call sf_dir wins;
     the env var (with its small default) is only the fallback for
-    paths that run before any query has been built (sweep_stale,
-    session construction in bench/tests — both set the env var)."""
+    paths that run before any query has been built (sweep_stale)."""
     return _NOTED_SF_DIR or os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
     )
 
 
 def _fixture_bytes() -> int:
-    """Total parquet bytes under the active fixture dir (same sizing
-    source as session._initial_shuffle_partitions). Cached per dir."""
+    """Total parquet bytes under the active fixture dir. Cached per
+    dir."""
     sf_dir = _fixture_dir()
     cached = _FIXTURE_BYTES_CACHE.get(sf_dir)
     if cached is not None:

@@ -9,8 +9,10 @@ set on a 1000-executor cluster against ~100 TB:
   engines (the DuckDB oracle reads the same parquet files).
 - Arrow enabled — any Pandas-UDF path (multimodal decode) is
   Arrow-batched, never row-at-a-time pickling.
-- shuffle partitions sized to cores locally; on a real cluster AQE
-  coalesces from a deliberately high initial number instead.
+- shuffle partitions and AQE's initial shuffle partition count sized
+  to the host's cores (``SPARK_GRAFT_CPUS``). The session reads nothing
+  about the data it will process; ``spark.local.dir`` is left to
+  ``SPARK_LOCAL_DIRS`` or Spark's default.
 """
 
 from __future__ import annotations
@@ -58,61 +60,6 @@ def default_driver_mem(host_bytes: int | None = None) -> str:
     return f"{max(2, min(32, int(host_bytes * 0.6) >> 30))}g"
 
 
-def _initial_shuffle_partitions(cores: int) -> int:
-    """AQE initial shuffle-partition count sized to the active fixture
-    (~1 per 32 MB of parquet under $SPARK_GRAFT_SF_DIR, clamped to
-    [cores, 1024]): tiny fixtures keep core-count parallelism with
-    zero extra shuffle-file overhead; sf100's ~15 GB yields ~480, so
-    60 GB exchanges land ~128 MB partitions instead of spilling."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    total = 0
-    try:
-        for root, _dirs, files in os.walk(sf_dir):
-            for f in files:
-                if f.endswith(".parquet"):
-                    try:
-                        total += os.path.getsize(os.path.join(root, f))
-                    except OSError:
-                        pass
-    except OSError:
-        pass
-    return max(cores, min(1024, total // (32 << 20)))
-
-
-def _fast_local_dir() -> str | None:
-    """spark.local.dir placement for shuffle/blockmgr files (r15,
-    guide §6): shuffle files are ephemeral and latency-critical, so
-    they belong on the fastest local storage that can hold them — the
-    cluster analog of pointing spark.local.dir at local NVMe instead
-    of the OS volume. This sandbox's root disk sustains only
-    ~15-40 MB/s buffered writes (measured r15), and writeback debt
-    from one spilling query stalls unrelated queries; /dev/shm moves
-    >1 GB/s. Gate (same policy as scratch.scratch_base): only when the
-    active fixture is small enough that the whole shuffle footprint
-    fits tmpfs with a wide margin — the sf100 decade pass (shuffle
-    plateau measured in the tens of GB) stays on disk. A caller-set
-    SPARK_LOCAL_DIRS always wins (Spark gives the env precedence over
-    the conf anyway — returning None just keeps the conf unset)."""
-    if os.environ.get("SPARK_LOCAL_DIRS"):
-        return None
-    from . import scratch
-
-    try:
-        if os.path.isdir("/dev/shm"):
-            import shutil
-
-            fixture = scratch._fixture_bytes()
-            free = shutil.disk_usage("/dev/shm").free
-            if (
-                0 < fixture <= scratch._FAST_SCRATCH_MAX_FIXTURE
-                and free >= 64 * fixture
-            ):
-                return "/dev/shm/bdf-local"
-    except OSError:
-        pass
-    return None
-
-
 def get_spark(
     app_name: str = "block-data-fetcher-spark",
     shuffle_partitions: int | None = None,
@@ -127,23 +74,11 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # Decouple max shuffle parallelism from the static partition
-        # count: shuffles START at a count sized to the data under
-        # $SPARK_GRAFT_SF_DIR and AQE coalesces down to the 64 MB
-        # advisory size. The static 32 gave ~2 GB sort-merge
-        # partitions at sf100's 60 GB lineitem exchanges — every join
-        # spilled (q_tpch_q21 ran 26× its sf10 wall for 10× rows);
-        # fresh-session A/B at sf100: q_tpch_q3 43.6 → 26.6 s with
-        # ~500 initial partitions. But a blanket high count taxes
-        # small fixtures ~2× per multi-exchange query (512-way
-        # shuffle-file creation is pure overhead when the exchange is
-        # kilobytes — measured on the sf0.1 graph family), so the
-        # initial count tracks fixture bytes: ~1 partition per 32 MB,
-        # clamped to [cores, 1024]. A real cluster sizes this from
-        # table statistics the same way.
+        # Shuffles start at one partition per core; AQE coalesces down
+        # to the advisory size from there.
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            str(_initial_shuffle_partitions(int(cpus))),
+            cpus,
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -171,15 +106,12 @@ def get_spark(
         # without measurable CPU cost.
         .config("spark.cleaner.periodicGC.interval", "5min")
     )
-    fast_local = _fast_local_dir()
-    if fast_local:
-        builder = builder.config("spark.local.dir", fast_local)
     # SPARK_GRAFT_EXTRA_JARS (os.pathsep-separated paths) feeds
-    # spark.jars so the classpath gates in sources/formats.py and
-    # lakehouse.py attest jars the session will actually load — not
-    # merely that the operator set them. Only effective for the
-    # process's FIRST session (getOrCreate ignores configs on an
-    # existing one), same as every other builder conf above.
+    # spark.jars so the avro classpath gate in sources/formats.py
+    # attests jars the session will actually load — not merely that
+    # the operator set them. spark.jars is a static conf, so it only
+    # takes effect for the process's FIRST session (getOrCreate applies
+    # only runtime SQL confs to an existing one).
     extra_jars = [
         p
         for p in os.environ.get("SPARK_GRAFT_EXTRA_JARS", "").split(

@@ -203,8 +203,7 @@ def _avro_on_classpath() -> bool:
     trio is always bundled but ``spark-avro_2.13`` is not, and
     ``format("avro")`` raises AnalysisException without it. Probed by
     jar listing (not by opening a session — catalog registration runs
-    at import time), the same classpath-gate pattern as the Delta and
-    Iceberg lakehouse adapters."""
+    at import time)."""
     import glob
 
     import pyspark

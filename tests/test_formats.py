@@ -58,9 +58,9 @@ def test_text_roundtrip_hostile_bodies(spark, tmp_path):
 
 def test_avro_gate_matches_classpath(spark, sf_dir):
     """The Avro roundtrip registers iff the spark-avro module jar is
-    deployed (the lakehouse classpath-gate pattern). Where absent,
-    assert the documented failure mode is real — format("avro") raises
-    the external-module AnalysisException — so the gate can never
+    deployed. Where absent, assert the documented failure mode is
+    real — format("avro") raises the external-module
+    AnalysisException — so the gate can never
     silently hide a working path; where present, the roundtrip must
     match the shared oracle shape.
     """

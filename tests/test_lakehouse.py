@@ -1,9 +1,5 @@
-"""Pluggable lakehouse interface (VERDICT r9 stretch item 8).
-
-The parquet-manifest implementation is exercised fully here; the Delta
-adapter runs the IDENTICAL parity body when delta-spark is installed
-(not in this sandbox — the test skips, like the env-gated RPC soak).
-"""
+"""Versioned parquet table (VERDICT r9 stretch item 8): commit,
+time-travel reads, CDC diff and reference-counted expire."""
 
 from __future__ import annotations
 
@@ -14,57 +10,8 @@ import pytest
 from block_data_fetcher_spark import lakehouse
 
 
-def _has_delta() -> bool:
-    try:
-        import delta  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-_ICEBERG_ON_CLASSPATH: bool | None = None
-
-
-def _has_iceberg(spark) -> bool:
-    global _ICEBERG_ON_CLASSPATH
-    if _ICEBERG_ON_CLASSPATH is None:
-        try:
-            spark.sparkContext._jvm.java.lang.Class.forName(
-                "org.apache.iceberg.spark.SparkCatalog"
-            )
-            _ICEBERG_ON_CLASSPATH = True
-        except Exception:
-            _ICEBERG_ON_CLASSPATH = False
-    return _ICEBERG_ON_CLASSPATH
-
-
-def _impl_params():
-    params = [pytest.param("parquet", id="parquet")]
-    params.append(
-        pytest.param(
-            "delta",
-            id="delta",
-            marks=pytest.mark.skipif(
-                not _has_delta(), reason="delta-spark not installed"
-            ),
-        )
-    )
-    params.append(pytest.param("iceberg", id="iceberg"))
-    return params
-
-
-def _skip_unless_available(spark, impl) -> None:
-    # iceberg's gate needs a live JVM, so it can't be a collection-time
-    # skipif mark like delta's import check
-    if impl == "iceberg" and not _has_iceberg(spark):
-        pytest.skip("iceberg-spark-runtime not on classpath")
-
-
-@pytest.mark.parametrize("impl", _impl_params())
-def test_lakehouse_commit_read_time_travel(spark, sf_dir, tmp_path, impl):
-    _skip_unless_available(spark, impl)
-    t = lakehouse.open_table(spark, str(tmp_path / "t"), impl=impl)
+def test_lakehouse_commit_read_time_travel(spark, sf_dir, tmp_path):
+    t = lakehouse.ParquetManifestTable(spark, str(tmp_path / "t"))
     ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -83,12 +30,10 @@ def test_lakehouse_commit_read_time_travel(spark, sf_dir, tmp_path, impl):
     assert got_v1 == want_v1
 
 
-@pytest.mark.parametrize("impl", _impl_params())
-def test_lakehouse_changes_cdc(spark, sf_dir, tmp_path, impl):
-    _skip_unless_available(spark, impl)
+def test_lakehouse_changes_cdc(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 
-    t = lakehouse.open_table(spark, str(tmp_path / "t"), impl=impl)
+    t = lakehouse.ParquetManifestTable(spark, str(tmp_path / "t"))
     ev = (
         spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
         .select("event_id", "user_id", "value")
@@ -116,10 +61,8 @@ def test_lakehouse_changes_cdc(spark, sf_dir, tmp_path, impl):
     assert len(upd) == 1 and upd[0]["event_id"] == 0 and upd[0]["value"] == -1.0
 
 
-@pytest.mark.parametrize("impl", _impl_params())
-def test_lakehouse_expire_keeps_survivors_exact(spark, sf_dir, tmp_path, impl):
-    _skip_unless_available(spark, impl)
-    t = lakehouse.open_table(spark, str(tmp_path / "t"), impl=impl)
+def test_lakehouse_expire_keeps_survivors_exact(spark, sf_dir, tmp_path):
+    t = lakehouse.ParquetManifestTable(spark, str(tmp_path / "t"))
     ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).select(
         "event_id", "value"
     )
@@ -128,18 +71,11 @@ def test_lakehouse_expire_keeps_survivors_exact(spark, sf_dir, tmp_path, impl):
     v3_df = ev.where("event_id % 4 <= 2")
     v3 = t.commit(v3_df)
 
-    ck = "spark.databricks.delta.retentionDurationCheck.enabled"
-    ck_before = spark.conf.get(ck, None)
     vs_before = t.versions()
     reclaimed = t.expire(keep=2)
-    # expire must not leak its safety-check override into the session
-    assert spark.conf.get(ck, None) == ck_before
-    # Contract parity for BOTH impls (ADVICE r10 medium: the delta
-    # adapter's vacuum(0) broke time travel for KEPT versions and the
-    # parity test never noticed because these asserts were
-    # parquet-only): exactly the newest two versions survive, expired
-    # reads raise KeyError, and files exclusive to the expired
-    # version were reclaimed.
+    # Exactly the newest two versions survive, expired reads raise
+    # KeyError, and files exclusive to the expired version were
+    # reclaimed.
     assert reclaimed > 0
     assert t.versions() == vs_before[-2:]
     with pytest.raises(KeyError):
@@ -151,26 +87,6 @@ def test_lakehouse_expire_keeps_survivors_exact(spark, sf_dir, tmp_path, impl):
     assert sorted(tuple(r) for r in t.read(v3).collect()) == sorted(
         tuple(r) for r in v3_df.collect()
     )
-
-
-def test_lakehouse_factory_env_gate(spark, tmp_path, monkeypatch):
-    monkeypatch.delenv("BDF_LAKEHOUSE_IMPL", raising=False)
-    t = lakehouse.open_table(spark, str(tmp_path / "a"))
-    assert isinstance(t, lakehouse.ParquetManifestTable)
-    monkeypatch.setenv("BDF_LAKEHOUSE_IMPL", "parquet")
-    assert isinstance(
-        lakehouse.open_table(spark, str(tmp_path / "b")),
-        lakehouse.ParquetManifestTable,
-    )
-    if not _has_delta():
-        monkeypatch.setenv("BDF_LAKEHOUSE_IMPL", "delta")
-        with pytest.raises(RuntimeError, match="delta-spark"):
-            lakehouse.open_table(spark, str(tmp_path / "c"))
-    if not _has_iceberg(spark):
-        with pytest.raises(RuntimeError, match="iceberg-spark-runtime"):
-            lakehouse.open_table(spark, str(tmp_path / "e"), impl="iceberg")
-    with pytest.raises(ValueError):
-        lakehouse.open_table(spark, str(tmp_path / "d"), impl="hudi")
 
 
 def test_parquet_manifest_atomic_and_cow_safe(spark, sf_dir, tmp_path):

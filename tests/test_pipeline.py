@@ -212,6 +212,44 @@ def test_upsert_idempotent(spark, tmp_path):
     assert rows["a"] == 2
 
 
+def test_upsert_restores_table_left_aside_by_crashed_swap(spark, tmp_path):
+    """A swap that crashed between its two renames leaves the live
+    table at `path.old` and nothing at `path`. The next upsert must
+    move it back and merge into it, not load into an empty table and
+    then delete `path.old`."""
+    path = str(tmp_path / "tx_table")
+    old = spark.createDataFrame(
+        [("a", 1, 10.0), ("b", 1, 20.0)], "k string, v long, ts double"
+    )
+    upsert_parquet(spark, old, path, ["k"], ["ts"])
+    os.replace(path, path + ".old")  # the crash point inside _atomic_swap
+    new = spark.createDataFrame([("c", 1, 30.0)], "k string, v long, ts double")
+    assert upsert_parquet(spark, new, path, ["k"], ["ts"]) == 3
+    rows = {r.k: r.v for r in spark.read.parquet(path).collect()}
+    assert rows == {"a": 1, "b": 1, "c": 1}
+    assert not os.path.exists(path + ".old")
+
+
+def test_upsert_failed_write_keeps_table_and_leaves_no_temp(spark, tmp_path):
+    """A write that fails mid-job leaves the live table untouched and
+    removes its `swap_*` temp dir."""
+    from pyspark.errors import PySparkException
+
+    path = str(tmp_path / "tx_table")
+    good = spark.createDataFrame(
+        [("a", 1, 10.0), ("b", 1, 20.0)], "k string, v long, ts double"
+    )
+    upsert_parquet(spark, good, path, ["k"], ["ts"])
+    bad = spark.createDataFrame(
+        [("c", 1, 30.0)], "k string, v long, ts double"
+    ).withColumn("v", F.raise_error(F.lit("injected write failure")).cast("long"))
+    with pytest.raises(PySparkException, match="injected write failure"):
+        upsert_parquet(spark, bad, path, ["k"], ["ts"])
+    rows = {r.k: r.v for r in spark.read.parquet(path).collect()}
+    assert rows == {"a": 1, "b": 1}
+    assert not [f for f in os.listdir(tmp_path) if f.startswith("swap_")]
+
+
 def test_stream_pipeline_end_to_end(rpc_registered, spark, tmp_path):
     """Continuous mode done right (the reference's loop is a stub):
     RPC stream source → extract → foreachBatch upsert → parquet."""
@@ -304,6 +342,32 @@ def test_default_driver_mem_sizes_to_host(monkeypatch):
     }
     monkeypatch.setenv("SPARK_DRIVER_MEM", "7g")
     assert default_driver_mem(host_bytes=4 * g) == "7g"  # env wins
+
+
+def test_session_sizes_initial_shuffle_from_cores_not_fixture(
+    spark, monkeypatch, tmp_path
+):
+    """get_spark starts AQE shuffles at SPARK_GRAFT_CPUS partitions,
+    however large the catalog fixture under SPARK_GRAFT_SF_DIR is."""
+    from block_data_fetcher_spark.session import get_spark
+
+    with open(tmp_path / "x.parquet", "wb") as f:
+        f.truncate(4 << 30)  # sparse 4 GiB
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    keys = (
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+        "spark.sql.shuffle.partitions",
+    )
+    before = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        assert get_spark().conf.get(keys[0]) == "4"
+    finally:
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def test_spatial_grid_rejects_non_divisor_cell(spark, sf_dir):
