@@ -35,8 +35,8 @@ REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 # scratch.py's run-keyed sinks).
 OUT_DIR = os.environ.get("SPARK_GRAFT_OUT_DIR") or REPO_ROOT
 
-# Scratch hygiene floor (the sf100 ENOSPC lesson): when free disk under
-# the repo drops below this, completed queries' scratch output is
+# Scratch hygiene floor (the sf100 ENOSPC lesson): when free disk on
+# the scratch volume (see _scratch_free_bytes) drops below this, completed queries' scratch output is
 # dropped mid-session. Kept conditional — unconditional clearing would
 # also destroy the kmeans/IVF materialize-once caches that the
 # similarity family deliberately shares across queries.
@@ -175,6 +175,16 @@ def _blockmgr_dirs(spark) -> list:
         return []
 
 
+def _scratch_free_bytes() -> int:
+    """Free bytes on the volume that holds scratch tables
+    (:func:`scratch.scratch_base`, under the OS temp dir)."""
+    import shutil
+
+    base = scratch.scratch_base()
+    os.makedirs(base, exist_ok=True)
+    return shutil.disk_usage(base).free
+
+
 def _sweep_stale_shuffle(spark, protect_after: float | None = None) -> tuple[int, int]:
     """Unlink shuffle_* files older than STALE_SHUFFLE_AGE_SEC from
     this app's blockmgr dirs (see the constant's rationale). Returns
@@ -311,20 +321,21 @@ def main() -> None:
         import uuid
 
         sink = f"warmup_{uuid.uuid4().hex[:8]}"
-        (
-            spark.readStream.format("rate")
-            .option("rowsPerSecond", 1)
-            .load()
-            .groupBy("value")
-            .count()
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_warm_"))
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination(60)
-        )
+        with tempfile.TemporaryDirectory(prefix="ckpt_warm_") as ckpt:
+            (
+                spark.readStream.format("rate")
+                .option("rowsPerSecond", 1)
+                .load()
+                .groupBy("value")
+                .count()
+                .writeStream.format("memory")
+                .queryName(sink)
+                .outputMode("complete")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination(60)
+            )
     except Exception:
         pass
 
@@ -390,14 +401,11 @@ def main() -> None:
         # behind, which is what ENOSPC'd the first decade proof.
         streaming_jobs.clear_stream_scratch()
         try:
-            import shutil
-
-            # Gauge the volume the managed space actually lives on —
-            # spark.local.dir shuffle files and the warehouse scratch
-            # sit under the repo, not necessarily the fixture mount
-            # (ADVICE r10: keying off sf_dir reads the wrong volume
-            # when fixtures are mounted elsewhere).
-            free = shutil.disk_usage(REPO_ROOT).free
+            # Gauge the volume the scratch tables actually live on,
+            # not the fixture mount (ADVICE r10: keying off sf_dir
+            # reads the wrong volume when fixtures are mounted
+            # elsewhere).
+            free = _scratch_free_bytes()
             if free < SHUFFLE_GC_FREE_BYTES:
                 # CHEAP RECLAIM FIRST (r13): completed queries' sink
                 # tables are dead weight the moment their result is
@@ -417,7 +425,7 @@ def main() -> None:
                 n_rm, b_rm = _sweep_stale_shuffle(
                     spark, protect_after=prev_q_start
                 )
-                free = shutil.disk_usage(REPO_ROOT).free
+                free = _scratch_free_bytes()
                 sys.stderr.write(
                     f"cheap reclaim: sinks cleared, {n_rm} stale "
                     f"shuffle files ({b_rm >> 30} GB) unlinked, "
@@ -464,7 +472,7 @@ def main() -> None:
                     )
                 ):
                     time.sleep(3)
-                    free = shutil.disk_usage(REPO_ROOT).free
+                    free = _scratch_free_bytes()
                     if free > prev_free:
                         progressed, stalls = True, 0
                     else:
@@ -484,8 +492,6 @@ def main() -> None:
             # (ADVICE r10: System.gc() raises Py4JError, not OSError)
             sys.stderr.write(f"hygiene skipped: {e}\n")
         try:
-            import shutil as _sh
-
             disk_timeline.append(
                 {
                     "q": name,
@@ -498,9 +504,7 @@ def main() -> None:
                     # t_sec keeps its cumulative meaning.
                     "sec": timings.get(name),
                     "t_sec": round(time.perf_counter() - t_all, 1),
-                    "free_gb": round(
-                        _sh.disk_usage(REPO_ROOT).free / (1 << 30), 1
-                    ),
+                    "free_gb": round(_scratch_free_bytes() / (1 << 30), 1),
                 }
             )
         except OSError:

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 import functools
 
-from . import pipelines, scratch, storage
+from . import pipelines, storage
 from .functions import audio, hashing, multimodal, similarity, text, web
 from .session import tune
 from .sources import formats
@@ -46,11 +46,6 @@ def _tuned(fn: QueryFn) -> QueryFn:
 
     @functools.wraps(fn)
     def wrapped(spark, sf_dir):
-        # Record the ACTUAL fixture in use before any scratch path is
-        # built: scratch placement (tmpfs vs disk) sizes itself from
-        # this, and the driver passes sf_dir as an argument without
-        # necessarily exporting SPARK_GRAFT_SF_DIR (ADVICE r15).
-        scratch.note_fixture_dir(sf_dir)
         tune(spark)
         return fn(spark, sf_dir)
 

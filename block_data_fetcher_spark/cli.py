@@ -8,13 +8,15 @@ pass --rpc-url for a live endpoint) → :func:`.etl.load.load_blocks`,
 which writes both tables from one fetch of each slot. ``--continuous``
 runs the Structured Streaming job the reference's loop only stubbed
 (``src/main.rs:144-147``) and hands each micro-batch to the same
-function; both modes read with the same options.
+function; both modes read with the same options. Its checkpoint lives
+at ``<output>/_checkpoint``, so a restart into the same output resumes
+after the last committed micro-batch.
 """
 
 from __future__ import annotations
 
 import argparse
-import tempfile
+import os
 from dataclasses import dataclass
 
 
@@ -111,7 +113,6 @@ def run(args: Args) -> dict:
         "start_slot": start,
         "end_slot": args.calculate_end_slot(start),
         "batch_size": args.batch_size,
-        "max_slots_per_trigger": args.batch_size,
         "mode": "rpc" if args.rpc_url else "offline",
         "url": args.rpc_url or "",
         "max_retries": args.max_retries,
@@ -125,7 +126,7 @@ def run(args: Args) -> dict:
             .options(**options)
             .load()
             .writeStream.foreachBatch(lambda batch, _: load_blocks(batch, args.output))
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_upsert_"))
+            .option("checkpointLocation", os.path.join(args.output, "_checkpoint"))
             .start()
         )
         q.awaitTermination()

@@ -140,23 +140,22 @@ def stream_jdbc_upsert(
     keys: list[str],
     order: list[str],
     properties: dict[str, str] | None = None,
-    checkpoint: str | None = None,
+    *,
+    checkpoint: str,
     **kwargs,
 ):
     """Streaming twin: foreachBatch → :func:`jdbc_upsert` per
     micro-batch (the reference S8 per-batch transaction; exactly-once
-    by key across retries because the upsert is idempotent)."""
-    import tempfile
+    by key across retries because the upsert is idempotent). The
+    caller owns ``checkpoint``: reusing it resumes from the committed
+    offsets."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         jdbc_upsert(batch_df, url, table, keys, order, properties, **kwargs)
 
     return (
         stream_df.writeStream.foreachBatch(write_batch)
-        .option(
-            "checkpointLocation",
-            checkpoint or tempfile.mkdtemp(prefix="ckpt_jdbc_"),
-        )
+        .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
     )

@@ -197,16 +197,17 @@ def stream_upsert(
     path: str,
     keys: list[str],
     order: list[str],
-    checkpoint: str | None = None,
+    checkpoint: str,
 ):
     """Streaming sink: foreachBatch → keyed upsert (reference S8's
     per-batch atomic transaction; exactly-once-by-key across retries
-    because the upsert is idempotent)."""
+    because the upsert is idempotent). The caller owns ``checkpoint``:
+    reusing it resumes from the committed offsets."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         upsert_parquet(batch_df.sparkSession, batch_df, path, keys, order)
 
     writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint or tempfile.mkdtemp(prefix="ckpt_upsert_")
+        "checkpointLocation", checkpoint
     )
     return writer.trigger(availableNow=True).start()

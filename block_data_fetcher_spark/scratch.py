@@ -27,10 +27,9 @@ from __future__ import annotations
 import atexit
 import os
 import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
-
-_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Run roots already registered for exit-time removal (one per run id —
 # normally exactly one per process).
@@ -43,115 +42,16 @@ def run_id(spark: SparkSession) -> str:
     return os.environ.get("BDF_RUN_ID") or spark.sparkContext.applicationId
 
 
-# Fast-scratch placement (r15, guide §6): scratch tables are EPHEMERAL
-# (materialize-once caches and sink tables, all dropped at interpreter
-# exit), so they belong on the fastest local storage that can hold
-# them — the cluster analog is spilling job staging to local NVMe
-# instead of the durable warehouse volume. On this sandbox the root
-# disk sustains ~15-40 MB/s writes (measured r15: a 256 MB buffered
-# write took 11 s; writeback debt from one storage-family query then
-# stalls unrelated queries for tens of seconds), while /dev/shm moves
-# >1 GB/s. Placement rule, in order:
-#   1. BDF_SCRATCH_BASE env — explicit override always wins;
-#   2. /dev/shm/bdf-scratch when the active fixture is small enough
-#      that the run's whole scratch footprint fits with a wide margin
-#      (<= _FAST_SCRATCH_MAX_FIXTURE fixture bytes AND shm free >=
-#      64x fixture) — covers every driver bench/correctness SF;
-#   3. the repo's spark-warehouse/ (durable-disk default — the sf100
-#      decade posture, where scratch peaks at tens of GB and RAM-backed
-#      tmpfs would compete with the JVM heap and page cache).
-_FAST_SCRATCH_MAX_FIXTURE = 256 << 20
-_FAST_SCRATCH_SHM = "/dev/shm/bdf-scratch"
-
-
-# The fixture dir the engine is ACTUALLY querying (ADVICE r15): the
-# driver contract passes sf_dir as a call argument — it is not obliged
-# to export SPARK_GRAFT_SF_DIR — so sizing placement from the
-# env-var-with-default alone would let a driver running a LARGE fixture
-# route data-scale scratch onto RAM-backed tmpfs. Every catalog query
-# notes its sf_dir here (api._tuned) before any scratch path is built;
-# the noted dir takes precedence over the defaulted env var.
-_NOTED_SF_DIR: str | None = None
-
-# Per-process memoization (VERDICT r15 item 6 / ADVICE r15): the shm
-# free-space check must not be re-evaluated per call — as the run
-# itself consumes shm, `free` can dip below the 64x margin mid-process
-# and flip later scratch_dir() calls to a DIFFERENT base while earlier
-# writes live under the first one (the FAILED_READ_FILE class the
-# run-keyed scratch fix exists to prevent). The decision is computed
-# once per (fixture dir, fixture bytes) and cached; fixture sizes are
-# cached per dir (the walk is cheap at fixture scale but runs on every
-# scratch_base call otherwise).
-_FIXTURE_BYTES_CACHE: dict[str, int] = {}
-_BASE_DECISION: dict[tuple[str, int], str] = {}
-
-
-def note_fixture_dir(sf_dir: str | None) -> None:
-    """Record the fixture dir of the query being built (called by the
-    api layer with the driver's actual sf_dir argument)."""
-    global _NOTED_SF_DIR
-    _NOTED_SF_DIR = sf_dir
-
-
-def _fixture_dir() -> str:
-    """The active fixture dir: the last noted per-call sf_dir wins;
-    the env var (with its small default) is only the fallback for
-    paths that run before any query has been built (sweep_stale)."""
-    return _NOTED_SF_DIR or os.environ.get(
-        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
-    )
-
-
-def _fixture_bytes() -> int:
-    """Total parquet bytes under the active fixture dir. Cached per
-    dir."""
-    sf_dir = _fixture_dir()
-    cached = _FIXTURE_BYTES_CACHE.get(sf_dir)
-    if cached is not None:
-        return cached
-    total = 0
-    try:
-        for root, _dirs, files in os.walk(sf_dir):
-            for f in files:
-                if f.endswith(".parquet"):
-                    try:
-                        total += os.path.getsize(os.path.join(root, f))
-                    except OSError:
-                        pass
-    except OSError:
-        pass
-    _FIXTURE_BYTES_CACHE[sf_dir] = total
-    return total
-
-
 def scratch_base() -> str:
-    """Base directory hosting run-keyed scratch roots (see placement
-    rule above). The shm-vs-disk decision is made ONCE per (fixture
-    dir, fixture size) and memoized, so all paths within a run resolve
-    to the same base even if /dev/shm free space drops mid-run."""
-    env = os.environ.get("BDF_SCRATCH_BASE")
-    if env:
-        return env
-    fixture = _fixture_bytes()
-    key = (_fixture_dir(), fixture)
-    cached = _BASE_DECISION.get(key)
-    if cached is not None:
-        return cached
-    base = os.path.join(_REPO_ROOT, "spark-warehouse")
-    try:
-        if os.path.isdir("/dev/shm") and 0 < fixture <= _FAST_SCRATCH_MAX_FIXTURE:
-            free = shutil.disk_usage("/dev/shm").free
-            if free >= 64 * fixture:
-                base = _FAST_SCRATCH_SHM
-    except OSError:
-        pass
-    _BASE_DECISION[key] = base
-    return base
+    """Base directory hosting run-keyed scratch roots: ``bdf-scratch``
+    under the OS temp dir (``tempfile.gettempdir()``, which ``TMPDIR``
+    sets), the one place the package puts ephemeral directories."""
+    return os.path.join(tempfile.gettempdir(), "bdf-scratch")
 
 
 def scratch_root(spark: SparkSession) -> str:
-    """This run's private scratch root (repo-anchored or fast tmpfs —
-    never cwd: the external driver may run from anywhere)."""
+    """This run's private scratch root (under the temp dir — never cwd:
+    the external driver may run from anywhere)."""
     return os.path.join(scratch_base(), run_id(spark))
 
 
@@ -227,34 +127,26 @@ def sweep_stale(max_age_hours: float = 24.0) -> int:
 
     cutoff = time.time() - max_age_hours * 3600
     removed = 0
-    # Sweep every base a run of this repo could have used (the fast
-    # tmpfs base AND the durable default — a process killed after a
-    # fixture-size change must not orphan the other location).
-    bases = {
-        os.path.join(_REPO_ROOT, "spark-warehouse"),
-        _FAST_SCRATCH_SHM,
-        scratch_base(),
-    }
-    for base in bases:
-        try:
-            entries = os.listdir(base)
-        except OSError:
+    base = scratch_base()
+    try:
+        entries = os.listdir(base)
+    except OSError:
+        return 0
+    for name in entries:
+        root = os.path.join(base, name)
+        if not os.path.isdir(root):
             continue
-        for name in entries:
-            root = os.path.join(base, name)
-            if not os.path.isdir(root):
-                continue
-            newest = os.path.getmtime(root)
-            for dirpath, _dirs, files in os.walk(root):
-                newest = max(newest, os.path.getmtime(dirpath))
-                for f in files:
-                    try:
-                        newest = max(
-                            newest, os.path.getmtime(os.path.join(dirpath, f))
-                        )
-                    except OSError:
-                        pass
-            if newest < cutoff:
-                shutil.rmtree(root, ignore_errors=True)
-                removed += 1
+        newest = os.path.getmtime(root)
+        for dirpath, _dirs, files in os.walk(root):
+            newest = max(newest, os.path.getmtime(dirpath))
+            for f in files:
+                try:
+                    newest = max(
+                        newest, os.path.getmtime(os.path.join(dirpath, f))
+                    )
+                except OSError:
+                    pass
+        if newest < cutoff:
+            shutil.rmtree(root, ignore_errors=True)
+            removed += 1
     return removed

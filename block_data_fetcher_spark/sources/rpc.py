@@ -247,6 +247,8 @@ class _SlotFetcher:
         # reference CLI knobs (src/cli.rs:39-43, defaults :99-100)
         self.max_retries = int(options.get("max_retries", MAX_RETRIES))
         self.retry_delay = float(options.get("retry_delay", RETRY_DELAY_S))
+        # slots per partition (batch) or per micro-batch (stream)
+        self.batch_size = int(options.get("batch_size", 10))  # reference cli.rs:34-35
 
     def _blocks(self, first: int, last: int):
         """Yield ``(slot, raw)`` for slots ``first..last``; a slot with
@@ -268,12 +270,11 @@ class SolanaRpcReader(_SlotFetcher, DataSourceReader):
     def __init__(self, options: dict):
         super().__init__(options)
         self.end = int(options.get("end_slot", self.start + 9))
-        self.chunk = int(options.get("batch_size", 10))  # reference cli.rs:34-35
 
     def partitions(self):
         return [
-            _SlotRangePartition(s, min(s + self.chunk - 1, self.end))
-            for s in range(self.start, self.end + 1, self.chunk)
+            _SlotRangePartition(s, min(s + self.batch_size - 1, self.end))
+            for s in range(self.start, self.end + 1, self.batch_size)
         ]
 
     def read(self, partition: _SlotRangePartition):
@@ -281,11 +282,11 @@ class SolanaRpcReader(_SlotFetcher, DataSourceReader):
 
 
 class SolanaRpcStreamReader(_SlotFetcher, SimpleDataSourceStreamReader):
-    """Offsets are slot cursors: {"slot": next_unprocessed}."""
+    """Offsets are slot cursors: {"slot": next_unprocessed}. A
+    micro-batch covers at most ``batch_size`` slots."""
 
     def __init__(self, options: dict):
         super().__init__(options)
-        self.max_batch = int(options.get("max_slots_per_trigger", 10))
         self._offline_head = self.start + FINALITY_LAG + 5
 
     def initialOffset(self):
@@ -306,8 +307,13 @@ class SolanaRpcStreamReader(_SlotFetcher, SimpleDataSourceStreamReader):
 
     def read(self, start: dict):
         first = start["slot"]
-        last = min(self._latest_final(), first + self.max_batch - 1)
+        last = min(self._latest_final(), first + self.batch_size - 1)
         return iter(list(self._blocks(first, last))), {"slot": max(first, last + 1)}
+
+    def readBetweenOffsets(self, start: dict, end: dict):
+        """Re-fetch ``[start, end)``: Spark replays a micro-batch that
+        was planned but not committed before a restart."""
+        return self._blocks(start["slot"], end["slot"] - 1)
 
 
 class SolanaRpcDataSource(DataSource):

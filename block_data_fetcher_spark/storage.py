@@ -698,13 +698,16 @@ def build_versioned_table(
         files = {
             b: os.path.join(base, f"b{b}_v{version}.parquet") for b in buckets
         }
-        if len(buckets) == 1:
-            # The COW commit path (one changed bucket): a filtered
-            # write reads less than a partitioned write would.
-            b = buckets[0]
+
+        def write_filtered(b: int) -> None:
             df.where(F.col("bucket") == b).coalesce(1).write.mode(
                 "overwrite"
             ).parquet(files[b])
+
+        if len(buckets) == 1:
+            # The COW commit path (one changed bucket): a filtered
+            # write reads less than a partitioned write would.
+            write_filtered(buckets[0])
             return files
         # Full-version commit: ONE partitioned write instead of one
         # filtered write job per bucket (r16, guide §2.4/§6). `bucket`
@@ -716,31 +719,33 @@ def build_versioned_table(
         # repartition by it lands each bucket in exactly one task =
         # one part-file per bucket dir, the same layout as before; the
         # staged dirs are then renamed to the manifest's b{b}_v{v}
-        # names. An empty bucket writes no staged dir — fall back to
-        # the old filtered write so the manifest never references a
-        # missing path.
+        # names. An empty bucket writes no staged dir: then no bucket
+        # is renamed and every one takes the old filtered write, so the
+        # manifest never references a missing path. The stage dir is
+        # removed whatever happens.
         import shutil
 
         stage = os.path.join(base, f"_stage_v{version}")
-        (
-            df.where(F.col("bucket").isin(buckets))
-            .withColumn("_pb", F.col("bucket"))
-            .repartition(TT_BUCKETS, "_pb")
-            .write.partitionBy("_pb")
-            .mode("overwrite")
-            .parquet(stage)
-        )
-        for b in buckets:
-            src = os.path.join(stage, f"_pb={b}")
-            if os.path.isdir(files[b]):
-                shutil.rmtree(files[b])
-            if os.path.isdir(src):
-                os.rename(src, files[b])
-            else:
-                df.where(F.col("bucket") == b).coalesce(1).write.mode(
-                    "overwrite"
-                ).parquet(files[b])
-        shutil.rmtree(stage, ignore_errors=True)
+        try:
+            (
+                df.where(F.col("bucket").isin(buckets))
+                .withColumn("_pb", F.col("bucket"))
+                .repartition(TT_BUCKETS, "_pb")
+                .write.partitionBy("_pb")
+                .mode("overwrite")
+                .parquet(stage)
+            )
+            staged = {b: os.path.join(stage, f"_pb={b}") for b in buckets}
+            complete = all(os.path.isdir(d) for d in staged.values())
+            for b in buckets:
+                if os.path.isdir(files[b]):
+                    shutil.rmtree(files[b])
+                if complete:
+                    os.rename(staged[b], files[b])
+                else:
+                    write_filtered(b)
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
         return files
 
     v1 = totals(ev.where(F.col("ts") < split))

@@ -28,7 +28,6 @@ horizon, and `maxFilesPerTrigger` is the ST2 rate-limit analog.
 from __future__ import annotations
 
 import os
-import sys
 import tempfile
 import uuid
 from collections.abc import Iterator
@@ -75,7 +74,7 @@ _EVENTS_RAW_SCHEMA = StructType(
 # micro-batches and watermark eviction actually runs — without the
 # split, RocksDB absorbed the full 100M-event horizon in one trigger
 # and "state is bounded by the watermark" was never exercised at the
-# decade. BDF_STREAM_SPLIT_FORCE=1 engages it at any size (tests).
+# decade. Tests lower it to split a fixture-sized source.
 _SPLIT_THRESHOLD = 64 << 20
 
 
@@ -104,8 +103,7 @@ def _split_events_source(spark: SparkSession, sf_dir: str) -> str:
     from ..scratch import scratch_dir
 
     src = os.path.join(sf_dir, "events.parquet")
-    size = _events_file_size(sf_dir)
-    n = _split_slices(size)
+    n = _split_slices(_source_bytes(sf_dir) or 0)
     tag = re.sub(r"\W+", "_", os.path.abspath(sf_dir)).strip("_")
     out = scratch_dir(spark, "stream_src", f"events_{tag}_{n}")
     if not os.path.isfile(os.path.join(out, "_SUCCESS")):
@@ -127,21 +125,6 @@ def _split_events_source(spark: SparkSession, sf_dir: str) -> str:
     return out
 
 
-def _events_file_size(sf_dir: str) -> int:
-    path = os.path.join(sf_dir, "events.parquet")
-    try:
-        if os.path.isdir(path):
-            return sum(
-                os.path.getsize(os.path.join(root, f))
-                for root, _dirs, files in os.walk(path)
-                for f in files
-                if not f.startswith(("_", "."))
-            )
-        return os.path.getsize(path)
-    except OSError:
-        return 0
-
-
 def events_stream(
     spark: SparkSession, sf_dir: str, split: bool = False
 ) -> DataFrame:
@@ -159,10 +142,7 @@ def events_stream(
     # glob-filter to the events file. Watermarks demand TIMESTAMP
     # (LTZ), not NTZ — cast under the pinned-UTC session, which maps
     # each naive micros value to the same instant the oracle sees.
-    if split and (
-        _events_file_size(sf_dir) >= _SPLIT_THRESHOLD
-        or os.environ.get("BDF_STREAM_SPLIT_FORCE") == "1"
-    ):
+    if split and (_source_bytes(sf_dir) or 0) >= _SPLIT_THRESHOLD:
         return (
             spark.readStream.schema(_EVENTS_RAW_SCHEMA)
             .option("maxFilesPerTrigger", 1)  # one time slice per batch
@@ -178,12 +158,7 @@ def events_stream(
     )
 
 
-def _events_bytes(sf_dir: str) -> int | None:
-    """On-disk size of the events source (see :func:`_source_bytes`)."""
-    return _source_bytes(sf_dir, "events.parquet")
-
-
-def _source_bytes(sf_dir: str, filename: str) -> int | None:
+def _source_bytes(sf_dir: str, filename: str = "events.parquet") -> int | None:
     """On-disk size of a streamed source file, or None if unreadable.
 
     The source may be a single file (every shipped fixture) or a
@@ -191,8 +166,6 @@ def _source_bytes(sf_dir: str, filename: str) -> int | None:
     is walked and its data-file sizes summed, so a future multi-file
     fixture sizes correctly instead of silently hitting the OSError
     floor (r6 verdict nit)."""
-    import os
-
     path = os.path.join(sf_dir, filename)
     try:
         if os.path.isdir(path):
@@ -215,7 +188,7 @@ def _stream_partitions(sf_dir: str) -> int:
     growing toward the core count once the events file is large
     enough that state-op parallelism dominates (r6: the flat 8 capped
     sf10's 6M-event state stages at a quarter of the cores)."""
-    size = _events_bytes(sf_dir)
+    size = _source_bytes(sf_dir)
     if size is None:
         return 8
     return min(32, max(8, int(size // (4 << 20))))
@@ -231,12 +204,8 @@ _PROVIDER_HEAP = (
 )
 
 #: Source sizes at or below this take the JVM-heap state store; above
-#: it, RocksDB. Overridable for a deployment whose executors have more
-#: (or less) heap headroom than the 64 MB-source ≈ tens-of-MB-state
-#: rule of thumb assumes.
-_HEAP_STATE_MAX_SRC_BYTES = int(
-    os.environ.get("BDF_STREAM_HEAP_STATE_MAX_SRC_BYTES", 64 << 20)
-)
+#: it, RocksDB (a 64 MB source bounds state to tens of MB).
+_HEAP_STATE_MAX_SRC_BYTES = 64 << 20
 
 
 def _state_provider(
@@ -281,74 +250,11 @@ _STREAM_SCRATCH: list[str] = []
 _ATEXIT_ARMED = False
 
 
-# Minimum free bytes /dev/shm must have before a checkpoint dir is
-# placed there (headroom for the state-store delta files the query will
-# write; the biggest bounded-run delta measured at sf100 is a few GB —
-# q_stream_session's 95M state rows).
-_SHM_CKPT_MIN_FREE = 16 << 30
-
-
-def _checkpoint_base() -> str | None:
-    """Directory to host streaming CHECKPOINT dirs (offset WAL, commit
-    log, state-store deltas), or None for the tempfile default.
-
-    Every catalog/bench stream here is a BOUNDED availableNow run whose
-    checkpoint is drained and discarded within the same process —
-    crash-durability of the checkpoint buys nothing, but its fsync cost
-    is very real: the r12 round-close window measured 126–189 ms fsync
-    latency right after a 4 h sf100 pass, and q_stream_stream_join went
-    3.6 s → 29.2 s purely on checkpoint fsyncs (VERDICT r12 item 5). A
-    tmpfs mount makes those fsyncs memory-speed, which is semantically
-    safe exactly because the run is bounded and single-process. On a
-    real cluster a recoverable job would instead point
-    ``SPARK_GRAFT_CKPT_DIR`` at durable shared storage — the env var is
-    the override for both that case and for decade-scale local passes
-    that prefer disk over RAM headroom.
-
-    Sink DATA dirs deliberately stay on disk (they can be events-sized
-    at sf100); only ``ckpt_``-prefixed dirs route here."""
-    env = os.environ.get("SPARK_GRAFT_CKPT_DIR")
-    if env:
-        # An EXPLICIT override that doesn't exist must not silently
-        # downgrade to the disk tempdir (ADVICE r13: an operator
-        # pointing a recoverable job at mistyped durable storage would
-        # get a silent durability/latency downgrade). Create it like
-        # Spark creates checkpoint dirs; only if creation fails fall
-        # back — loudly, on stderr.
-        if not os.path.isdir(env):
-            try:
-                os.makedirs(env, exist_ok=True)
-            except OSError as e:
-                sys.stderr.write(
-                    f"SPARK_GRAFT_CKPT_DIR={env!r} is not a directory "
-                    f"and could not be created ({e}); falling back to "
-                    "the tempfile default — checkpoints will NOT land "
-                    "on the configured storage\n"
-                )
-                return None
-        return env
-    shm = "/dev/shm"
-    try:
-        import shutil as _sh
-
-        if os.path.isdir(shm) and (
-            _sh.disk_usage(shm).free >= _SHM_CKPT_MIN_FREE
-        ):
-            return shm
-    except OSError:
-        pass
-    return None
-
-
 def _mkdtemp(prefix: str) -> str:
     """tempfile.mkdtemp (per-process unique — already concurrency-safe)
-    plus lifecycle tracking so stream scratch doesn't leak. Checkpoint
-    dirs (``ckpt_`` prefix) are routed to :func:`_checkpoint_base` —
-    tmpfs when available — so bounded-run checkpoint fsyncs never pay
-    disk latency; data sinks always stay on the tempfile default."""
+    plus lifecycle tracking so stream sinks and checkpoints don't leak."""
     global _ATEXIT_ARMED
-    base = _checkpoint_base() if prefix.startswith("ckpt_") else None
-    d = tempfile.mkdtemp(prefix=prefix, dir=base)
+    d = tempfile.mkdtemp(prefix=prefix)
     _STREAM_SCRATCH.append(d)
     if not _ATEXIT_ARMED:
         import atexit
@@ -965,7 +871,8 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         q = stream_upsert(
-            ev, path, keys=["user_id"], order=["ts", "event_id"]
+            ev, path, keys=["user_id"], order=["ts", "event_id"],
+            checkpoint=_mkdtemp(prefix="ckpt_upsert_"),
         )
         _await_bounded(q, "stream_job")
     finally:
@@ -1071,7 +978,10 @@ def q_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        q = stream_upsert(ev, path, keys=["key"], order=["ts", "event_id"])
+        q = stream_upsert(
+            ev, path, keys=["key"], order=["ts", "event_id"],
+            checkpoint=_mkdtemp(prefix="ckpt_cdc_"),
+        )
         _await_bounded(q, "stream_job")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
@@ -1129,33 +1039,39 @@ def q_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE partitioned write instead of a filtered write job per slice
     # (r16, guide §2.4/§6): the slice predicates key on event_id % n —
     # not pushable — so the old per-slice loop scanned the full events
-    # table three times. The slice column is disjoint and total, each
-    # slice lands in exactly one task via repartition, and the staged
-    # part files are renamed to the mtime-ordered names the file
-    # stream source admits batch by batch. Rows per file are identical
-    # to the filtered writes (row order within a file may differ —
-    # irrelevant to a batch-at-a-time windowed aggregate).
+    # table three times. The slice column and the empty-slice fallback
+    # both derive from ``preds``, so a NULL event_id (which matches no
+    # predicate) is excluded from both. Each slice lands in exactly one
+    # task via repartition, and its one staged part file is renamed to
+    # the mtime-ordered name the file stream source admits batch by
+    # batch. Rows per file are identical to the filtered writes (row
+    # order within a file may differ — irrelevant to a batch-at-a-time
+    # windowed aggregate).
+    eid = F.col("event_id")
+    preds = {
+        "a_ontime": eid % 10 != 0,
+        "b_merge": (eid % 10 == 0) & (eid % 20 == 0),
+        "c_dropped": (eid % 10 == 0) & (eid % 20 != 0),
+    }
+    slice_col = F.coalesce(*(F.when(p, F.lit(n)) for n, p in preds.items()))
     stage = os.path.join(root, "_stage")
     (
-        ev.withColumn(
-            "slice",
-            F.when(F.col("event_id") % 10 != 0, F.lit("a_ontime"))
-            .when(F.col("event_id") % 20 == 0, F.lit("b_merge"))
-            .otherwise(F.lit("c_dropped")),
-        )
+        ev.withColumn("slice", slice_col)
+        .where(F.col("slice").isNotNull())
         .repartition(len(slices), "slice")
         .write.partitionBy("slice")
         .parquet(stage)
     )
-    preds = {
-        "a_ontime": F.col("event_id") % 10 != 0,
-        "b_merge": (F.col("event_id") % 10 == 0) & (F.col("event_id") % 20 == 0),
-        "c_dropped": (F.col("event_id") % 10 == 0) & (F.col("event_id") % 20 != 0),
-    }
     for name, mtime in slices.items():
-        hits = glob.glob(os.path.join(stage, f"slice={name}", "part-*.parquet"))
+        staged = os.path.join(stage, f"slice={name}")
         dst = os.path.join(root, f"{name}_events.parquet")
-        if hits:
+        if os.path.isdir(staged):
+            hits = glob.glob(os.path.join(staged, "part-*.parquet"))
+            if len(hits) != 1:
+                raise RuntimeError(
+                    f"staged slice {name} holds {len(hits)} part files, "
+                    "expected exactly 1"
+                )
             shutil.move(hits[0], dst)
         else:
             # An empty slice writes no staged dir; the stream source

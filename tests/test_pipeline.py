@@ -258,13 +258,15 @@ def test_stream_pipeline_end_to_end(rpc_registered, spark, tmp_path):
         spark.readStream.format("solana_rpc")
         .option("start_slot", 500)
         .option("mode", "offline")
-        .option("max_slots_per_trigger", 7)
+        .option("batch_size", 7)
         .load()
     )
     txs = extract_transactions(stream).withColumn(
         "processed_at", F.current_timestamp()
     )
-    q = stream_upsert(txs, path, ["signature"], ["processed_at"])
+    q = stream_upsert(
+        txs, path, ["signature"], ["processed_at"], str(tmp_path / "ckpt")
+    )
     q.awaitTermination(120)
     out = spark.read.parquet(path)
     n = out.count()
@@ -800,38 +802,47 @@ def _committed_slot(q) -> int:
     return ast.literal_eval(p["sources"][0]["endOffset"])["slot"] if p else 0
 
 
-def test_cli_continuous_writes_both_tables(rpc_registered, spark, tmp_path):
-    """An offline --continuous run writes blocks and transactions that
-    agree per committed slot: transaction_count = transaction rows."""
+def _continuous_until(spark, argv, slot) -> tuple[int, list]:
+    """Run ``cli.run(argv)``, a ``--continuous`` run, in a thread until a
+    micro-batch has committed through ``slot`` or the run fails; stop it
+    and return the committed slot and the run's errors."""
     import threading
     import time
 
     from block_data_fetcher_spark.cli import parse_args, run
 
-    out = str(tmp_path / "c")
     errors = []
 
     def main():
         try:
-            run(parse_args(["-s", "500", "-b", "5", "-o", out, "-c"]))
+            run(parse_args(argv))
         except Exception as e:  # reported by the main thread
             errors.append(e)
 
     thread = threading.Thread(target=main, daemon=True)
     thread.start()
     deadline = time.time() + 120
+    q = None
     try:
-        while not spark.streams.active and time.time() < deadline:
+        while q is None and time.time() < deadline and not errors:
+            q = next(iter(spark.streams.active), None)
             time.sleep(0.05)
-        (q,) = spark.streams.active
-        while _committed_slot(q) < 510 and time.time() < deadline and not errors:
+        while q is not None and _committed_slot(q) < slot and time.time() < deadline and not errors:
             time.sleep(0.05)
-        committed = _committed_slot(q)
     finally:
         for active in spark.streams.active:
             active.stop()
         thread.join(timeout=60)
-    assert not thread.is_alive() and not errors
+    assert not thread.is_alive()
+    return (_committed_slot(q) if q is not None else 0), errors
+
+
+def test_cli_continuous_writes_both_tables(rpc_registered, spark, tmp_path):
+    """An offline --continuous run writes blocks and transactions that
+    agree per committed slot: transaction_count = transaction rows."""
+    out = str(tmp_path / "c")
+    committed, errors = _continuous_until(spark, ["-s", "500", "-b", "5", "-o", out, "-c"], 510)
+    assert not errors
     assert committed >= 510
     blocks = {
         r.slot: r.transaction_count
@@ -847,17 +858,68 @@ def test_cli_continuous_writes_both_tables(rpc_registered, spark, tmp_path):
     assert blocks == txs
 
 
+def test_cli_continuous_resumes_after_restart(rpc_registered, spark, rpc_stub, tmp_path, monkeypatch):
+    """A --continuous run that dies after two committed micro-batches,
+    restarted into the same output, resumes from its checkpoint under
+    the output: no slot below the committed offset is fetched again,
+    the uncommitted batch is re-fetched once, no slot is missing and
+    every signature lands once."""
+    from block_data_fetcher_spark.etl import load
+    from block_data_fetcher_spark.sources.rpc import FINALITY_LAG
+
+    out = str(tmp_path / "c")
+    argv = ["-s", "100", "-b", "3", "-r", rpc_stub.url, "-o", out, "-c", "--retry-delay", "0"]
+    final = rpc_stub.HEAD - FINALITY_LAG + 1
+    real_load = load.load_blocks
+    calls = []
+
+    def crash_third_batch(raw, output):
+        calls.append(output)
+        if len(calls) == 3:
+            raise RuntimeError("injected crash")
+        return real_load(raw, output)
+
+    monkeypatch.setattr(load, "load_blocks", crash_third_batch)
+    committed, errors = _continuous_until(spark, argv, final)
+    assert errors and committed == 106  # batches [100, 103) and [103, 106)
+    monkeypatch.setattr(load, "load_blocks", real_load)
+    hits = dict(rpc_stub.hits)
+
+    committed, errors = _continuous_until(spark, argv, final)
+    assert not errors and committed == final
+    refetched = {
+        s: rpc_stub.hits.get(s, 0) - hits.get(s, 0) for s in range(100, 109)
+    }
+    assert refetched == {s: int(s >= 106) for s in range(100, 109)}
+    slots = sorted(r.slot for r in spark.read.parquet(f"{out}/blocks").collect())
+    assert slots == sorted(set(range(100, final)) - {rpc_stub.NULL_SLOT})
+    txs = spark.read.parquet(f"{out}/transactions")
+    assert txs.count() == txs.select("signature").distinct().count() == 4 * len(slots)
+
+
+def test_stream_reader_caps_batches_and_rereads_ranges():
+    """Each micro-batch holds at most ``batch_size`` slots, and
+    ``readBetweenOffsets`` re-reads exactly ``[start, end)``."""
+    from block_data_fetcher_spark.sources.rpc import SolanaRpcStreamReader
+
+    reader = SolanaRpcStreamReader({"start_slot": 500, "batch_size": 3})
+    rows, end = reader.read(reader.initialOffset())
+    assert [slot for slot, _ in rows] == [500, 501, 502]
+    assert end == {"slot": 503}
+    again = reader.readBetweenOffsets({"slot": 500}, {"slot": 503})
+    assert [slot for slot, _ in again] == [500, 501, 502]
+
+
 def test_rpc_online_stream_respects_finality_lag(rpc_registered, spark, rpc_stub):
     """Streaming online mode over the socket: with head=130 the
     stream must stop at slot 110 (latest − 20 finality lag,
-    src/main.rs:93-98) even though max_slots_per_trigger allows
-    more."""
+    src/main.rs:93-98) even though batch_size allows more."""
     stream = (
         spark.readStream.format("solana_rpc")
         .option("mode", "online")
         .option("url", rpc_stub.url)
         .option("start_slot", 100)
-        .option("max_slots_per_trigger", 50)
+        .option("batch_size", 50)
         .option("retry_delay", 0.05)
         .load()
     )
@@ -926,7 +988,7 @@ def test_rpc_live_continuous_soak(rpc_registered, spark):
         .option("mode", "online")
         .option("url", _LIVE_RPC)
         .option("start_slot", start)
-        .option("max_slots_per_trigger", 5)
+        .option("batch_size", 5)
         .load()
     )
     q = (

@@ -16,6 +16,7 @@ pytest worker.
 from __future__ import annotations
 
 import os
+import tempfile
 import time
 
 
@@ -38,82 +39,37 @@ def test_scratch_dir_defaults_to_application_id(spark, monkeypatch):
     monkeypatch.delenv("BDF_RUN_ID", raising=False)
     path = scratch.scratch_dir(spark, "storage", "x")
     assert spark.sparkContext.applicationId in path
-    # anchored to a declared scratch base (fast tmpfs or the repo
-    # warehouse — r15 placement rule), never the process cwd
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(scratch.__file__)))
-    allowed = (
-        os.path.join(repo, "spark-warehouse"),
-        scratch._FAST_SCRATCH_SHM,
-    )
-    assert path.startswith(allowed)
-    assert not path.startswith(os.getcwd() + os.sep) or path.startswith(
-        allowed
-    )
+    # anchored to the scratch base, never the process cwd
+    assert path.startswith(scratch.scratch_base() + os.sep)
 
 
-def test_scratch_base_env_override(monkeypatch, tmp_path):
-    from block_data_fetcher_spark import scratch
-
-    monkeypatch.setenv("BDF_SCRATCH_BASE", str(tmp_path))
-    assert scratch.scratch_base() == str(tmp_path)
-
-
-def test_scratch_base_falls_back_to_repo_for_big_fixtures(monkeypatch):
-    """The fast-tmpfs placement must NOT engage for fixtures past the
-    size gate (the sf100 decade posture: scratch peaks at tens of GB,
-    which belongs on disk, not RAM-backed tmpfs)."""
-    from block_data_fetcher_spark import scratch
-
-    monkeypatch.delenv("BDF_SCRATCH_BASE", raising=False)
-    monkeypatch.setattr(
-        scratch, "_fixture_bytes", lambda: scratch._FAST_SCRATCH_MAX_FIXTURE + 1
-    )
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(scratch.__file__)))
-    assert scratch.scratch_base() == os.path.join(repo, "spark-warehouse")
-
-
-def test_scratch_base_decision_memoized_no_midrun_flip(monkeypatch):
-    """VERDICT r15 item 6 / ADVICE r15: the shm free-space check runs
-    ONCE per (fixture dir, fixture size) — a mid-run dip of /dev/shm
-    free space must not flip later scratch paths to a different base
-    while earlier writes live under the first one."""
-    from block_data_fetcher_spark import scratch
-
-    monkeypatch.delenv("BDF_SCRATCH_BASE", raising=False)
-    scratch._BASE_DECISION.clear()
-    first = scratch.scratch_base()
-
-    class _Tiny:
-        free = 1  # far below any 64x-fixture margin
-
-    monkeypatch.setattr(scratch.shutil, "disk_usage", lambda p: _Tiny)
-    assert scratch.scratch_base() == first  # memoized, not re-evaluated
-    scratch._BASE_DECISION.clear()
-
-
-def test_noted_fixture_dir_overrides_env_default(monkeypatch, tmp_path):
-    """ADVICE r15: the driver passes sf_dir as a call argument without
-    necessarily exporting SPARK_GRAFT_SF_DIR. Once a query notes its
-    actual fixture dir, placement sizes THAT fixture — a big fixture
-    routes scratch to disk even when the env var points at (or
-    defaults to) a small one."""
-    import os as _os
+def test_scratch_root_lies_under_tempdir(spark, monkeypatch, tmp_path):
+    """Scratch lives under the OS temp dir whatever the catalog fixture
+    or /dev/shm's free space: neither a small nor a big fixture under
+    SPARK_GRAFT_SF_DIR, nor a roomy or full tmpfs, moves it."""
+    import shutil
 
     from block_data_fetcher_spark import scratch
 
-    monkeypatch.delenv("BDF_SCRATCH_BASE", raising=False)
+    small = tmp_path / "sf_small"
     big = tmp_path / "sf_big"
-    big.mkdir()
-    with open(big / "events.parquet", "wb") as f:
-        f.truncate(scratch._FAST_SCRATCH_MAX_FIXTURE + 1)  # sparse
+    for d, size in ((small, 1 << 10), (big, 1 << 40)):
+        d.mkdir()
+        with open(d / "events.parquet", "wb") as f:
+            f.truncate(size)  # sparse
 
-    monkeypatch.setattr(scratch, "_NOTED_SF_DIR", None)  # restored at teardown
-    scratch.note_fixture_dir(str(big))
-    assert scratch._fixture_dir() == str(big)
-    repo = _os.path.dirname(
-        _os.path.dirname(_os.path.abspath(scratch.__file__))
-    )
-    assert scratch.scratch_base() == _os.path.join(repo, "spark-warehouse")
+    class _Usage:
+        def __init__(self, free):
+            self.total = self.free = free
+            self.used = 0
+
+    tmp = os.path.realpath(tempfile.gettempdir())
+    for sf in (small, big):
+        for free in (1, 1 << 50):
+            monkeypatch.setenv("SPARK_GRAFT_SF_DIR", str(sf))
+            monkeypatch.setattr(shutil, "disk_usage", lambda p, f=free: _Usage(f))
+            root = os.path.realpath(scratch.scratch_root(spark))
+            assert root.startswith(tmp + os.sep), (sf, free, root)
 
 
 def test_two_run_ids_write_csv_to_disjoint_dirs(spark, sf_dir, monkeypatch):

@@ -497,6 +497,65 @@ def test_vacuum_preserves_cow_shared_files(spark, sf_dir, tmp_path):
     assert after == before
 
 
+def _tiny_events(spark, tmp_path, users) -> str:
+    """A fixture dir whose events table holds one pre-split event per
+    user in ``users``."""
+    import datetime
+
+    sf = str(tmp_path / "sf")
+    ts = datetime.datetime(2024, 1, 1)
+    spark.createDataFrame(
+        [(u, float(u), ts) for u in users], "user_id long, value double, ts timestamp"
+    ).write.parquet(f"{sf}/events.parquet")
+    return sf
+
+
+def test_versioned_table_with_an_empty_bucket_renames_none(spark, tmp_path, monkeypatch):
+    """When some bucket writes no staged ``_pb=`` dir, every bucket takes
+    the filtered write: no staged dir is renamed, and the stage is gone."""
+    import os
+
+    from block_data_fetcher_spark.storage import TT_BUCKETS, build_versioned_table
+
+    sf = _tiny_events(spark, tmp_path, range(1, TT_BUCKETS - 2))  # buckets 0, 6, 7 empty
+    renames = []
+    real_rename = os.rename
+    monkeypatch.setattr(os, "rename", lambda a, b: (renames.append(a), real_rename(a, b)))
+    base = str(tmp_path / "versioned")
+    manifests = build_versioned_table(spark, sf, base)
+    assert renames == []
+    assert all(os.path.isdir(f) for f in manifests[1])
+    assert spark.read.parquet(*manifests[1]).count() == TT_BUCKETS - 3
+    assert not [f for f in os.listdir(base) if f.startswith("_stage_")]
+
+
+def test_versioned_table_removes_stage_when_a_rename_fails(spark, tmp_path, monkeypatch):
+    """A failure part-way through the bucket renames still removes the
+    ``_stage_v*`` dir."""
+    import os
+
+    import pytest
+
+    from block_data_fetcher_spark.storage import TT_BUCKETS, build_versioned_table
+
+    sf = _tiny_events(spark, tmp_path, range(2 * TT_BUCKETS))
+    real_rename = os.rename
+    calls = []
+
+    def failing_rename(a, b):
+        calls.append(a)
+        if len(calls) == 2:
+            raise OSError("injected rename failure")
+        real_rename(a, b)
+
+    monkeypatch.setattr(os, "rename", failing_rename)
+    base = str(tmp_path / "versioned")
+    with pytest.raises(OSError, match="injected"):
+        build_versioned_table(spark, sf, base)
+    assert len(calls) == 2
+    assert not [f for f in os.listdir(base) if f.startswith("_stage_")]
+
+
 def test_partition_evolution_prunes_both_specs(spark, sf_dir):
     """The evolved table must prune in BOTH layouts: the history
     branch by event_date directories, the new branch by event_week

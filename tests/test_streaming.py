@@ -364,7 +364,7 @@ def test_stream_cdc_crash_after_swap_converges(spark, sf_dir, tmp_path):
         .alias("op"),
     )
     path = str(tmp_path / "cdc_snapshot")
-    ckpt = str(tmp_path / "ckpt_cdc")
+    ckpt = str(tmp_path / "cdc_checkpoint")
     crashed = {"done": False}
 
     def write_batch(batch_df, batch_id):
@@ -764,7 +764,7 @@ def test_stream_dedup_multibatch_evicts_and_matches(spark, sf_dir, monkeypatch):
         for r in jobs.q_stream_dedup(spark, sf_dir).collect()
     )
 
-    monkeypatch.setenv("BDF_STREAM_SPLIT_FORCE", "1")
+    monkeypatch.setattr(jobs, "_SPLIT_THRESHOLD", jobs._source_bytes(sf_dir))
     split = sorted(
         tuple(r)
         for r in jobs.q_stream_dedup(spark, sf_dir).collect()
@@ -798,7 +798,7 @@ def test_stream_stream_join_multibatch_matches(spark, sf_dir, monkeypatch):
         for r in jobs.q_stream_stream_left_join(spark, sf_dir).collect()
     )
 
-    monkeypatch.setenv("BDF_STREAM_SPLIT_FORCE", "1")
+    monkeypatch.setattr(jobs, "_SPLIT_THRESHOLD", jobs._source_bytes(sf_dir))
     split_inner = sorted(
         tuple(r) for r in jobs.q_stream_stream_join(spark, sf_dir).collect()
     )
@@ -818,42 +818,54 @@ def test_stream_stream_join_multibatch_matches(spark, sf_dir, monkeypatch):
     scratch.clear_scratch(spark)
 
 
-def test_checkpoint_dirs_route_to_checkpoint_base(tmp_path, monkeypatch):
-    """r13 (VERDICT r12 item 5): ckpt_* dirs must land under the
-    checkpoint base (tmpfs by default, SPARK_GRAFT_CKPT_DIR override)
-    so bounded-run checkpoint fsyncs never pay disk latency; sink DATA
-    dirs must stay on the tempfile default (they can be events-sized
-    at sf100, too big for RAM)."""
+def test_stream_dirs_land_under_tempdir(tmp_path, monkeypatch):
+    """Stream sink and checkpoint dirs are made under the OS temp dir
+    (``TMPDIR``), the one home for ephemeral dirs, and removed by
+    clear_stream_scratch (also registered for interpreter exit)."""
     import os
+    import tempfile
 
     from block_data_fetcher_spark.streaming import jobs
 
-    monkeypatch.setenv("SPARK_GRAFT_CKPT_DIR", str(tmp_path))
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    monkeypatch.setattr(tempfile, "tempdir", None)  # re-read TMPDIR
     ckpt = jobs._mkdtemp("ckpt_probe_")
     sink = jobs._mkdtemp("sink_probe_")
+    assert os.path.dirname(ckpt) == os.path.dirname(sink) == str(tmp_path)
+    jobs.clear_stream_scratch()
+    assert not os.listdir(tmp_path)
+
+
+def test_stream_upsert_and_cdc_checkpoints_are_removed(spark, sf_dir, tmp_path, monkeypatch):
+    """q_stream_upsert and q_stream_cdc make their checkpoints under the
+    temp dir as tracked stream scratch, so none outlives the process."""
+    import os
+    import tempfile
+
+    from block_data_fetcher_spark.streaming import jobs
+
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    monkeypatch.setattr(tempfile, "tempdir", None)  # re-read TMPDIR
+    jobs.q_stream_upsert(spark, sf_dir).count()
+    jobs.q_stream_cdc(spark, sf_dir).count()
+    ckpts = [f for f in os.listdir(tmp_path) if f.startswith("ckpt_")]
+    assert len(ckpts) == 2
+    jobs.clear_stream_scratch()
+    assert not [f for f in os.listdir(tmp_path) if f.startswith("ckpt_")]
+
+
+def test_stream_late_data_refuses_a_split_slice(spark, sf_dir):
+    """Each staged slice must be exactly one part file: a slice split
+    across files (here by maxRecordsPerFile) fails loudly instead of
+    streaming only its first file."""
+    import pytest
+
+    from block_data_fetcher_spark.streaming import jobs
+
+    prev = spark.conf.get("spark.sql.files.maxRecordsPerFile")
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "5")
     try:
-        assert os.path.dirname(ckpt) == str(tmp_path)
-        assert os.path.dirname(sink) != str(tmp_path)
+        with pytest.raises(RuntimeError, match="part files"):
+            jobs.q_stream_late_data(spark, sf_dir)
     finally:
-        jobs.clear_stream_scratch()
-    # default (no env): tmpfs when roomy, else the tempfile default —
-    # never a nonexistent path
-    monkeypatch.delenv("SPARK_GRAFT_CKPT_DIR", raising=False)
-    base = jobs._checkpoint_base()
-    assert base is None or os.path.isdir(base)
-    # an explicitly set but not-yet-existing env path is CREATED, not
-    # silently downgraded to the disk tempdir (ADVICE r13: a mistyped
-    # durable-storage override must not silently lose durability)
-    monkeypatch.setenv("SPARK_GRAFT_CKPT_DIR", str(tmp_path / "missing"))
-    ckpt2 = jobs._mkdtemp("ckpt_probe2_")
-    try:
-        assert os.path.isdir(ckpt2)
-        assert os.path.dirname(ckpt2) == str(tmp_path / "missing")
-    finally:
-        jobs.clear_stream_scratch()
-    # only a path that cannot be created falls back (loudly) — e.g.
-    # a child of a FILE
-    blocker = tmp_path / "blocker"
-    blocker.write_text("x")
-    monkeypatch.setenv("SPARK_GRAFT_CKPT_DIR", str(blocker / "sub"))
-    assert jobs._checkpoint_base() is None
+        spark.conf.set("spark.sql.files.maxRecordsPerFile", prev)
