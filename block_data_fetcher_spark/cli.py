@@ -99,16 +99,32 @@ def format_number(n: int) -> str:
 def run(args: Args) -> dict:
     """Execute the pipeline (reference ``Pipeline::run``,
     ``src/pipeline.rs:121-167``): source → :func:`..etl.load.load_blocks`,
-    then the A1/A3 stats report. Returns the stats dict (``{}`` for
-    ``--continuous``, which runs until stopped)."""
-    from .etl.extract import extraction_stats
+    then the A1/A3 stats report.
+
+    The report covers this run only: the blocks and transactions it
+    loaded, their successes, failures, fees and success rate, from the
+    counters :func:`..etl.load.load_blocks` observes on its writes (a
+    re-run of part of a range reports that part, not the whole store).
+    Returns the report (``{}`` for ``--continuous``, which runs until
+    stopped). A failed run may leave one of the two tables updated (see
+    :func:`..etl.load.load_blocks`); running it again converges.
+
+    ``--continuous`` without ``-s`` starts at the finalized head
+    (``getSlot`` − ``FINALITY_LAG``) when reading from ``--rpc-url``, as
+    the reference's loop intends (``src/main.rs:93-98``), and at slot 0
+    offline. A restart into the same output resumes from its checkpoint
+    whatever the start."""
     from .etl.load import load_blocks
     from .session import get_spark
-    from .sources.rpc import SolanaRpcDataSource
+    from .sources.rpc import SolanaRpcDataSource, finalized_slot
 
     spark = get_spark("block-data-fetcher-spark")
     spark.dataSource.register(SolanaRpcDataSource)
-    start = args.start_slot if args.start_slot is not None else 0
+    start = args.start_slot
+    if start is None:
+        start = 0
+        if args.continuous and args.rpc_url:
+            start = max(0, finalized_slot(args.rpc_url, args.max_retries, args.retry_delay))
     options = {
         "start_slot": start,
         "end_slot": args.calculate_end_slot(start),
@@ -133,12 +149,16 @@ def run(args: Args) -> dict:
         return {}
 
     raw = spark.read.format("solana_rpc").options(**options).load()
-    n_blocks, n_txs = load_blocks(raw, args.output)
-    stats = extraction_stats(spark.read.parquet(f"{args.output}/transactions")).head()
+    loaded = load_blocks(raw, args.output)
+    n_txs, n_ok = loaded["transactions_loaded"], loaded["successful_transactions"]
     report = {
-        "blocks_loaded": n_blocks,
+        "blocks_loaded": loaded["blocks_loaded"],
         "transactions_loaded": n_txs,
-        **{k: stats[k] for k in stats.asDict()},
+        "total_transactions": n_txs,
+        "successful_transactions": n_ok,
+        "failed_transactions": n_txs - n_ok,
+        "total_fees": loaded["total_fees"],
+        "success_rate": round(n_ok * 100.0 / n_txs, 2) if n_txs else 0.0,
     }
     for k, v in report.items():
         shown = (

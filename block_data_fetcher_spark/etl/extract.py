@@ -11,11 +11,17 @@ projections. Malformed rows don't kill the job: a failed parse yields
 NULLs which are filtered — the declarative PERMISSIVE analog of the
 reference's log-and-skip (``extract.rs:63-67``, ST5).
 
+Parse once: :func:`parse_block_json` runs ``from_json`` over the block
+blob, and both tables derive from its ``block`` struct
+(:func:`blocks_from_parsed`, :func:`transactions_from_parsed`).
+:func:`..load.load_blocks` persists that struct, so a load tokenizes each
+block once; :func:`parse_blocks` and :func:`extract_transactions` are the
+same functions composed over ``(slot, raw)``.
+
 Scale: the flatten is a generator inside the scan stage (no shuffle);
-classification is a map-literal lookup (zero shuffle). Each table still
-parses the block JSON itself: `parse_blocks` and `_parsed_transactions`
-both run `from_json` over it. At 100 TB the only exchanges are the ones
-the sinks need (partitioning by date/slot-bucket at write).
+classification is a map-literal lookup (zero shuffle). At 100 TB the
+only exchanges are the ones the sinks need (partitioning by
+date/slot-bucket at write).
 
 Staging: a derived column that other columns read (account keys,
 program ids, the first transfer, program types, the type) is projected
@@ -69,30 +75,42 @@ def extract_program_ids(instructions: Column, account_keys: Column) -> Column:
     return F.array_distinct(F.filter(per_instr, lambda p: p.isNotNull()))
 
 
-def parse_blocks(raw_blocks: DataFrame) -> DataFrame:
-    """(slot, raw) → blocks table (reference models.rs:12-18 /
-    migrations/...create_blocks.sql)."""
-    b = F.from_json("raw", BLOCK_JSON_SCHEMA)
+def parse_block_json(raw_blocks: DataFrame) -> DataFrame:
+    """(slot, raw) → ``(slot, block)``: the one ``from_json`` over the
+    block blob that both tables derive from."""
     return raw_blocks.select(
         F.col("slot").cast("long").alias("slot"),
-        b["blockhash"].alias("blockhash"),
-        b["parentSlot"].alias("parent_slot"),
-        F.timestamp_seconds(b["blockTime"]).alias("block_time"),
-        b["blockHeight"].alias("block_height"),
-        F.size(b["transactions"]).cast("int").alias("transaction_count"),
+        F.from_json("raw", BLOCK_JSON_SCHEMA).alias("block"),
+    )
+
+
+def blocks_from_parsed(parsed: DataFrame) -> DataFrame:
+    """(slot, block) → blocks table (reference models.rs:12-18 /
+    migrations/...create_blocks.sql)."""
+    return parsed.select(
+        "slot",
+        F.col("block.blockhash").alias("blockhash"),
+        F.col("block.parentSlot").alias("parent_slot"),
+        F.timestamp_seconds(F.col("block.blockTime")).alias("block_time"),
+        F.col("block.blockHeight").alias("block_height"),
+        F.size(F.col("block.transactions")).cast("int").alias("transaction_count"),
     ).where(F.col("blockhash").isNotNull())
 
 
-def _parsed_transactions(raw_blocks: DataFrame) -> DataFrame:
-    """(slot, raw) → ``(block_slot, transaction_index, tx,
+def parse_blocks(raw_blocks: DataFrame) -> DataFrame:
+    """(slot, raw) → blocks table."""
+    return blocks_from_parsed(parse_block_json(raw_blocks))
+
+
+def _parsed_transactions(parsed: DataFrame) -> DataFrame:
+    """(slot, block) → ``(block_slot, transaction_index, tx,
     account_keys)`` per transaction, ``account_keys`` normalized: the
     prologue of every tx-level extraction (reference P1,
     extract.rs:55-71)."""
-    b = F.from_json("raw", BLOCK_JSON_SCHEMA)
     return (
-        raw_blocks.select(
-            F.col("slot").cast("long").alias("block_slot"),
-            F.posexplode(b["transactions"]).alias("transaction_index", "tx_raw"),
+        parsed.select(
+            F.col("slot").alias("block_slot"),
+            F.posexplode(F.col("block.transactions")).alias("transaction_index", "tx_raw"),
         )
         .select(
             "block_slot",
@@ -106,14 +124,14 @@ def _parsed_transactions(raw_blocks: DataFrame) -> DataFrame:
     )
 
 
-def extract_transactions(raw_blocks: DataFrame) -> DataFrame:
-    """The full tx-level extraction (reference extract.rs:74-163 +
-    enrichment transform.rs:252-335): fields, classification, label,
-    first transfer details — staged so each is computed once per tx
-    (module docstring)."""
-    ids, typed, classified, out = _transaction_stages(raw_blocks.sparkSession.sparkContext._jvm)
+def transactions_from_parsed(parsed: DataFrame) -> DataFrame:
+    """(slot, block) → transactions table: the full tx-level extraction
+    (reference extract.rs:74-163 + enrichment transform.rs:252-335):
+    fields, classification, label, first transfer details — staged so
+    each is computed once per tx (module docstring)."""
+    ids, typed, classified, out = _transaction_stages(parsed.sparkSession.sparkContext._jvm)
     staged = (
-        _parsed_transactions(raw_blocks)
+        _parsed_transactions(parsed)
         .select(*ids)
         .select(*typed)
         .select(*classified)
@@ -123,9 +141,14 @@ def extract_transactions(raw_blocks: DataFrame) -> DataFrame:
     return staged.where(F.col("signature").isNotNull())
 
 
+def extract_transactions(raw_blocks: DataFrame) -> DataFrame:
+    """(slot, raw) → transactions table."""
+    return transactions_from_parsed(parse_block_json(raw_blocks))
+
+
 @functools.lru_cache(maxsize=1)
 def _transaction_stages(jvm) -> tuple[tuple, tuple, tuple, tuple]:
-    """The columns of each :func:`extract_transactions` select stage.
+    """The columns of each :func:`transactions_from_parsed` select stage.
 
     Building them takes ~3,000 py4j round trips (PySpark records the
     call site of every Column call): ≈0.5 s on a 4-core host, about as
@@ -184,7 +207,7 @@ def _transaction_stages(jvm) -> tuple[tuple, tuple, tuple, tuple]:
 def extract_instructions(raw_blocks: DataFrame) -> DataFrame:
     """tx → one row per instruction (reference models.rs:36-43;
     instructions explode to their own table, SURVEY §1.1)."""
-    exploded = _parsed_transactions(raw_blocks).select(
+    exploded = _parsed_transactions(parse_block_json(raw_blocks)).select(
         F.try_element_at(F.col("tx.signatures"), F.lit(1)).alias("transaction_signature"),
         "account_keys",
         F.posexplode(F.col("tx.message.instructions")).alias("instruction_index", "instr"),
@@ -223,7 +246,7 @@ def account_activity(raw_blocks: DataFrame) -> DataFrame:
     Scale: explode is a generator in the scan stage; the rollup is one
     hash aggregate on address with map-side partials — state is
     O(|addresses|), the same bound as the reference's table."""
-    exploded = _parsed_transactions(raw_blocks).select(
+    exploded = _parsed_transactions(parse_block_json(raw_blocks)).select(
         "block_slot",
         F.posexplode("account_keys").alias("key_index", "address"),
     ).where(F.col("address").isNotNull())
@@ -233,27 +256,6 @@ def account_activity(raw_blocks: DataFrame) -> DataFrame:
         F.count("*").alias("transaction_count"),
         F.count_if(F.col("key_index") == 0).alias("as_signer_count"),
     )
-
-
-def observed_transactions(raw_blocks: DataFrame):
-    """Attach in-flight pipeline metrics to the tx extraction — the
-    reference's progress/stats counters (A5, ``extract.rs:224-239`` /
-    ``pipeline.rs:30-54``) restated as ``df.observe()``: metrics ride
-    the job that already runs (no second pass over the data), collected
-    on the driver after any action.
-
-    Returns ``(transactions_df, Observation)``; after an action on the
-    DataFrame, ``observation.get`` yields the counters."""
-    from pyspark.sql import Observation
-
-    obs = Observation("extraction_stats")
-    txs = extract_transactions(raw_blocks).observe(
-        obs,
-        F.count(F.lit(1)).alias("total_transactions"),
-        F.count_if(F.col("success")).alias("successful_transactions"),
-        F.sum("fee").alias("total_fees"),
-    )
-    return txs, obs
 
 
 def extraction_stats(transactions: DataFrame) -> DataFrame:

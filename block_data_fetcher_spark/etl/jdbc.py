@@ -25,7 +25,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame
 
-from ..operators.windows import last_wins
+from .load import last_wins
 
 
 def _ident(name: str) -> str:

@@ -48,9 +48,9 @@ TX_JSON_SCHEMA = """
 # getBlock response (one block): header fields + raw transactions.
 # transactions kept as array<string> (raw JSON per tx): the block parse
 # only splits the blob into per-tx strings, and each tx is parsed with
-# TX_JSON_SCHEMA after the explode. The blob is still read in full once
-# per table: `parse_blocks` and `extract._parsed_transactions` each run
-# from_json over it.
+# TX_JSON_SCHEMA after the explode. The blob is parsed once per load:
+# `extract.parse_block_json` produces the struct both tables derive from,
+# and `load.load_blocks` persists it.
 BLOCK_JSON_SCHEMA = """
     blockhash string,
     previousBlockhash string,

@@ -21,7 +21,24 @@ from itertools import chain
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.classify import PROGRAM_REGISTRY_ROWS
+# The reference's registry seed rows (program_id → name, type) —
+# migrations/20251023000005_create_program_registry.sql:15-45 — become a
+# literal map here (and a broadcastable dim for the dynamic path).
+PROGRAM_REGISTRY_ROWS = [
+    # (program_id, program_name, program_type)
+    ("11111111111111111111111111111111", "System Program", "System"),
+    ("TokenkegQfeZyiNwAJbNbGKPFXCWuBvf9Ss623VQ5DA", "Token Program", "Token"),
+    ("TokenzQdBNbLqP5VEhdkAS6EPFLC1PHnBqCXEpPxuEb", "Token-2022 Program", "Token"),
+    ("ATokenGPvbdGVxr1b2hvZbsiqW5xWH25efTNsLJA8knL", "Associated Token Account", "Token"),
+    ("metaqbxxUerdq28cj1RbAWkYQm3ybzjb6a8bt518x1s", "Metaplex Token Metadata", "NFT"),
+    ("cndy3Z4yapfJBmL3ShUp5exZKqR3z33thTzeNMm2gRZ", "Candy Machine", "NFT"),
+    ("675kPX9MHTjS2zt1qfr1NYHuzeLXfQM9H24wFSUt1Mp8", "Raydium AMM", "DEX"),
+    ("JUP6LkbZbjS1jKKwapdHNy74zcZ3tLUZoi5QNyVTaV4", "Jupiter Aggregator", "DEX"),
+    ("whirLbMiicVdio4qvUfM5KAg6Ct8VwpYzGff3uctyCc", "Orca Whirlpool", "DEX"),
+    ("ComputeBudget111111111111111111111111111111", "Compute Budget", "System"),
+    ("KLend2g3cP87fffoy8q1mQqGKjrxjC8boSyAYavgmjD", "Kamino Lending", "DeFi"),
+    ("dRiftyHA39MWEi3m9aunc5MzRF1JYuBsbn6VPcn33UH", "Drift Protocol", "DeFi"),
+]
 
 # transaction_type labels — reference models.rs:58-68
 SOL_TRANSFER = "sol_transfer"

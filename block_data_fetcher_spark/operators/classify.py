@@ -6,8 +6,8 @@ the set of programs it touches (DEX > NFT > Token > SOL-transfer >
 ProgramInteraction > Unknown), resolving program ids through a 21-row
 registry HashMap. Spark-first restatement:
 
-- the registry is a broadcast dimension (``program_registry`` helper
-  below builds it as a literal DataFrame);
+- the registry is a broadcast dimension (the engine's
+  :func:`..etl.transform.registry_df` builds it as a literal DataFrame);
 - the rule chain is an ORDERED ``when().when().otherwise()`` —
   Catalyst preserves evaluation order, which encodes the precedence
   exactly (SURVEY §7 risk list: a join-based impl must not reorder);
@@ -24,34 +24,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-
-# The reference's registry seed rows (program_id → name, type) —
-# migrations/20251023000005_create_program_registry.sql:15-45 — become a
-# broadcastable literal dim. Used by the ETL path (etl/transform.py);
-# kept here as the canonical definition.
-PROGRAM_REGISTRY_ROWS = [
-    # (program_id, program_name, program_type)
-    ("11111111111111111111111111111111", "System Program", "System"),
-    ("TokenkegQfeZyiNwAJbNbGKPFXCWuBvf9Ss623VQ5DA", "Token Program", "Token"),
-    ("TokenzQdBNbLqP5VEhdkAS6EPFLC1PHnBqCXEpPxuEb", "Token-2022 Program", "Token"),
-    ("ATokenGPvbdGVxr1b2hvZbsiqW5xWH25efTNsLJA8knL", "Associated Token Account", "Token"),
-    ("metaqbxxUerdq28cj1RbAWkYQm3ybzjb6a8bt518x1s", "Metaplex Token Metadata", "NFT"),
-    ("cndy3Z4yapfJBmL3ShUp5exZKqR3z33thTzeNMm2gRZ", "Candy Machine", "NFT"),
-    ("675kPX9MHTjS2zt1qfr1NYHuzeLXfQM9H24wFSUt1Mp8", "Raydium AMM", "DEX"),
-    ("JUP6LkbZbjS1jKKwapdHNy74zcZ3tLUZoi5QNyVTaV4", "Jupiter Aggregator", "DEX"),
-    ("whirLbMiicVdio4qvUfM5KAg6Ct8VwpYzGff3uctyCc", "Orca Whirlpool", "DEX"),
-    ("ComputeBudget111111111111111111111111111111", "Compute Budget", "System"),
-    ("KLend2g3cP87fffoy8q1mQqGKjrxjC8boSyAYavgmjD", "Kamino Lending", "DeFi"),
-    ("dRiftyHA39MWEi3m9aunc5MzRF1JYuBsbn6VPcn33UH", "Drift Protocol", "DeFi"),
-]
-
-
-def program_registry(spark: SparkSession) -> DataFrame:
-    """The registry dimension as a broadcastable literal DataFrame
-    (reference builds an in-memory HashMap, ``src/etl/transform.rs:20-31``)."""
-    return spark.createDataFrame(
-        PROGRAM_REGISTRY_ROWS, "program_id string, program_name string, program_type string"
-    )
 
 
 def classify_event_types(type_set: F.Column) -> F.Column:

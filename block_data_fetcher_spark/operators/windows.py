@@ -3,33 +3,18 @@
 The reference's UPSERT (``INSERT ... ON CONFLICT DO UPDATE``,
 ``src/etl/load.rs:185-279``) has last-write-wins semantics per key;
 the batch analog is a ``row_number()`` window keeping the newest row
-per key — the one window function the engine must get exactly right
-(SURVEY §2.6). Time windows restate batch windowing over the slot
+per key (the engine's :func:`..etl.load.last_wins`) — the one window
+function the engine must get exactly right (SURVEY §2.6). Time windows restate batch windowing over the slot
 domain (``src/pipeline.rs:133-159``) as event-time tumbling windows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-
-
-def last_wins(df: DataFrame, keys: list[str], order: list) -> DataFrame:
-    """Engine upsert helper: newest-write-wins dedup by key (reference
-    S6/S7). ``order`` columns sort DESC; ties must be broken by a
-    unique column for determinism.
-
-    Scale: one shuffle on the key; at 100 TB prefer partitioning the
-    target table by the key's bucket so the window reuses the layout.
-    """
-    w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in order])
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+from ..etl.load import last_wins
 
 
 def q_last_wins_window(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -13,6 +13,15 @@ set on a 1000-executor cluster against ~100 TB:
   to the host's cores (``SPARK_GRAFT_CPUS``). The session reads nothing
   about the data it will process; ``spark.local.dir`` is left to
   ``SPARK_LOCAL_DIRS`` or Spark's default.
+- Python workers start from :mod:`.worker_daemon` (the static conf
+  ``spark.python.daemon.module``): ``pyspark.daemon`` with zipimport's
+  per-task re-read of every archive directory on the worker's path made
+  conditional on the archive having changed. Before CPython 3.13 that
+  re-read dominates short Python tasks (the RPC source, the catalog's
+  pandas UDFs); on 3.13 and later the daemon changes nothing.
+  The package's root goes on ``PYTHONPATH`` before the JVM starts, so
+  the workers find the daemon (and the engine's data sources) from any
+  working directory.
 """
 
 from __future__ import annotations
@@ -20,6 +29,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _host_mem_bytes() -> int | None:
@@ -67,6 +78,10 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
         shuffle_partitions = max(int(cpus), 8)
+    # read by the JVM and the workers it starts, so set before it starts
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_ROOT not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([*paths, _PACKAGE_ROOT])
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -82,6 +97,7 @@ def get_spark(
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", "block_data_fetcher_spark.worker_daemon")
         # local[N] runs driver+executors in ONE JVM: the heap must hold
         # shuffle/join working sets for every concurrent task. 12g OOMed
         # at the sf10 proof (60M-row SMJ after a 220-query session);

@@ -230,6 +230,15 @@ def _fetch_block_rpc(url: str, slot: int, timeout: int = 30):
         raise
 
 
+def finalized_slot(url: str, max_retries: int, retry_delay: float) -> int:
+    """The chain head less :data:`FINALITY_LAG`: the newest slot the
+    reference's loop processes (src/main.rs:93-98)."""
+    head = _with_retry(
+        lambda: _rpc_call(url, "getSlot", [], 30), max_retries, retry_delay
+    )
+    return head - FINALITY_LAG
+
+
 class _SlotRangePartition(InputPartition):
     def __init__(self, start: int, end: int):
         self.start = start
@@ -296,14 +305,8 @@ class SolanaRpcStreamReader(_SlotFetcher, SimpleDataSourceStreamReader):
         if self.mode == "offline":
             # offline head advances each poll — a deterministic chain
             self._offline_head += 3
-            head = self._offline_head
-        else:
-            head = _with_retry(
-                lambda: _rpc_call(self.url, "getSlot", [], 30),
-                self.max_retries,
-                self.retry_delay,
-            )
-        return head - FINALITY_LAG
+            return self._offline_head - FINALITY_LAG
+        return finalized_slot(self.url, self.max_retries, self.retry_delay)
 
     def read(self, start: dict):
         first = start["slot"]

@@ -68,12 +68,57 @@ def test_parse_args_flags():
         parse_args(["-e", "5", "-n", "2"])
 
 
+def _expected_report(slots) -> dict:
+    """The A1/A3 report of a run over ``slots`` of the offline source,
+    counted from the synthetic blocks themselves."""
+    import json
+
+    from block_data_fetcher_spark.sources.rpc import synthetic_block
+
+    txs = [json.loads(t) for s in slots for t in json.loads(synthetic_block(s))["transactions"]]
+    ok = sum(t["meta"]["err"] is None for t in txs)
+    return {
+        "blocks_loaded": len(slots),
+        "transactions_loaded": len(txs),
+        "total_transactions": len(txs),
+        "successful_transactions": ok,
+        "failed_transactions": len(txs) - ok,
+        "total_fees": sum(t["meta"]["fee"] for t in txs),
+        "success_rate": round(ok * 100.0 / len(txs), 2),
+    }
+
+
 def test_cli_end_to_end_offline(spark, tmp_path):
     report = run(_args(start_slot=100, num_blocks=5, output=str(tmp_path / "o")))
-    assert report["blocks_loaded"] == 5
-    assert report["transactions_loaded"] == 20
-    assert report["total_transactions"] == 20
-    assert 0 <= report["success_rate"] <= 100
+    assert report == _expected_report(range(100, 105))
     # idempotent re-run (ST6): same counts
     report2 = run(_args(start_slot=100, num_blocks=5, output=str(tmp_path / "o")))
-    assert report2["transactions_loaded"] == 20
+    assert report2 == report
+    assert spark.read.parquet(str(tmp_path / "o" / "transactions")).count() == 20
+
+
+def test_cli_report_is_run_scoped(spark, tmp_path):
+    """A run into an existing store reports its own slots, not the
+    store: 4 slots after a 40-slot load report 4 blocks."""
+    out = str(tmp_path / "o")
+    assert run(_args(start_slot=100, num_blocks=40, output=out)) == _expected_report(range(100, 140))
+    report = run(_args(start_slot=140, num_blocks=4, output=out))
+    assert report == _expected_report(range(140, 144))
+    assert report["blocks_loaded"] == 4
+    assert spark.read.parquet(f"{out}/blocks").count() == 44
+
+
+def test_cli_batch_run_job_count(spark, tmp_path):
+    """One offline batch run into an empty store runs 5 Spark jobs:
+    one fetches and parses each slot into the cache, then two per table
+    (the last-wins shuffle and the write), the transactions ones from
+    the writer thread in the caller's job group. No job reads the
+    store back for the report."""
+    sc = spark.sparkContext
+    sc.setJobGroup("cli-job-count", "one batch cli.run")
+    try:
+        run(_args(start_slot=100, num_blocks=40, output=str(tmp_path / "o")))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("cli-job-count")) == 5

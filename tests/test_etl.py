@@ -297,18 +297,24 @@ def test_account_activity_rollup(spark):
         assert 0 <= r.as_signer_count <= r.transaction_count
 
 
-def test_observed_extraction_metrics(spark):
-    """A5 progress counters ride the extraction job via observe()."""
-    from block_data_fetcher_spark.etl.extract import observed_transactions
+def test_load_blocks_reports_its_own_batch(spark, tmp_path):
+    """A5 counters ride the load's own writes: ``load_blocks`` returns
+    the batch's blocks, transactions, successes and fees, and a
+    re-load into the same store reports the batch again, not the
+    store."""
+    from block_data_fetcher_spark.etl.load import load_blocks
 
     raw = spark.createDataFrame(_block_fixture(), "slot long, raw string")
-    txs, obs = observed_transactions(raw)
-    n = txs.count()
-    got = obs.get
-    assert n == 2
-    assert got["total_transactions"] == 2
-    assert got["successful_transactions"] == 1
-    assert got["total_fees"] == 15000
+    want = {
+        "blocks_loaded": 1,
+        "transactions_loaded": 2,
+        "successful_transactions": 1,
+        "total_fees": 15000,
+    }
+    out = str(tmp_path / "o")
+    assert load_blocks(raw, out) == want
+    assert load_blocks(raw, out) == want
+    assert spark.read.parquet(f"{out}/transactions").count() == 2
 
 
 def test_corrupt_records_skipped_not_fatal(spark):
@@ -385,7 +391,7 @@ def test_extract_transactions_schema_is_pinned(spark):
 def _expected_tx_row(slot: int, index: int, tx: dict) -> tuple:
     """All 15 extracted columns of one generated tx, computed in plain
     Python from the generator's own rules and the program registry."""
-    from block_data_fetcher_spark.operators.classify import PROGRAM_REGISTRY_ROWS
+    from block_data_fetcher_spark.etl.transform import PROGRAM_REGISTRY_ROWS
     from perfbench import chain
 
     names = {pid: name for pid, name, _ in PROGRAM_REGISTRY_ROWS}

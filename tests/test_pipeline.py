@@ -897,6 +897,20 @@ def test_cli_continuous_resumes_after_restart(rpc_registered, spark, rpc_stub, t
     assert txs.count() == txs.select("signature").distinct().count() == 4 * len(slots)
 
 
+def test_cli_continuous_starts_at_finalized_head(rpc_registered, spark, rpc_stub, tmp_path):
+    """``--continuous`` with ``--rpc-url`` and no ``-s`` starts at the
+    finalized head (getSlot − FINALITY_LAG), not at slot 0."""
+    from block_data_fetcher_spark.sources.rpc import FINALITY_LAG
+
+    out = str(tmp_path / "c")
+    final = rpc_stub.HEAD - FINALITY_LAG
+    argv = ["-b", "3", "-r", rpc_stub.url, "-o", out, "-c", "--retry-delay", "0"]
+    committed, errors = _continuous_until(spark, argv, final + 1)
+    assert not errors and committed == final + 1
+    assert {s for s in rpc_stub.hits if isinstance(s, int)} == {final}
+    assert [r.slot for r in spark.read.parquet(f"{out}/blocks").collect()] == [final]
+
+
 def test_stream_reader_caps_batches_and_rereads_ranges():
     """Each micro-batch holds at most ``batch_size`` slots, and
     ``readBetweenOffsets`` re-reads exactly ``[start, end)``."""

@@ -36,7 +36,7 @@ _row = st.tuples(
 @given(rows=st.lists(_row, min_size=1, max_size=40))
 @_settings
 def test_last_wins_algebra(spark, rows):
-    from block_data_fetcher_spark.operators.windows import last_wins
+    from block_data_fetcher_spark.etl.load import last_wins
 
     df = spark.createDataFrame(
         [(k, v, x, i) for i, (k, v, x) in enumerate(rows)],

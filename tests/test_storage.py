@@ -352,7 +352,7 @@ def test_jdbc_upsert_statement_executes_against_duckdb(spark):
     import duckdb
 
     from block_data_fetcher_spark.etl.jdbc import jdbc_upsert
-    from block_data_fetcher_spark.operators.windows import last_wins
+    from block_data_fetcher_spark.etl.load import last_wins
 
     con = duckdb.connect()
     con.execute(

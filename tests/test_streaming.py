@@ -469,7 +469,7 @@ def test_stream_upsert_restart_from_checkpoint_exactly_once(spark, sf_dir, tmp_p
     from pyspark.sql import functions as F
 
     from block_data_fetcher_spark.etl.load import stream_upsert
-    from block_data_fetcher_spark.operators.windows import last_wins
+    from block_data_fetcher_spark.etl.load import last_wins
     from block_data_fetcher_spark.streaming.jobs import _EVENTS_RAW_SCHEMA
 
     ev = table(spark, sf_dir, "events")
