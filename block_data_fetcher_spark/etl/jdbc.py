@@ -11,12 +11,13 @@ issues ONE set-based upsert statement staging→target on the driver.
 Step 3 touches no row data over py4j; all bulk movement is executor
 JDBC.
 
-Offline testability (no database in this environment): the SQL
-generators are pure functions, and :func:`jdbc_upsert` takes
-injectable ``write_staging`` / ``run_sql`` callables — unit tests
-assert the deduplicated frame, the staging write, and the exact
-statement; production callers omit them to get ``df.write.jdbc`` and
-a driver-side ``java.sql.DriverManager`` connection.
+Testability without a JDBC driver jar: the SQL generators are pure
+functions, and :func:`jdbc_upsert` takes injectable ``write_staging`` /
+``run_sql`` callables — unit tests assert the deduplicated frame, the
+staging write, and the exact statement, and ``tests/test_jdbc_pg.py``
+runs the generated statement against a live PostgreSQL through
+``psql``; production callers omit them to get ``df.write.jdbc`` and a
+driver-side ``java.sql.DriverManager`` connection.
 """
 
 from __future__ import annotations
@@ -131,31 +132,3 @@ def jdbc_upsert(
     stmt = gen(table, columns, keys, staging)
     run_sql(stmt)
     return stmt
-
-
-def stream_jdbc_upsert(
-    stream_df: DataFrame,
-    url: str,
-    table: str,
-    keys: list[str],
-    order: list[str],
-    properties: dict[str, str] | None = None,
-    *,
-    checkpoint: str,
-    **kwargs,
-):
-    """Streaming twin: foreachBatch → :func:`jdbc_upsert` per
-    micro-batch (the reference S8 per-batch transaction; exactly-once
-    by key across retries because the upsert is idempotent). The
-    caller owns ``checkpoint``: reusing it resumes from the committed
-    offsets."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        jdbc_upsert(batch_df, url, table, keys, order, properties, **kwargs)
-
-    return (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )

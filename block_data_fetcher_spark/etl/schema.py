@@ -59,38 +59,3 @@ BLOCK_JSON_SCHEMA = """
     blockHeight bigint,
     transactions array<string>
 """
-
-BLOCKS_COLUMNS = [
-    "slot",
-    "blockhash",
-    "parent_slot",
-    "block_time",
-    "block_height",
-    "transaction_count",
-]
-
-TRANSACTIONS_COLUMNS = [
-    "signature",
-    "block_slot",
-    "transaction_index",
-    "success",
-    "fee",
-    "transaction_type",
-    "transaction_label",
-    "signer",
-    "num_accounts",
-    "num_instructions",
-    "amount",
-    "token",
-    "from_address",
-    "to_address",
-]
-
-INSTRUCTIONS_COLUMNS = [
-    "transaction_signature",
-    "instruction_index",
-    "program_id",
-    "program_name",
-    "instruction_type",
-    "accounts",
-]

@@ -4,9 +4,7 @@
 Spark-first design: the 20-ish-row program registry becomes a literal
 ``create_map`` (the distributed analog of the reference's in-memory
 HashMap, ``transform.rs:20-31``) so every lookup is a map access inside
-codegen — zero shuffle, zero join for the static registry. A
-DataFrame-registry variant (broadcast join) is provided for
-dynamically loaded registries.
+codegen — zero shuffle, zero join.
 
 The priority rule chain (``transform.rs:82-114``) is an ORDERED
 ``when()`` chain — order encodes precedence:
@@ -18,12 +16,12 @@ from __future__ import annotations
 
 from itertools import chain
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # The reference's registry seed rows (program_id → name, type) —
 # migrations/20251023000005_create_program_registry.sql:15-45 — become a
-# literal map here (and a broadcastable dim for the dynamic path).
+# literal map here.
 PROGRAM_REGISTRY_ROWS = [
     # (program_id, program_name, program_type)
     ("11111111111111111111111111111111", "System Program", "System"),
@@ -108,39 +106,3 @@ def label_transaction(program_ids: Column, transaction_type: Column) -> Column:
         F.size(names) > 0,
         F.concat(transaction_type, F.lit(" ("), F.concat_ws(", ", names), F.lit(")")),
     ).otherwise(transaction_type)
-
-
-def registry_df(spark) -> DataFrame:
-    """Registry as a DataFrame for the dynamic path (reference loads it
-    from Postgres at startup, ``src/db/mod.rs:47-56``)."""
-    return spark.createDataFrame(
-        PROGRAM_REGISTRY_ROWS, "program_id string, program_name string, program_type string"
-    )
-
-
-def classify_with_registry_join(
-    tx: DataFrame, registry: DataFrame, id_col: str = "program_ids"
-) -> DataFrame:
-    """Broadcast-join variant for a DYNAMIC registry: explode the tx's
-    program ids, broadcast-join the registry dim, re-aggregate the type
-    set, then apply the same ordered rule chain.
-
-    Scale: the registry is always broadcast-sized (dim table); the
-    explode+groupBy shuffles on the natural key `signature` once.
-    Prefer the literal-map path for static registries — zero shuffle."""
-    exploded = tx.select("signature", F.explode_outer(id_col).alias("program_id"))
-    joined = exploded.join(F.broadcast(registry), "program_id", "left")
-    per_tx = joined.groupBy("signature").agg(
-        F.collect_list("program_type").alias("types"),
-        F.count("program_id").alias("n_programs"),
-    )
-    has = lambda t: F.array_contains(F.col("types"), t)  # noqa: E731
-    cls = (
-        F.when(has("DEX"), DEX_SWAP)
-        .when(has("NFT"), NFT_MINT)
-        .when(has("Token"), SPL_TOKEN_TRANSFER)
-        .when((F.col("n_programs") == 1) & has("System"), SOL_TRANSFER)
-        .when(has("System"), PROGRAM_INTERACTION)
-        .otherwise(UNKNOWN)
-    )
-    return per_tx.select("signature", cls.alias("transaction_type"))

@@ -6,8 +6,9 @@ the set of programs it touches (DEX > NFT > Token > SOL-transfer >
 ProgramInteraction > Unknown), resolving program ids through a 21-row
 registry HashMap. Spark-first restatement:
 
-- the registry is a broadcast dimension (the engine's
-  :func:`..etl.transform.registry_df` builds it as a literal DataFrame);
+- the registry is a literal ``create_map`` (the engine's
+  :func:`..etl.transform.type_map`), so a lookup is a map access inside
+  codegen, with no join;
 - the rule chain is an ORDERED ``when().when().otherwise()`` —
   Catalyst preserves evaluation order, which encodes the precedence
   exactly (SURVEY §7 risk list: a join-based impl must not reorder);

@@ -63,11 +63,6 @@ def uses_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in formatted_plan(df)
 
 
-def uses_sort_merge_or_shuffled_hash(df: DataFrame) -> bool:
-    plan = formatted_plan(df)
-    return "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-
-
 def has_partial_aggregate(df: DataFrame) -> bool:
     """Map-side combine present: HashAggregate appears in both partial
     and final modes (keys of the final agg arrive pre-reduced)."""
@@ -93,10 +88,3 @@ def count_exchanges(df: DataFrame) -> int:
         for line in plan.splitlines()
         if re.match(r"^\(\d+\) Exchange\s*$", line.strip())
     )
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    """WholeStageCodegen spans — wider is better (fewer interpreter
-    boundaries)."""
-    plan = formatted_plan(df)
-    return plan.count("WholeStageCodegen")

@@ -20,11 +20,7 @@ from block_data_fetcher_spark.etl.parsers import (
     parse_token_transfer,
 )
 from block_data_fetcher_spark.etl.schema import TX_JSON_SCHEMA
-from block_data_fetcher_spark.etl.transform import (
-    classify_transaction,
-    classify_with_registry_join,
-    registry_df,
-)
+from block_data_fetcher_spark.etl.transform import classify_transaction
 
 SYSTEM_ID = "11111111111111111111111111111111"
 TOKEN_ID = "TokenkegQfeZyiNwAJbNbGKPFXCWuBvf9Ss623VQ5DA"
@@ -158,31 +154,6 @@ def test_classify_precedence(spark, ids, expected):
     df = spark.createDataFrame([(ids,)], "program_ids array<string>")
     row = df.select(classify_transaction(F.col("program_ids")).alias("t")).head()
     assert row.t == expected
-
-
-def test_classify_registry_join_matches_literal_map(spark):
-    """Dynamic (broadcast-join) classifier must agree with the
-    literal-map classifier on every precedence case."""
-    cases = [
-        ("t1", [DEX_ID, TOKEN_ID]),
-        ("t2", [NFT_ID]),
-        ("t3", [TOKEN_ID, SYSTEM_ID]),
-        ("t4", [SYSTEM_ID]),
-        ("t5", [SYSTEM_ID, "Unknown111"]),
-        ("t6", ["Unknown111"]),
-    ]
-    df = spark.createDataFrame(cases, "signature string, program_ids array<string>")
-    lit = {
-        r.signature: r.t
-        for r in df.select(
-            "signature", classify_transaction(F.col("program_ids")).alias("t")
-        ).collect()
-    }
-    joined = {
-        r.signature: r.transaction_type
-        for r in classify_with_registry_join(df, registry_df(spark)).collect()
-    }
-    assert lit == joined
 
 
 # --- end-to-end extraction (reference extract.rs paths) --------------------

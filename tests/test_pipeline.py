@@ -793,6 +793,26 @@ def test_cli_fetches_each_slot_once(rpc_registered, rpc_stub, tmp_path):
     assert report["transactions_loaded"] == 36
 
 
+def test_cli_run_of_only_skipped_slots(rpc_registered, spark, rpc_stub, tmp_path):
+    """A run whose every slot is skipped (JSON-RPC -32007 / -32009)
+    reports zeros and leaves both tables readable and empty; the next
+    run into the same store loads as usual."""
+    from block_data_fetcher_spark.cli import parse_args, run
+
+    out = str(tmp_path / "o")
+
+    def cli(start):
+        return run(parse_args(["-s", str(start), "-n", "2", "-r", rpc_stub.url, "-o", out]))
+
+    report = cli(111)
+    assert {k: report[k] for k in ("blocks_loaded", "transactions_loaded", "total_fees", "success_rate")} == {
+        "blocks_loaded": 0, "transactions_loaded": 0, "total_fees": 0, "success_rate": 0.0
+    }
+    assert [spark.read.parquet(f"{out}/{t}").count() for t in ("blocks", "transactions")] == [0, 0]
+    report = cli(116)
+    assert (report["blocks_loaded"], report["transactions_loaded"]) == (2, 8)
+
+
 def _committed_slot(q) -> int:
     """One past the last slot a finished micro-batch of ``q`` committed
     (the source's offset arrives as a dict repr)."""

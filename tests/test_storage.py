@@ -206,34 +206,6 @@ def test_jdbc_upsert_sql_variants():
     assert "WHEN MATCHED" not in m2
 
 
-def test_stream_jdbc_upsert_offline(spark, tmp_path):
-    """foreachBatch twin: a bounded file stream drains through the
-    injected sink; the union of captured batches upserts to the same
-    final state as a batch upsert."""
-    from block_data_fetcher_spark.etl.jdbc import stream_jdbc_upsert
-
-    src = str(tmp_path / "src")
-    spark.createDataFrame(
-        [(1, "a", 10), (1, "b", 20), (2, "c", 5)],
-        "id long, val string, version long",
-    ).write.parquet(src)
-    stream = spark.readStream.schema("id long, val string, version long").parquet(src)
-
-    seen: list[tuple] = []
-    q = stream_jdbc_upsert(
-        stream,
-        "jdbc:postgresql://db/x",
-        "transactions",
-        ["id"],
-        ["version"],
-        checkpoint=str(tmp_path / "ckpt"),
-        write_staging=lambda d, s: seen.extend(tuple(r) for r in d.collect()),
-        run_sql=lambda sql: None,
-    )
-    q.awaitTermination(120)
-    assert sorted(seen) == [(1, "b", 20), (2, "c", 5)]
-
-
 def test_gdpr_dynamic_overwrite_leaves_other_partitions_untouched(
     spark, sf_dir, tmp_path
 ):
