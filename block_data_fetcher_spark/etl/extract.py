@@ -150,9 +150,12 @@ def extract_transactions(raw_blocks: DataFrame) -> DataFrame:
 def _transaction_stages(jvm) -> tuple[tuple, tuple, tuple, tuple]:
     """The columns of each :func:`transactions_from_parsed` select stage.
 
-    Building them takes ~3,000 py4j round trips (PySpark records the
-    call site of every Column call): ≈0.5 s on a 4-core host, about as
-    long as extracting 40 blocks of 200 txs. A Column is an unresolved
+    Building them takes 2,600–3,500 py4j round trips: ≈0.5 s on a
+    4-core host, about as long as extracting 40 blocks of 200 txs.
+    About half are PySpark recording the call site of each Column call
+    (``spark.python.sql.dataFrameDebugging.enabled``); with that off, a
+    build still takes 1,000–1,750 round trips, the Column calls
+    themselves. A Column is an unresolved
     expression, valid on any frame that has the names it reads, so the
     stages are built once per JVM (``jvm`` is only the cache key) and
     reused."""

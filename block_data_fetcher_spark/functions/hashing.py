@@ -336,7 +336,6 @@ def q_minhash_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 # every w=4 window, deduplicated. Let-bound ws → hs nesting: HOFs get
 # no codegen subexpression elimination, and ONE F.expr string avoids
 # the ~0.5 s/lambda py4j plan-build cost.
-_WINNOW_W = 4
 _WINNOW = """
 get(transform(array(split(text, ' ')), ws ->
   get(transform(array(
@@ -1125,13 +1124,7 @@ _SIG_COMPONENTS = ", ".join(
     f"list_min(list_transform(hs, h -> ({a} * h + {b}) % {P})) AS m{i}"
     for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
 )
-_BANDS = ", ".join(
-    f"(SELECT doc_id, {i} AS band_idx, m{i*2} AS h0, m{i*2+1} AS h1, sig FROM sig)"
-    for i in range(N_HASHES // BAND_ROWS)
-)
-_EST = (
-    "CAST(len(list_filter(range(1, 9), i -> a.sig[i] = b.sig[i])) AS DOUBLE) / 8"
-)
+
 
 def minhash_pairs_sql(src: str) -> str:
     """DuckDB SELECT producing (doc_a, doc_b, est_sim) MinHash+LSH

@@ -1911,7 +1911,6 @@ def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PATHS_LEN = 3
 PATHS_TOP = 10
 
 

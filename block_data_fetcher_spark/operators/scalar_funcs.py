@@ -10,6 +10,7 @@ reductions, weekday conventions).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -265,13 +266,12 @@ def q_grouped_agg_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     over 100 TB fails the first bound long before the second matters;
     both routes lead to q_quantile_merge. Pinned by
     tests/test_plans.py::test_grouped_agg_udf_group_cardinality."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    # functionType passed explicitly: the module's `from __future__
-    # import annotations` turns hints into strings, which the
-    # hint-based GROUPED_AGG inference can't resolve
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def weighted_lower_median(v, w):
+    # Series, Series -> scalar hints make it GROUPED_AGG; pandas_udf
+    # resolves the string hints against this module's `pd`
+    @pandas_udf("double")
+    def weighted_lower_median(v: pd.Series, w: pd.Series) -> float:
         import numpy as np
 
         order = np.lexsort((v.values,))

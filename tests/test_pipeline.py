@@ -917,6 +917,51 @@ def test_cli_continuous_resumes_after_restart(rpc_registered, spark, rpc_stub, t
     assert txs.count() == txs.select("signature").distinct().count() == 4 * len(slots)
 
 
+def test_cli_continuous_converges_after_half_committed_batch(
+    rpc_registered, spark, rpc_stub, tmp_path, monkeypatch
+):
+    """A --continuous micro-batch whose ``transactions`` upsert commits
+    but whose ``blocks`` upsert fails leaves the two tables out of step.
+    The restart re-runs that batch, and the tables agree again: every
+    tx slot has its block, each block's ``transaction_count`` is its tx
+    rows, and no signature lands twice."""
+    from block_data_fetcher_spark.etl import load
+    from block_data_fetcher_spark.sources.rpc import FINALITY_LAG
+
+    out = str(tmp_path / "c")
+    argv = ["-s", "100", "-b", "3", "-r", rpc_stub.url, "-o", out, "-c", "--retry-delay", "0"]
+    final = rpc_stub.HEAD - FINALITY_LAG + 1
+    real_upsert = load.upsert_parquet
+    block_upserts = []
+
+    def fail_third_blocks_upsert(spark_, df, path, *args):
+        if path.endswith("/blocks"):
+            block_upserts.append(path)
+            if len(block_upserts) == 3:
+                raise RuntimeError("injected blocks failure")
+        return real_upsert(spark_, df, path, *args)
+
+    monkeypatch.setattr(load, "upsert_parquet", fail_third_blocks_upsert)
+    committed, errors = _continuous_until(spark, argv, final)
+    assert errors and committed == 106  # batches [100, 103) and [103, 106)
+
+    def slots(table, column):
+        return {r[0] for r in spark.read.parquet(f"{out}/{table}").select(column).distinct().collect()}
+
+    # the third batch's transactions committed, its blocks did not
+    assert slots("transactions", "block_slot") == set(range(100, 109)) - {rpc_stub.NULL_SLOT}
+    assert slots("blocks", "slot") == set(range(100, 106))
+
+    monkeypatch.setattr(load, "upsert_parquet", real_upsert)
+    committed, errors = _continuous_until(spark, argv, final)
+    assert not errors and committed == final
+    blocks = {r.slot: r.transaction_count for r in spark.read.parquet(f"{out}/blocks").collect()}
+    txs = spark.read.parquet(f"{out}/transactions")
+    assert set(blocks) == slots("transactions", "block_slot") == set(range(100, final)) - {rpc_stub.NULL_SLOT}
+    assert blocks == {r.block_slot: r["count"] for r in txs.groupBy("block_slot").count().collect()}
+    assert txs.count() == txs.select("signature").distinct().count()
+
+
 def test_cli_continuous_starts_at_finalized_head(rpc_registered, spark, rpc_stub, tmp_path):
     """``--continuous`` with ``--rpc-url`` and no ``-s`` starts at the
     finalized head (getSlot − FINALITY_LAG), not at slot 0."""

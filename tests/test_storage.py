@@ -154,58 +154,6 @@ def test_zorder_layout_prunes_both_dimensions(spark, sf_dir, tmp_path):
     )
 
 
-def test_jdbc_upsert_offline(spark):
-    """The production Postgres sink path (reference load.rs:154-290),
-    exercised offline: injected staging-writer and SQL-runner capture
-    what would hit the database — the deduplicated last-wins frame,
-    the staging table name, and ONE set-based upsert statement."""
-    from block_data_fetcher_spark.etl.jdbc import jdbc_upsert
-
-    df = spark.createDataFrame(
-        [(1, "a", 10), (1, "b", 20), (2, "c", 5)],
-        "id long, val string, version long",
-    )
-    captured: dict = {}
-
-    def ws(d, staging):
-        captured["rows"] = sorted(tuple(r) for r in d.collect())
-        captured["staging"] = staging
-
-    stmts: list[str] = []
-    stmt = jdbc_upsert(
-        df,
-        "jdbc:postgresql://db/x",
-        "transactions",
-        ["id"],
-        ["version"],
-        write_staging=ws,
-        run_sql=stmts.append,
-    )
-    # newest version wins within the batch
-    assert captured["rows"] == [(1, "b", 20), (2, "c", 5)]
-    assert captured["staging"] == "transactions_staging"
-    assert stmts == [stmt]
-    assert stmt == (
-        'INSERT INTO "transactions" ("id", "val", "version") '
-        'SELECT "id", "val", "version" FROM "transactions_staging" '
-        'ON CONFLICT ("id") '
-        'DO UPDATE SET "val" = EXCLUDED."val", "version" = EXCLUDED."version"'
-    )
-
-
-def test_jdbc_upsert_sql_variants():
-    from block_data_fetcher_spark.etl.jdbc import merge_sql, upsert_sql
-
-    # keys-only table degrades to DO NOTHING / insert-only MERGE
-    assert upsert_sql("t", ["k"], ["k"], "s").endswith("DO NOTHING")
-    m = merge_sql("t", ["k", "v"], ["k"], "s")
-    assert 'MERGE INTO "t" t USING "s" s ON t."k" = s."k"' in m
-    assert 'WHEN MATCHED THEN UPDATE SET t."v" = s."v"' in m
-    assert 'WHEN NOT MATCHED THEN INSERT ("k", "v") VALUES (s."k", s."v")' in m
-    m2 = merge_sql("t", ["k"], ["k"], "s")
-    assert "WHEN MATCHED" not in m2
-
-
 def test_gdpr_dynamic_overwrite_leaves_other_partitions_untouched(
     spark, sf_dir, tmp_path
 ):
@@ -310,70 +258,6 @@ def test_gdpr_erasure_wholly_doomed_partition_is_deleted(spark, sf_dir, tmp_path
     assert back.where(F.col("event_date") == F.lit(partial)).count() == want_partial
     want_rest = ev.where(~F.col("event_date").isin([whole, partial])).count()
     assert back.where(~F.col("event_date").isin([whole, partial])).count() == want_rest
-
-
-def test_jdbc_upsert_statement_executes_against_duckdb(spark):
-    """The generated ON CONFLICT statement is EXECUTED, not just
-    string-asserted (round-3 advice): DuckDB speaks the same
-    INSERT ... ON CONFLICT (k) DO UPDATE SET c = EXCLUDED.c dialect,
-    so it stands in for Postgres. The round-trip must equal the
-    engine's own last_wins over existing ∪ batch — including an
-    intra-batch duplicate key, which would make a non-deduplicated
-    INSERT..SELECT fail outright (ON CONFLICT cannot update the same
-    row twice)."""
-    import duckdb
-
-    from block_data_fetcher_spark.etl.jdbc import jdbc_upsert
-    from block_data_fetcher_spark.etl.load import last_wins
-
-    con = duckdb.connect()
-    con.execute(
-        'CREATE TABLE "transactions" '
-        '("id" BIGINT PRIMARY KEY, "label" VARCHAR, "version" BIGINT)'
-    )
-    existing = [(1, "old-a", 10), (3, "keep", 7)]
-    con.executemany('INSERT INTO "transactions" VALUES (?, ?, ?)', existing)
-
-    batch = spark.createDataFrame(
-        [
-            (1, "new-a", 20),     # conflict with existing → update
-            (2, "first-b", 5),    # intra-batch dup key...
-            (2, "second-b", 6),   # ...higher version wins in dedup
-        ],
-        "id long, label string, version long",
-    )
-
-    def write_staging(df, staging):
-        pdf = df.toPandas()
-        con.register("staging_view", pdf)
-        con.execute(
-            f'CREATE OR REPLACE TABLE "{staging}" AS SELECT * FROM staging_view'
-        )
-
-    stmt = jdbc_upsert(
-        batch,
-        "jdbc:postgresql://db/x",
-        "transactions",
-        ["id"],
-        ["version"],
-        write_staging=write_staging,
-        run_sql=lambda sql: con.execute(sql),
-    )
-    assert "ON CONFLICT" in stmt
-    got = sorted(
-        tuple(r)
-        for r in con.execute(
-            'SELECT "id", "label", "version" FROM "transactions"'
-        ).fetchall()
-    )
-    ex_df = spark.createDataFrame(existing, "id long, label string, version long")
-    want = sorted(
-        tuple(r)
-        for r in last_wins(
-            ex_df.unionByName(batch), ["id"], ["version"]
-        ).collect()
-    )
-    assert got == want == [(1, "new-a", 20), (2, "second-b", 6), (3, "keep", 7)]
 
 
 def test_time_travel_cow_reuses_unchanged_bucket_files(spark, sf_dir):
