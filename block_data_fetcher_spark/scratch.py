@@ -16,10 +16,12 @@ prefixes (``s3://bucket/stage/<applicationId>/...``) are how concurrent
 pipelines share one warehouse bucket without clobbering each other's
 in-flight files.
 
-Lifecycle: the run's scratch root is removed at interpreter exit
-(``atexit``), and :func:`clear_scratch` lets a long bench session drop
-completed queries' output between queries (the sf100 ENOSPC lesson —
-ten storage-family queries each leave an events-sized table behind).
+Lifecycle: every ephemeral dir the catalog makes — sink tables, the
+similarity caches, and the stream sinks and checkpoints of
+:mod:`.streaming.jobs` — lives under the run's scratch root. The root
+is removed at interpreter exit (``atexit``), :func:`clear_scratch`
+removes it on demand, and :func:`sweep_stale` reclaims the roots a
+killed process left behind.
 """
 
 from __future__ import annotations
@@ -72,50 +74,10 @@ def scratch_dir(spark: SparkSession, *parts: str) -> str:
     return os.path.join(root, *parts)
 
 
-def clear_scratch(
-    spark: SparkSession, keep_substr: tuple[str, ...] = ()
-) -> None:
-    """Remove this run's scratch root NOW (between bench queries, after
-    the previous query's result has been fully drained).  Only touches
-    the caller's own run id — concurrent sessions are unaffected.
-
-    ``keep_substr``: path fragments to SPARE (e.g. ``kmeans_assign`` —
-    the materialize-once caches the similarity family shares; dropping
-    them under disk pressure is legal but forces an expensive retrain,
-    while the storage-family sink tables they sit next to are pure
-    dead weight once their query has been drained)."""
-    root = scratch_root(spark)
-    if not keep_substr:
-        shutil.rmtree(root, ignore_errors=True)
-        return
-    _selective_rm(root, keep_substr)
-
-
-def _selective_rm(path: str, keep_substr: tuple[str, ...]) -> bool:
-    """Delete everything under ``path`` except entries whose path
-    contains a spared fragment; prunes emptied directories. Returns
-    True iff ``path`` was fully removed."""
-    if any(s in path for s in keep_substr):
-        return False
-    if not os.path.isdir(path) or os.path.islink(path):
-        try:
-            os.remove(path)
-            return True
-        except OSError:
-            return False
-    all_gone = True
-    try:
-        children = os.listdir(path)
-    except OSError:
-        return False
-    for child in children:
-        all_gone &= _selective_rm(os.path.join(path, child), keep_substr)
-    if all_gone:
-        try:
-            os.rmdir(path)
-        except OSError:
-            return False
-    return all_gone
+def clear_scratch(spark: SparkSession) -> None:
+    """Remove this run's scratch root now. Only touches the caller's
+    own run id — concurrent sessions are unaffected."""
+    shutil.rmtree(scratch_root(spark), ignore_errors=True)
 
 
 def sweep_stale(max_age_hours: float = 24.0) -> int:

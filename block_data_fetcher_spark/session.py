@@ -10,9 +10,9 @@ set on a 1000-executor cluster against ~100 TB:
 - Arrow enabled — any Pandas-UDF path (multimodal decode) is
   Arrow-batched, never row-at-a-time pickling.
 - shuffle partitions and AQE's initial shuffle partition count sized
-  to the host's cores (``SPARK_GRAFT_CPUS``). The session reads nothing
-  about the data it will process; ``spark.local.dir`` is left to
-  ``SPARK_LOCAL_DIRS`` or Spark's default.
+  to the host's cores (``SPARK_GRAFT_CPUS``, else ``os.cpu_count()``).
+  The session reads nothing about the data it will process;
+  ``spark.local.dir`` is left to ``SPARK_LOCAL_DIRS`` or Spark's default.
 - Python workers start from :mod:`.worker_daemon` (the static conf
   ``spark.python.daemon.module``): ``pyspark.daemon`` with zipimport's
   per-task re-read of every archive directory on the worker's path made
@@ -75,7 +75,7 @@ def get_spark(
     app_name: str = "block-data-fetcher-spark",
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     if shuffle_partitions is None:
         shuffle_partitions = max(int(cpus), 8)
     # read by the JVM and the workers it starts, so set before it starts

@@ -47,6 +47,8 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
+from ..scratch import scratch_dir
+
 # Explicit schema — streaming file sources require one; never inference
 # in production paths (SURVEY §1.3). The fixture's ts is parquet
 # TIMESTAMP(MICROS) with no zone → TIMESTAMP_NTZ (naive micros), the
@@ -99,8 +101,6 @@ def _split_events_source(spark: SparkSession, sf_dir: str) -> str:
     split-reading stream in a bench session)."""
     import re
     import time
-
-    from ..scratch import scratch_dir
 
     src = os.path.join(sf_dir, "events.parquet")
     n = _split_slices(_source_bytes(sf_dir) or 0)
@@ -243,36 +243,12 @@ def _state_provider(
     return _PROVIDER_ROCKSDB
 
 
-# Temp sink/checkpoint dirs created by this process — removed at
-# interpreter exit (ADVICE r9: mkdtemp dirs accumulated for the life of
-# the box) and clearable between bench queries via clear_stream_scratch.
-_STREAM_SCRATCH: list[str] = []
-_ATEXIT_ARMED = False
-
-
-def _mkdtemp(prefix: str) -> str:
-    """tempfile.mkdtemp (per-process unique — already concurrency-safe)
-    plus lifecycle tracking so stream sinks and checkpoints don't leak."""
-    global _ATEXIT_ARMED
-    d = tempfile.mkdtemp(prefix=prefix)
-    _STREAM_SCRATCH.append(d)
-    if not _ATEXIT_ARMED:
-        import atexit
-
-        atexit.register(clear_stream_scratch)
-        _ATEXIT_ARMED = True
-    return d
-
-
-def clear_stream_scratch() -> None:
-    """Remove every sink/checkpoint temp dir this process created.
-    Callers (bench.py between queries) must have fully drained any
-    DataFrame returned by a stream runner first — those frames scan
-    the sink path lazily."""
-    import shutil
-
-    while _STREAM_SCRATCH:
-        shutil.rmtree(_STREAM_SCRATCH.pop(), ignore_errors=True)
+def _mkdtemp(spark: SparkSession, prefix: str) -> str:
+    """A fresh sink/checkpoint dir under the run's scratch root, so it
+    shares that root's lifecycle (see :mod:`..scratch`)."""
+    parent = scratch_dir(spark, "stream")
+    os.makedirs(parent, exist_ok=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=parent)
 
 
 # Per-query progress stats from the LAST run in this process, keyed by
@@ -365,7 +341,7 @@ def _run_to_memory(
             df.writeStream.format("memory")
             .queryName(sink)
             .outputMode(mode)
-            .option("checkpointLocation", _mkdtemp(prefix=f"ckpt_{name}_"))
+            .option("checkpointLocation", _mkdtemp(spark, f"ckpt_{name}_"))
             .trigger(availableNow=True)
             .start()
         )
@@ -424,12 +400,12 @@ def _run_to_parquet(
         "spark.sql.streaming.stateStore.providerClass", provider
     )
     try:
-        out = _mkdtemp(prefix=f"sink_{name}_") + "/out"
+        out = _mkdtemp(spark, f"sink_{name}_") + "/out"
         q = (
             df.writeStream.format("parquet")
             .option("path", out)
             .option(
-                "checkpointLocation", _mkdtemp(prefix=f"ckpt_{name}_")
+                "checkpointLocation", _mkdtemp(spark, f"ckpt_{name}_")
             )
             .outputMode("append")
             .trigger(availableNow=True)
@@ -461,7 +437,7 @@ def _run_complete_to_parquet(
         "spark.sql.streaming.stateStore.providerClass", provider
     )
     try:
-        out = _mkdtemp(prefix=f"sink_{name}_") + "/out"
+        out = _mkdtemp(spark, f"sink_{name}_") + "/out"
 
         def write_snapshot(batch_df: DataFrame, _bid: int) -> None:
             batch_df.write.mode("overwrite").parquet(out)
@@ -469,7 +445,7 @@ def _run_complete_to_parquet(
         q = (
             df.writeStream.foreachBatch(write_snapshot)
             .option(
-                "checkpointLocation", _mkdtemp(prefix=f"ckpt_{name}_")
+                "checkpointLocation", _mkdtemp(spark, f"ckpt_{name}_")
             )
             .outputMode("complete")
             .trigger(availableNow=True)
@@ -866,13 +842,13 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_stream(spark, sf_dir).select(
         "user_id", "event_id", "event_type", "value", "ts"
     )
-    path = _mkdtemp(prefix="stream_upsert_") + "/latest_by_user"
+    path = _mkdtemp(spark, "stream_upsert_") + "/latest_by_user"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         q = stream_upsert(
             ev, path, keys=["user_id"], order=["ts", "event_id"],
-            checkpoint=_mkdtemp(prefix="ckpt_upsert_"),
+            checkpoint=_mkdtemp(spark, "ckpt_upsert_"),
         )
         _await_bounded(q, "stream_job")
     finally:
@@ -910,7 +886,7 @@ def q_stream_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..etl.load import merge_aggregate
 
     ev = events_stream(spark, sf_dir).select("event_type", "value")
-    path = _mkdtemp(prefix="stream_mergeagg_") + "/agg_by_type"
+    path = _mkdtemp(spark, "stream_mergeagg_") + "/agg_by_type"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
 
@@ -927,7 +903,7 @@ def q_stream_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = (
             ev.writeStream.foreachBatch(write_batch)
             .option(
-                "checkpointLocation", _mkdtemp(prefix="ckpt_mergeagg_")
+                "checkpointLocation", _mkdtemp(spark, "ckpt_mergeagg_")
             )
             .trigger(availableNow=True)
             .start()
@@ -974,13 +950,13 @@ def q_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("U"))
         .alias("op"),
     )
-    path = _mkdtemp(prefix="stream_cdc_") + "/cdc_snapshot"
+    path = _mkdtemp(spark, "stream_cdc_") + "/cdc_snapshot"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         q = stream_upsert(
             ev, path, keys=["key"], order=["ts", "event_id"],
-            checkpoint=_mkdtemp(prefix="ckpt_cdc_"),
+            checkpoint=_mkdtemp(spark, "ckpt_cdc_"),
         )
         _await_bounded(q, "stream_job")
     finally:
@@ -1033,7 +1009,7 @@ def q_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
-    root = _mkdtemp(prefix="stream_late_")
+    root = _mkdtemp(spark, "stream_late_")
     slices = {"a_ontime": 1_000_000_000, "b_merge": 1_000_000_100,
               "c_dropped": 1_000_000_200}
     # ONE partitioned write instead of a filtered write job per slice
@@ -1131,7 +1107,7 @@ def q_stream_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_stream(spark, sf_dir).select(
         "event_type", _qm_bin(F.col("value")).alias("bin")
     )
-    path = _mkdtemp(prefix="stream_quantile_") + "/hist_by_type"
+    path = _mkdtemp(spark, "stream_quantile_") + "/hist_by_type"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
 
@@ -1151,7 +1127,7 @@ def q_stream_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = (
             ev.writeStream.foreachBatch(write_batch)
             .option(
-                "checkpointLocation", _mkdtemp(prefix="ckpt_squant_")
+                "checkpointLocation", _mkdtemp(spark, "ckpt_squant_")
             )
             .trigger(availableNow=True)
             .start()
@@ -1218,7 +1194,7 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..etl.load import _atomic_swap
 
     ev = events_stream(spark, sf_dir).select("event_type", "user_id")
-    root = _mkdtemp(prefix="stream_hll_")
+    root = _mkdtemp(spark, "stream_hll_")
     path = root + "/hll_by_type"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
@@ -1243,7 +1219,7 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         q = (
             ev.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", _mkdtemp(prefix="ckpt_hll_"))
+            .option("checkpointLocation", _mkdtemp(spark, "ckpt_hll_"))
             .trigger(availableNow=True)
             .start()
         )

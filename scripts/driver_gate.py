@@ -109,13 +109,15 @@ def main() -> int:
         "--master",
         default=None,
         help="Spark master override, e.g. local-cluster[2,2,2048] for the "
-        "multi-node gate (VERDICT r9 item 2). Default: local[$SPARK_GRAFT_CPUS].",
+        "multi-node gate (VERDICT r9 item 2). Default: "
+        "local[$SPARK_GRAFT_CPUS], else one core per host CPU.",
     )
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
 
-    master = args.master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
+    master = args.master or f"local[{cpus}]"
     # Vanilla session, like the driver: no engine confs beyond what a
     # query sets for itself at read time — EXCEPT heap. The 1g default
     # driver heap is a HARNESS limit, not a query property: a 254-query

@@ -372,6 +372,29 @@ def test_session_sizes_initial_shuffle_from_cores_not_fixture(
                 spark.conf.set(k, v)
 
 
+def test_session_sizes_from_host_cpus_when_cpus_unset(spark, monkeypatch):
+    """With SPARK_GRAFT_CPUS unset, get_spark sizes the session from
+    os.cpu_count(), not from a fixed core count."""
+    from block_data_fetcher_spark.session import get_spark
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    keys = (
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+        "spark.sql.shuffle.partitions",
+    )
+    before = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        conf = get_spark().conf
+        assert conf.get(keys[0]) == str(os.cpu_count())
+        assert conf.get(keys[1]) == str(max(os.cpu_count(), 8))
+    finally:
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def test_spatial_grid_rejects_non_divisor_cell(spark, sf_dir):
     """ADVICE r6: a cell_deg that doesn't tile 360° evenly (e.g. 0.7)
     leaves a narrower seam cell at the anti-meridian that can miss

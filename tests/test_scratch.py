@@ -4,8 +4,8 @@ The demonstrated failure: two engine processes on one box (the judge's
 pytest racing the driver-gate replica) clobbered each other's fixed
 ``spark-warehouse/`` sink paths mid-read. These tests pin the fix —
 every sink path is keyed by a run id that differs across processes —
-plus the lifecycle pieces (stale sweep, stream temp-dir tracking, the
-empty-file-sink schema fallback).
+plus the lifecycle pieces (stale sweep, stream dirs under the scratch
+root, the empty-file-sink schema fallback).
 
 The end-to-end proof (two FULL driver-gate replicas running
 concurrently, both 253/253) is a round-close artifact
@@ -143,15 +143,49 @@ def test_sweep_stale_spares_fresh_runs(spark, monkeypatch, tmp_path):
     scratch.clear_scratch(spark)
 
 
-def test_stream_scratch_tracked_and_cleared():
+def test_stream_scratch_tracked_and_cleared(spark, tmp_path, monkeypatch):
+    """Stream sink and checkpoint dirs are made under the run's scratch
+    root, never loose in TMPDIR, and clear_scratch removes them."""
+    from block_data_fetcher_spark import scratch
     from block_data_fetcher_spark.streaming import jobs
 
-    d = jobs._mkdtemp("scratch_test_")
-    assert os.path.isdir(d)
-    assert d in jobs._STREAM_SCRATCH
-    jobs.clear_stream_scratch()
-    assert not os.path.exists(d)
-    assert not jobs._STREAM_SCRATCH
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    monkeypatch.setattr(tempfile, "tempdir", None)  # re-read TMPDIR
+    monkeypatch.setenv("BDF_RUN_ID", "stream_scratch")
+    dirs = [jobs._mkdtemp(spark, p) for p in ("ckpt_probe_", "sink_probe_")]
+    root = scratch.scratch_root(spark)
+    for d in dirs:
+        assert os.path.isdir(d) and d.startswith(root + os.sep)
+    assert os.listdir(tmp_path) == ["bdf-scratch"]
+    scratch.clear_scratch(spark)
+    assert not any(os.path.exists(d) for d in dirs)
+
+
+def test_sweep_stale_reclaims_orphaned_stream_checkpoint(
+    spark, tmp_path, monkeypatch
+):
+    """A stream checkpoint left by a killed run (no exit-time removal)
+    sits under that run's scratch root, so the next sweep_stale
+    reclaims it once it has aged past the cutoff."""
+    from block_data_fetcher_spark import scratch
+    from block_data_fetcher_spark.streaming import jobs
+
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    monkeypatch.setattr(tempfile, "tempdir", None)  # re-read TMPDIR
+    monkeypatch.setenv("BDF_RUN_ID", "killed_stream_run")
+    ckpt = jobs._mkdtemp(spark, "ckpt_probe_")
+    with open(os.path.join(ckpt, "metadata"), "w") as f:
+        f.write("{}")
+
+    stale = time.time() - 48 * 3600
+    for dirpath, _dirs, files in os.walk(tmp_path):
+        os.utime(dirpath, (stale, stale))
+        for f in files:
+            os.utime(os.path.join(dirpath, f), (stale, stale))
+
+    assert scratch.sweep_stale(max_age_hours=24) == 1
+    assert not os.path.exists(ckpt)
+    assert not os.path.exists(scratch.scratch_root(spark))
 
 
 def test_empty_stream_file_sink_returns_schema(spark):
@@ -199,31 +233,6 @@ def test_empty_stream_file_sink_returns_schema(spark):
     for f in out2.schema.fields:
         assert f.nullable, f
         assert f.metadata == {}, f
-
-
-def test_clear_scratch_selective_keep(spark, monkeypatch):
-    """Disk-pressure clearing spares the materialize-once caches: paths
-    containing a keep fragment survive (with their parents), everything
-    else under the run root is removed."""
-    from block_data_fetcher_spark import scratch
-
-    monkeypatch.setenv("BDF_RUN_ID", "selective_clear")
-    keep = scratch.scratch_dir(spark, "storage", "kmeans_assign_x")
-    drop1 = scratch.scratch_dir(spark, "storage", "bdf_lineitem_bkt")
-    drop2 = scratch.scratch_dir(spark, "formats", "events_csv")
-    for d in (keep, drop1, drop2):
-        os.makedirs(d, exist_ok=True)
-        open(os.path.join(d, "part-0.parquet"), "w").write("x")
-
-    scratch.clear_scratch(spark, keep_substr=("kmeans_assign",))
-    assert os.path.isfile(os.path.join(keep, "part-0.parquet"))
-    assert not os.path.exists(drop1)
-    assert not os.path.exists(drop2)
-    # formats/ was emptied and pruned entirely
-    assert not os.path.exists(os.path.dirname(drop2))
-
-    scratch.clear_scratch(spark)  # full clear removes the rest
-    assert not os.path.exists(scratch.scratch_root(spark))
 
 
 def test_shared_run_id_skips_atexit_reaping(spark, monkeypatch):

@@ -818,40 +818,49 @@ def test_stream_stream_join_multibatch_matches(spark, sf_dir, monkeypatch):
     scratch.clear_scratch(spark)
 
 
-def test_stream_dirs_land_under_tempdir(tmp_path, monkeypatch):
-    """Stream sink and checkpoint dirs are made under the OS temp dir
-    (``TMPDIR``), the one home for ephemeral dirs, and removed by
-    clear_stream_scratch (also registered for interpreter exit)."""
+def test_stream_dirs_land_under_tempdir(spark, sf_dir, tmp_path, monkeypatch):
+    """A file-sink stream's sink and checkpoint dirs are made under the
+    run's scratch root (itself under ``TMPDIR``), never loose in
+    ``TMPDIR``, and clear_scratch removes them with the root."""
     import os
     import tempfile
 
+    from block_data_fetcher_spark import scratch
     from block_data_fetcher_spark.streaming import jobs
 
     monkeypatch.setenv("TMPDIR", str(tmp_path))
     monkeypatch.setattr(tempfile, "tempdir", None)  # re-read TMPDIR
-    ckpt = jobs._mkdtemp("ckpt_probe_")
-    sink = jobs._mkdtemp("sink_probe_")
-    assert os.path.dirname(ckpt) == os.path.dirname(sink) == str(tmp_path)
-    jobs.clear_stream_scratch()
-    assert not os.listdir(tmp_path)
+    monkeypatch.setenv("BDF_RUN_ID", "stream_dirs_test")
+    jobs.q_stream_dedup(spark, sf_dir).count()
+    assert os.listdir(tmp_path) == ["bdf-scratch"]
+    stream = os.path.join(scratch.scratch_root(spark), "stream")
+    made = sorted(f.split("_stream_dedup_")[0] for f in os.listdir(stream))
+    assert made == ["ckpt", "sink"]
+    scratch.clear_scratch(spark)
+    assert not os.path.exists(stream)
 
 
 def test_stream_upsert_and_cdc_checkpoints_are_removed(spark, sf_dir, tmp_path, monkeypatch):
     """q_stream_upsert and q_stream_cdc make their checkpoints under the
-    temp dir as tracked stream scratch, so none outlives the process."""
+    run's scratch root, so clear_scratch (or the root's exit-time
+    removal) takes them with it."""
     import os
     import tempfile
 
+    from block_data_fetcher_spark import scratch
     from block_data_fetcher_spark.streaming import jobs
 
     monkeypatch.setenv("TMPDIR", str(tmp_path))
     monkeypatch.setattr(tempfile, "tempdir", None)  # re-read TMPDIR
+    monkeypatch.setenv("BDF_RUN_ID", "upsert_cdc_ckpt_test")
     jobs.q_stream_upsert(spark, sf_dir).count()
     jobs.q_stream_cdc(spark, sf_dir).count()
-    ckpts = [f for f in os.listdir(tmp_path) if f.startswith("ckpt_")]
-    assert len(ckpts) == 2
-    jobs.clear_stream_scratch()
     assert not [f for f in os.listdir(tmp_path) if f.startswith("ckpt_")]
+    stream = os.path.join(scratch.scratch_root(spark), "stream")
+    ckpts = [f for f in os.listdir(stream) if f.startswith("ckpt_")]
+    assert len(ckpts) == 2
+    scratch.clear_scratch(spark)
+    assert not os.path.exists(stream)
 
 
 def test_stream_late_data_refuses_a_split_slice(spark, sf_dir):
