@@ -1,15 +1,15 @@
-"""Load: idempotent keyed upserts to parquet tables (reference
-``src/etl/load.rs`` — `INSERT ... ON CONFLICT DO UPDATE` inside one
-atomic transaction per batch, S6-S8).
+"""Load: the writer of the Solana store's `blocks` and `transactions`
+tables (reference ``src/etl/load.rs`` — `INSERT ... ON CONFLICT DO
+UPDATE` inside one atomic transaction per batch, S6-S8).
 
-Plain parquet has no MERGE, so upsert = union(existing, incoming) →
-last-wins-by-key window (:func:`last_wins`) → atomic directory swap.
+:func:`load_blocks` is the one path that writes the store: batch
+`cli.run` and `--continuous` both call it. It commits each table with
+:func:`upsert_parquet`, a keyed upsert over plain parquet, which has no
+MERGE: union(existing, incoming) → last-wins-by-key window
+(:func:`last_wins`) → atomic directory swap (:func:`_write_swap`).
 Idempotence contract (ST6): re-loading any batch leaves the table
 unchanged; newest write wins per key, ordered by an explicit version
 column (the reference's `processed_at=NOW()`).
-
-:func:`load_blocks` is the one path that writes the `blocks` and
-`transactions` tables: batch `cli.run` and `--continuous` both call it.
 
 Scale: at 100 TB the swap-rewrite becomes partition-overwrite
 (`partitionOverwriteMode=dynamic` on date/slot-bucket partitions) or a
@@ -83,23 +83,11 @@ def _atomic_swap(path: str, tmp: str) -> None:
     shutil.rmtree(old, ignore_errors=True)
 
 
-_BATCH_MARKER = "_last_batch_id"
-
-
-def _read_batch_marker(path: str) -> int | None:
-    marker = os.path.join(path, _BATCH_MARKER)
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            return int(fh.read().strip())
-    return None
-
-
-def _write_swap(df: DataFrame, path: str, batch_id: int | None) -> int:
+def _write_swap(df: DataFrame, path: str) -> int:
     """Write ``df`` to a temp dir beside ``path``, then swap it in with
-    :func:`_atomic_swap`. A ``batch_id`` is written as the
-    ``_last_batch_id`` marker inside the temp dir, so it commits with
-    the data. Returns the rows written, counted by an ``Observation``
-    on the write job itself rather than by reading the table back."""
+    :func:`_atomic_swap`. Returns the rows written, counted by an
+    ``Observation`` on the write job itself rather than by reading the
+    table back."""
     parent = os.path.dirname(path) or "."
     os.makedirs(parent, exist_ok=True)
     tmp = tempfile.mkdtemp(prefix="swap_", dir=parent)
@@ -107,9 +95,6 @@ def _write_swap(df: DataFrame, path: str, batch_id: int | None) -> int:
         obs = Observation()
         df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(tmp)
         n = obs.get["rows"]
-        if batch_id is not None:
-            with open(os.path.join(tmp, _BATCH_MARKER), "w") as fh:
-                fh.write(str(batch_id))
     except BaseException:
         shutil.rmtree(tmp, ignore_errors=True)
         raise
@@ -137,7 +122,7 @@ def upsert_parquet(
         merged = existing.unionByName(incoming)
     else:
         merged = incoming
-    return _write_swap(last_wins(merged, keys, order), path, None)
+    return _write_swap(last_wins(merged, keys, order), path)
 
 
 def _start(call: Callable[[], object]) -> Callable[[], None]:
@@ -218,64 +203,3 @@ def load_blocks(raw: DataFrame, out: str) -> dict[str, int]:
     finally:
         parsed.unpersist()
     return {**block_obs.get, **tx_obs.get}
-
-
-def merge_aggregate(
-    spark: SparkSession,
-    partials: DataFrame,
-    path: str,
-    keys: list[str],
-    batch_id: int | None = None,
-) -> int:
-    """Algebraic aggregate maintenance: merge a batch's per-key
-    PARTIAL aggregates (columns besides `keys` must be sum-mergeable —
-    counts and sums, the algebraic class) into the stored aggregate
-    table by key-wise addition, write-temp-then-swap.
-
-    This is the incremental-materialized-view half of the sink family:
-    `upsert_parquet` keeps the newest ROW per key; this keeps the
-    running AGGREGATE per key, so a replayed batch is NOT idempotent
-    by itself. foreachBatch delivery is AT-LEAST-once (a crash after
-    the table swap but before the checkpoint commit replays the
-    batch), so callers pass Spark's ``batch_id`` and the last merged
-    id is persisted in a ``_last_batch_id`` marker INSIDE the table
-    directory — written into the temp dir BEFORE the swap, so the
-    merge and its marker commit in the same atomic rename. A replayed
-    ``batch_id <= stored`` is skipped: the standard foreachBatch
-    idempotence pattern. At 100 TB the stored side is |keys| rows,
-    not |events| — the merge cost is bounded by key cardinality."""
-    _restore_aside(path)
-    if batch_id is not None and os.path.exists(path):
-        stored = _read_batch_marker(path)
-        if stored is not None and batch_id <= stored:
-            return spark.read.parquet(path).count()
-    if _exists(path):
-        merged = spark.read.parquet(path).unionByName(partials)
-    else:
-        merged = partials
-    value_cols = [c for c in partials.columns if c not in keys]
-    rolled = merged.groupBy(*keys).agg(
-        *[F.sum(c).alias(c) for c in value_cols]
-    )
-    return _write_swap(rolled, path, batch_id)
-
-
-def stream_upsert(
-    stream_df: DataFrame,
-    path: str,
-    keys: list[str],
-    order: list[str],
-    checkpoint: str,
-):
-    """Streaming sink: foreachBatch → keyed upsert (reference S8's
-    per-batch atomic transaction; exactly-once-by-key across retries
-    because the upsert is idempotent). The caller owns ``checkpoint``:
-    reusing it resumes from the committed offsets."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_parquet(batch_df.sparkSession, batch_df, path, keys, order)
-
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    return writer.trigger(availableNow=True).start()

@@ -82,7 +82,7 @@ def get_spark(
     paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
     if _PACKAGE_ROOT not in paths:
         os.environ["PYTHONPATH"] = os.pathsep.join([*paths, _PACKAGE_ROOT])
-    builder = (
+    return (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.session.timeZone", "UTC")
@@ -121,32 +121,8 @@ def get_spark(
         # queries 10+ positions back). 5 min keeps the plateau bounded
         # without measurable CPU cost.
         .config("spark.cleaner.periodicGC.interval", "5min")
+        .getOrCreate()
     )
-    # SPARK_GRAFT_EXTRA_JARS (os.pathsep-separated paths) feeds
-    # spark.jars so the avro classpath gate in sources/formats.py
-    # attests jars the session will actually load — not merely that
-    # the operator set them. spark.jars is a static conf, so it only
-    # takes effect for the process's FIRST session (getOrCreate applies
-    # only runtime SQL confs to an existing one).
-    extra_jars = [
-        p
-        for p in os.environ.get("SPARK_GRAFT_EXTRA_JARS", "").split(
-            os.pathsep
-        )
-        if p
-    ]
-    # spark.jars is itself comma-separated, so a jar path containing a
-    # comma cannot be expressed — reject loudly instead of silently
-    # splitting it into two bogus classpath entries (ADVICE r12).
-    bad = [p for p in extra_jars if "," in p]
-    if bad:
-        raise ValueError(
-            f"SPARK_GRAFT_EXTRA_JARS paths may not contain ',' "
-            f"(spark.jars is comma-delimited): {bad}"
-        )
-    if extra_jars:
-        builder = builder.config("spark.jars", ",".join(extra_jars))
-    return builder.getOrCreate()
 
 
 def scoped(spark: SparkSession) -> SparkSession:

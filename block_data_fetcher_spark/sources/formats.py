@@ -20,8 +20,6 @@ the default would drop sub-second precision on some locales.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -196,44 +194,6 @@ def q_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _avro_on_classpath() -> bool:
-    """True iff the spark-avro DATASOURCE module jar is deployed.
-
-    Spark 4 ships Avro as an external module: the core ``avro-*.jar``
-    trio is always bundled but ``spark-avro_2.13`` is not, and
-    ``format("avro")`` raises AnalysisException without it. Probed by
-    jar listing (not by opening a session — catalog registration runs
-    at import time)."""
-    import glob
-
-    import pyspark
-
-    jars = os.path.join(os.path.dirname(pyspark.__file__), "jars")
-    extra = os.environ.get("SPARK_GRAFT_EXTRA_JARS", "")
-    return bool(
-        glob.glob(os.path.join(jars, "spark-avro*.jar"))
-        or any("spark-avro" in p for p in extra.split(os.pathsep) if p)
-    )
-
-
-def _avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events → Avro (row-oriented, schema'd — the Kafka-adjacent
-    interchange format) → read → aggregate. Avro carries long/double/
-    string natively; timestamp-NTZ crosses as Avro ``local-timestamp-
-    micros`` under Spark's default mapping, so like ORC no text
-    format contract is needed."""
-    path = scratch_dir(spark, "formats", "events_avro")
-    _events_slice(spark, sf_dir).write.mode("overwrite").format(
-        "avro"
-    ).save(path)
-    back = spark.read.schema(_SCHEMA).format("avro").load(path)
-    return _roundtrip_agg(back)
-
-
-if _avro_on_classpath():  # pragma: no cover — jar absent in this sandbox
-    q_avro_roundtrip = _avro_roundtrip
-
-
 ORACLE: dict[str, str] = {
     "q_text_roundtrip": """
     SELECT lang, count(*) AS n_docs,
@@ -246,6 +206,3 @@ ORACLE: dict[str, str] = {
     "q_orc_roundtrip": _ROUNDTRIP_ORACLE,
     "q_xml_roundtrip": _ROUNDTRIP_ORACLE,
 }
-
-if _avro_on_classpath():  # oracle registers with its query, never alone
-    ORACLE["q_avro_roundtrip"] = _ROUNDTRIP_ORACLE

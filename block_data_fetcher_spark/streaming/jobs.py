@@ -47,6 +47,13 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
+from ..etl.load import (
+    _atomic_swap,
+    _exists,
+    _restore_aside,
+    _write_swap,
+    upsert_parquet,
+)
 from ..scratch import scratch_dir
 
 # Explicit schema — streaming file sources require one; never inference
@@ -823,10 +830,78 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_parquet(joined, "stream_stream_left_join", _stream_partitions(sf_dir), _state_provider(sf_dir, weight=2))
 
 
+def stream_upsert(
+    stream_df: DataFrame,
+    path: str,
+    keys: list[str],
+    order: list[str],
+    checkpoint: str,
+):
+    """Streaming sink: foreachBatch → keyed upsert (reference S8's
+    per-batch atomic transaction; exactly-once-by-key across retries
+    because the upsert is idempotent). The caller owns ``checkpoint``:
+    reusing it resumes from the committed offsets."""
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        upsert_parquet(batch_df.sparkSession, batch_df, path, keys, order)
+
+    writer = stream_df.writeStream.foreachBatch(write_batch).option(
+        "checkpointLocation", checkpoint
+    )
+    return writer.trigger(availableNow=True).start()
+
+
+# merge_aggregate's replay ledger: the id of the last merged batch,
+# stored as a column of the aggregate table itself.
+_BATCH_ID = "_batch_id"
+
+
+def merge_aggregate(
+    spark: SparkSession,
+    partials: DataFrame,
+    path: str,
+    keys: list[str],
+    batch_id: int | None = None,
+) -> int:
+    """Algebraic aggregate maintenance: merge a batch's per-key
+    PARTIAL aggregates (columns besides `keys` must be sum-mergeable —
+    counts and sums, the algebraic class) into the stored aggregate
+    table by key-wise addition, write-temp-then-swap.
+
+    This is the incremental-materialized-view half of the sink family:
+    `upsert_parquet` keeps the newest ROW per key; this keeps the
+    running AGGREGATE per key, so a replayed batch is NOT idempotent
+    by itself. foreachBatch delivery is AT-LEAST-once (a crash after
+    the table swap but before the checkpoint commit replays the
+    batch), so callers pass Spark's ``batch_id`` and every row of the
+    table carries the last merged id in a ``_batch_id`` column —
+    written by the same swap as the sums, so the merge and its ledger
+    commit in one atomic rename. A replayed ``batch_id <= stored`` is
+    skipped: the standard foreachBatch idempotence pattern. At 100 TB
+    the stored side is |keys| rows, not |events| — the merge cost is
+    bounded by key cardinality."""
+    _restore_aside(path)
+    if _exists(path):
+        stored = spark.read.parquet(path)
+        if batch_id is not None:
+            last, n = stored.agg(F.max(_BATCH_ID), F.count(F.lit(1))).head()
+            if last is not None and batch_id <= last:
+                return n
+        merged = stored.drop(_BATCH_ID).unionByName(partials)
+    else:
+        merged = partials
+    value_cols = [c for c in partials.columns if c not in keys]
+    rolled = merged.groupBy(*keys).agg(
+        *[F.sum(c).alias(c) for c in value_cols],
+        F.lit(batch_id).cast("long").alias(_BATCH_ID),
+    )
+    return _write_swap(rolled, path)
+
+
 def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full S6-S8 sink path at streaming time: events stream →
     ``foreachBatch`` → keyed last-wins UPSERT into a parquet table
-    (``etl.load.stream_upsert``); returns the post-stream table —
+    (:func:`stream_upsert`); returns the post-stream table —
     the latest event per user, exactly ``q_last_wins_window``'s batch
     answer (equality pinned in tests/test_streaming.py).
 
@@ -836,8 +911,6 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     replayed batch after failure converges to the same table
     (exactly-once-by-key, ST6)."""
     import shutil
-
-    from ..etl.load import stream_upsert
 
     ev = events_stream(spark, sf_dir).select(
         "user_id", "event_id", "event_type", "value", "ts"
@@ -868,7 +941,7 @@ def q_stream_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     each micro-batch reduces to per-event-type PARTIAL aggregates
     (count, sum) inside the batch, then ``foreachBatch`` merges them
     into the stored aggregate table by key-wise addition
-    (``etl.load.merge_aggregate``) — the algebraic-aggregate sink,
+    (:func:`merge_aggregate`) — the algebraic-aggregate sink,
     complementing the last-wins row UPSERT (q_stream_upsert).
 
     The shuffle per batch carries |event_type| partial rows, not
@@ -882,8 +955,6 @@ def q_stream_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic and replay-skip are unit-tested in
     tests/test_streaming.py."""
     import shutil
-
-    from ..etl.load import merge_aggregate
 
     ev = events_stream(spark, sf_dir).select("event_type", "value")
     path = _mkdtemp(spark, "stream_mergeagg_") + "/agg_by_type"
@@ -938,8 +1009,6 @@ def q_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     away whenever a retention boundary passes (the same GC contract
     Delta/Iceberg MERGE tables have)."""
     import shutil
-
-    from ..etl.load import stream_upsert
 
     ev = events_stream(spark, sf_dir).select(
         F.col("user_id").alias("key"),
@@ -1101,7 +1170,6 @@ def q_stream_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB recomputation — merge associativity is the contract)."""
     import shutil
 
-    from ..etl.load import merge_aggregate
     from ..operators.analytics import QM_BINS, QM_RANGE, _qm_bin
 
     ev = events_stream(spark, sf_dir).select(
@@ -1190,8 +1258,6 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract (HLL state is order- and partitioning-independent, so
     the booleans are stable)."""
     import shutil
-
-    from ..etl.load import _atomic_swap
 
     ev = events_stream(spark, sf_dir).select("event_type", "user_id")
     root = _mkdtemp(spark, "stream_hll_")

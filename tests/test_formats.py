@@ -54,26 +54,3 @@ def test_text_roundtrip_hostile_bodies(spark, tmp_path):
         n, chars, mx = want.get(lang, (0, 0, -1))
         want[lang] = (n + 1, chars + len(text), max(mx, doc_id))
     assert got == want
-
-
-def test_avro_gate_matches_classpath(spark, sf_dir):
-    """The Avro roundtrip registers iff the spark-avro module jar is
-    deployed. Where absent, assert the documented failure mode is
-    real — format("avro") raises the external-module
-    AnalysisException — so the gate can never
-    silently hide a working path; where present, the roundtrip must
-    match the shared oracle shape.
-    """
-    import pytest
-
-    from block_data_fetcher_spark import api
-    from block_data_fetcher_spark.sources import formats
-
-    registered = "q_avro_roundtrip" in api.queries()
-    assert registered == formats._avro_on_classpath()
-    assert ("q_avro_roundtrip" in api.oracle_sql()) == registered
-    if not registered:
-        with pytest.raises(Exception, match="(?i)avro"):
-            formats._avro_roundtrip(spark, sf_dir).collect()
-        pytest.skip("spark-avro module jar not on this classpath")
-    formats._avro_roundtrip(spark, sf_dir).collect()

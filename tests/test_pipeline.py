@@ -13,10 +13,7 @@ from block_data_fetcher_spark.etl.extract import (
     extract_transactions,
     parse_blocks,
 )
-from block_data_fetcher_spark.etl.load import (
-    stream_upsert,
-    upsert_parquet,
-)
+from block_data_fetcher_spark.etl.load import upsert_parquet
 from block_data_fetcher_spark.sources.rpc import (
     SolanaRpcDataSource,
     synthetic_block,
@@ -248,32 +245,6 @@ def test_upsert_failed_write_keeps_table_and_leaves_no_temp(spark, tmp_path):
     rows = {r.k: r.v for r in spark.read.parquet(path).collect()}
     assert rows == {"a": 1, "b": 1}
     assert not [f for f in os.listdir(tmp_path) if f.startswith("swap_")]
-
-
-def test_stream_pipeline_end_to_end(rpc_registered, spark, tmp_path):
-    """Continuous mode done right (the reference's loop is a stub):
-    RPC stream source → extract → foreachBatch upsert → parquet."""
-    path = str(tmp_path / "stream_txs")
-    stream = (
-        spark.readStream.format("solana_rpc")
-        .option("start_slot", 500)
-        .option("mode", "offline")
-        .option("batch_size", 7)
-        .load()
-    )
-    txs = extract_transactions(stream).withColumn(
-        "processed_at", F.current_timestamp()
-    )
-    q = stream_upsert(
-        txs, path, ["signature"], ["processed_at"], str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(120)
-    out = spark.read.parquet(path)
-    n = out.count()
-    assert n > 0
-    assert out.select("signature").distinct().count() == n
-    # every tx classified
-    assert out.where(F.col("transaction_type").isNull()).count() == 0
 
 
 def test_approx_distinct_error_bound(spark, sf_dir):
@@ -882,7 +853,8 @@ def _continuous_until(spark, argv, slot) -> tuple[int, list]:
 
 def test_cli_continuous_writes_both_tables(rpc_registered, spark, tmp_path):
     """An offline --continuous run writes blocks and transactions that
-    agree per committed slot: transaction_count = transaction rows."""
+    agree per committed slot: transaction_count = transaction rows.
+    Every transaction it writes is classified."""
     out = str(tmp_path / "c")
     committed, errors = _continuous_until(spark, ["-s", "500", "-b", "5", "-o", out, "-c"], 510)
     assert not errors
@@ -891,14 +863,15 @@ def test_cli_continuous_writes_both_tables(rpc_registered, spark, tmp_path):
         r.slot: r.transaction_count
         for r in spark.read.parquet(f"{out}/blocks").where(F.col("slot") < committed).collect()
     }
+    written = spark.read.parquet(f"{out}/transactions")
     txs = {
         r.block_slot: r["count"]
-        for r in spark.read.parquet(f"{out}/transactions")
-        .where(F.col("block_slot") < committed)
+        for r in written.where(F.col("block_slot") < committed)
         .groupBy("block_slot").count().collect()
     }
     assert set(blocks) == set(range(500, committed))
     assert blocks == txs
+    assert written.where(F.col("transaction_type").isNull()).count() == 0
 
 
 def test_cli_continuous_resumes_after_restart(rpc_registered, spark, rpc_stub, tmp_path, monkeypatch):

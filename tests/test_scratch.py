@@ -256,17 +256,3 @@ def test_shared_run_id_skips_atexit_reaping(spark, monkeypatch):
     scratch._registered.discard(scratch.scratch_root(spark))
     scratch.scratch_dir(spark, "storage", "y")
     assert len(calls) == 1, "process-private root must register atexit"
-
-
-def test_extra_jars_comma_path_rejected(monkeypatch):
-    """ADVICE r12: spark.jars is comma-delimited, so a jar path
-    containing a comma must be rejected loudly — silently splitting it
-    into two bogus classpath entries made the classpath gate attest
-    jars that could never load."""
-    import pytest as _pytest
-
-    from block_data_fetcher_spark.session import get_spark
-
-    monkeypatch.setenv("SPARK_GRAFT_EXTRA_JARS", "/tmp/bad,name.jar")
-    with _pytest.raises(ValueError, match="comma"):
-        get_spark("bdf-jar-guard-test")

@@ -225,7 +225,7 @@ def test_merge_aggregate_multibatch_equals_whole(spark, sf_dir, tmp_path):
     exercise on its own."""
     from pyspark.sql import functions as F
 
-    from block_data_fetcher_spark.etl.load import merge_aggregate
+    from block_data_fetcher_spark.streaming.jobs import merge_aggregate
 
     ev = table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     path = str(tmp_path / "agg_by_type")
@@ -283,7 +283,7 @@ def test_incremental_agg_crash_after_swap_is_exactly_once(spark, sf_dir, tmp_pat
     import pytest
     from pyspark.sql import functions as F
 
-    from block_data_fetcher_spark.etl.load import merge_aggregate
+    from block_data_fetcher_spark.streaming.jobs import merge_aggregate
 
     ev, src = _two_file_source(spark, sf_dir, tmp_path)
     path = str(tmp_path / "agg_by_type")
@@ -423,12 +423,12 @@ def test_stream_cdc_crash_after_swap_converges(spark, sf_dir, tmp_path):
 def test_merge_aggregate_replayed_batch_id_is_skipped(spark, sf_dir, tmp_path):
     """foreachBatch is AT-LEAST-once: a crash between the table swap
     and the checkpoint commit replays the batch on restart. The
-    batch_id marker persisted inside the table directory must make the
+    batch_id ledger stored as a column of the table must make the
     replay a no-op — merging the SAME partials with the SAME batch_id
     twice (and then with an older id) leaves the table unchanged."""
     from pyspark.sql import functions as F
 
-    from block_data_fetcher_spark.etl.load import merge_aggregate
+    from block_data_fetcher_spark.streaming.jobs import merge_aggregate
 
     ev = table(spark, sf_dir, "events").select("event_type", "value")
     partials = ev.groupBy("event_type").agg(
@@ -468,9 +468,8 @@ def test_stream_upsert_restart_from_checkpoint_exactly_once(spark, sf_dir, tmp_p
 
     from pyspark.sql import functions as F
 
-    from block_data_fetcher_spark.etl.load import stream_upsert
     from block_data_fetcher_spark.etl.load import last_wins
-    from block_data_fetcher_spark.streaming.jobs import _EVENTS_RAW_SCHEMA
+    from block_data_fetcher_spark.streaming.jobs import _EVENTS_RAW_SCHEMA, stream_upsert
 
     ev = table(spark, sf_dir, "events")
     src = tmp_path / "src"
@@ -532,8 +531,7 @@ def test_incremental_agg_restart_does_not_double_count(spark, sf_dir, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from block_data_fetcher_spark.etl.load import merge_aggregate
-    from block_data_fetcher_spark.streaming.jobs import _EVENTS_RAW_SCHEMA
+    from block_data_fetcher_spark.streaming.jobs import _EVENTS_RAW_SCHEMA, merge_aggregate
 
     ev = table(spark, sf_dir, "events")
     src = tmp_path / "src"
