@@ -170,6 +170,6 @@ def run(args: Args) -> dict:
     return report
 
 
-def main(argv: list[str] | None = None) -> int:
-    run(parse_args(argv))
+def main() -> int:
+    run(parse_args())
     return 0

@@ -71,8 +71,11 @@ def _atomic_swap(path: str, tmp: str) -> None:
     aside copy. A crash at any point leaves either the old table at
     `path` or at `path.old` plus the complete new one at `tmp` — never
     a window with NO copy, which the naive rmtree-then-replace had.
-    Readers of the table call :func:`_restore_aside` first, which
-    moves `path.old` back when `path` is missing.
+    Only the two writers, :func:`upsert_parquet` and
+    ``streaming.jobs.merge_aggregate``, call :func:`_restore_aside`
+    first, which moves `path.old` back when `path` is missing. A plain
+    ``spark.read.parquet(path)`` run in the crash window finds no table
+    at `path` until the next upsert restores it.
     (On a real object store this is the same two-phase commit a
     Delta/Iceberg snapshot swap gives you for free.)"""
     old = path + ".old"

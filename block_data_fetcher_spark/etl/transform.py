@@ -68,16 +68,12 @@ def program_types(program_ids: Column) -> Column:
     return F.transform(program_ids, lambda pid: F.element_at(m, pid))
 
 
-def classify_transaction(program_ids: Column) -> Column:
-    """The priority rule chain over a tx's (distinct) program ids
-    (transform.rs:82-114). Input: array<string> of program ids."""
-    return classify_program_types(program_ids, program_types(program_ids))
-
-
 def classify_program_types(program_ids: Column, types: Column) -> Column:
-    """:func:`classify_transaction` over already-resolved ``types``
-    (``program_types(program_ids)``), so a caller that projects the
-    types as a column resolves them once, not once per rule."""
+    """The priority rule chain over a tx's (distinct) program ids
+    (transform.rs:82-114). Input: array<string> of program ids and their
+    already-resolved ``types`` (``program_types(program_ids)``), so a
+    caller that projects the types as a column resolves them once, not
+    once per rule."""
     has = lambda t: F.array_contains(types, t)  # noqa: E731
     return (
         F.when(has("DEX"), DEX_SWAP)

@@ -41,10 +41,11 @@ def token_hash(t: Column) -> Column:
     return F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")
 
 
-def shingles(toks: Column, n: int = 3) -> Column:
-    """Distinct n-gram shingles of a token array. `concat` (not
-    concat_ws) so out-of-range tail positions yield NULL and are
-    filtered — no short shingles at the end.
+def shingles(toks: Column) -> Column:
+    """Distinct 3-gram shingles of a token array (the DuckDB twin is
+    ``_SHINGLES``). `concat` (not concat_ws) so out-of-range tail
+    positions yield NULL and are filtered — no short shingles at the
+    end.
 
     ``toks`` (typically a ``split()``) is let-bound through a
     single-element ``transform`` so it evaluates ONCE per row:
@@ -54,12 +55,9 @@ def shingles(toks: Column, n: int = 3) -> Column:
 
     def over(ts: Column) -> Column:
         def mk(x: Column, i: Column) -> Column:
-            parts: list[Column] = []
-            for j in range(n):
-                if j:
-                    parts.append(F.lit(" "))
-                parts.append(F.get(ts, i + j))
-            return F.concat(*parts)
+            return F.concat(
+                F.get(ts, i), F.lit(" "), F.get(ts, i + 1), F.lit(" "), F.get(ts, i + 2)
+            )
 
         return F.array_distinct(
             F.filter(F.transform(ts, mk), lambda s: s.isNotNull())

@@ -5,14 +5,12 @@ typed metadata struct riding alongside — the Spark-native shape for
 petabyte media corpora (payload bytes stay columnar/compressed in
 parquet; metadata predicates prune row-groups without touching bytes).
 
-Heavy per-item work (decode, resize, feature extraction, frame
-sampling) runs as Arrow-batched ``mapInPandas`` — the ONLY sanctioned
-Python hot path in this engine (SURVEY §2.8 policy): vectorized
-transfer, bounded batches, no row-at-a-time pickling. The actual codec
-calls are STUBBED deterministically (no PIL/ffmpeg in this container,
-and none may be installed); the stubs are clearly marked and the
-surrounding plumbing — schema, batch iteration, partition behavior —
-is real and tested.
+Heavy per-item work (BMP/PPM encode and decode, perceptual hashing,
+frame sampling) runs as Arrow-batched ``mapInPandas`` — the ONLY
+sanctioned Python hot path in this engine (SURVEY §2.8 policy):
+vectorized transfer, bounded batches, no row-at-a-time pickling. Only
+the numpy-decodable raster formats are decoded; JPEG/PNG/audio/video
+payloads are not (PIL/ffmpeg are not dependencies).
 
 Scale: mapInPandas streams Arrow batches; memory is bounded by
 ``spark.sql.execution.arrow.maxRecordsPerBatch``. Media tables
@@ -31,16 +29,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import parallelize, table
-
-MEDIA_SCHEMA = (
-    "media_id bigint, kind string, data binary, "
-    "meta struct<format:string, n_bytes:bigint, tag:string>"
-)
-
-FEATURE_SCHEMA = (
-    "media_id bigint, kind string, n_bytes bigint, checksum bigint, "
-    "feat array<double>"
-)
 
 _KINDS = ["image", "audio", "video"]
 
@@ -66,77 +54,10 @@ def synth_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# STUB decode — deterministic fake in place of a real codec.
-# ---------------------------------------------------------------------------
-
-
-def _fake_decode(payload: bytes) -> list[float]:
-    """STUB: stands in for image decode / audio PCM extraction.
-    Deterministic 4-dim 'feature': byte-statistics of the payload.
-    Replace with PIL/torchaudio/ffmpeg in a real deployment."""
-    if not payload:
-        return [0.0, 0.0, 0.0, 0.0]
-    a = np.frombuffer(payload, dtype=np.uint8)
-    return [
-        float(a.size),
-        float(a[0]),
-        float(a[-1]),
-        float(int(a.sum(dtype=np.int64)) % 997),
-    ]
-
-
-def extract_features(media: DataFrame) -> DataFrame:
-    """Arrow-batched feature extraction over the binary column."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            data = pdf["data"]
-            feats = data.map(_fake_decode)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    # n_bytes/checksum reuse the decode output (feat[0] =
-                    # size, feat[3] = byte-sum % 997) — the payload is
-                    # traversed once per row, vectorized in numpy, not
-                    # three times through Python byte loops.
-                    "n_bytes": feats.map(lambda f: int(f[0])).astype("int64"),
-                    "checksum": feats.map(lambda f: int(f[3])).astype("int64"),
-                    "feat": feats,
-                }
-            )
-
-    return media.mapInPandas(run, FEATURE_SCHEMA)
-
-
-def resize(media: DataFrame, factor: int = 4) -> DataFrame:
-    """STUB resize: keep every ``factor``-th byte of the payload — the
-    plumbing shape of image/audio downsampling (payload in → smaller
-    payload out, metadata updated) without a codec. Replace the numpy
-    slice with PIL.Image.resize / librosa.resample in a real
-    deployment; the mapInPandas contract (binary in, binary out,
-    Arrow-batched, schema preserved) is the real part."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            out["data"] = pdf["data"].map(
-                lambda b: np.frombuffer(b, dtype=np.uint8)[::factor].tobytes()
-            )
-            out["meta"] = [
-                {**m, "n_bytes": len(d), "format": f"{m['format']};ds{factor}"}
-                for m, d in zip(pdf["meta"], out["data"])
-            ]
-            yield out
-
-    return media.mapInPandas(run, MEDIA_SCHEMA)
-
-
 def frame_sample(media: DataFrame, every: int = 64) -> DataFrame:
-    """STUB frame sampler: slice the payload every `every` bytes — the
-    plumbing shape of video frame-sampling (one input row → N frame
-    rows) without a codec."""
+    """Frame sampler over the raw payload: one row per `every`-byte
+    slice — the plumbing shape of video frame-sampling (one input row
+    → N frame rows); no video codec is involved."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -156,7 +77,7 @@ def frame_sample(media: DataFrame, every: int = 64) -> DataFrame:
 # ---------------------------------------------------------------------------
 # REAL codecs: BMP (BITMAPINFOHEADER, 24bpp) and PPM (P6) — numpy-only
 # formats with fixed headers and raw raster math, so decode is genuinely
-# executed here (no PIL/ffmpeg needed). JPEG/PNG/audio/video stay stubbed.
+# executed here (no PIL/ffmpeg needed). JPEG/PNG/audio/video are not decoded.
 # ---------------------------------------------------------------------------
 
 import struct
@@ -510,9 +431,8 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both directions run Arrow-batched in mapInPandas with zero
     shuffle. The DuckDB oracle recomputes the same quantities from
     the closed-form raster arithmetic, so any byte-level decode bug
-    breaks the value hash. (JPEG/PNG/audio/video codecs remain
-    stubbed: their libraries aren't in this container — see
-    extract_features/resize/frame_sample for that plumbing.)"""
+    breaks the value hash. (JPEG/PNG/audio/video are not decoded:
+    their codec libraries are not dependencies.)"""
     media = synth_images(spark, sf_dir)
     dec = decode_images(media)
     return dec.select(

@@ -29,7 +29,7 @@ from ..catalog import table
 
 def classify_event_types(type_set: F.Column) -> F.Column:
     """Ordered priority when-chain over a collected set of event types —
-    the fixture analog of ``classify_transaction``
+    the fixture analog of ``etl.transform.classify_program_types``
     (``src/etl/transform.rs:82-114``). Order encodes precedence."""
     return (
         F.when(F.array_contains(type_set, "error"), "error_user")

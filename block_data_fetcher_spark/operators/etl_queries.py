@@ -28,10 +28,7 @@ _SLOTS = (1000, 1049)  # 50 blocks x 4 txs in offline mode
 
 
 def _raw_blocks(spark: SparkSession) -> DataFrame:
-    try:
-        spark.dataSource.register(SolanaRpcDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(SolanaRpcDataSource)
     return (
         spark.read.format("solana_rpc")
         .option("start_slot", _SLOTS[0])

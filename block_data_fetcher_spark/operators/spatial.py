@@ -226,11 +226,9 @@ def _radius_pairs_collapsed(
     spark: SparkSession,
     sf_dir: str,
     points: DataFrame | None = None,
-    radius_km: float = RADIUS_KM,
-    cell_deg: float = CELL_DEG,
 ) -> DataFrame:
     """Same output as _radius_pairs — every id pair within
-    ``radius_km``, normalized to id_a < id_b, raw haversine double —
+    ``RADIUS_KM``, normalized to id_a < id_b, raw haversine double —
     but with the geometry COLLAPSED to distinct coordinates first
     (r7): replicated corpora stack many points per position (sf10:
     1.5M points on 36k positions, ~42 deep), so the per-id-pair plan
@@ -262,14 +260,7 @@ def _radius_pairs_collapsed(
     # through (its output drops them), so run the stencil inline here
     # via the rep-id pair set joined back to position coords.
     reps = pos.select("point_id", "lat", "lon")
-    rep_pairs = _radius_pairs(
-        spark,
-        sf_dir,
-        points=reps,
-        radius_km=radius_km,
-        cell_deg=cell_deg,
-        keep_coords=True,
-    )
+    rep_pairs = _radius_pairs(spark, sf_dir, points=reps, keep_coords=True)
     # rep_pairs: (id_a, id_b, lat_a, lon_a, lat_b, lon_b, dist_km)
     # where dist_km = hav(side-of-lower-rep first) and sides are
     # normalized so (lat_a, lon_a) is the LOWER rep's position. The
@@ -289,8 +280,8 @@ def _radius_pairs_collapsed(
         # (they can straddle the boundary by an ulp — _radius_pairs
         # over-collects by a pad for exactly this; the per-id-pair
         # filter below is what the oracle sees)
-        (F.col("d_ab") <= F.lit(radius_km))
-        | (F.col("d_ba") <= F.lit(radius_km))
+        (F.col("d_ab") <= F.lit(RADIUS_KM))
+        | (F.col("d_ba") <= F.lit(RADIUS_KM))
     )
     # expansion: all points at side A × all points at side B.
     # |positions within radius| is output/(k_a·k_b)-sized — broadcast
@@ -317,7 +308,7 @@ def _radius_pairs_collapsed(
             .otherwise(F.col("d_ba"))
             .alias("dist_km"),
         )
-        .where(F.col("dist_km") <= F.lit(radius_km))
+        .where(F.col("dist_km") <= F.lit(RADIUS_KM))
     )
     # within-position pairs: distance exactly 0.0, no trig; the equi
     # self-join on coords only fans out on stacked positions, where

@@ -39,16 +39,18 @@ from pyspark.sql.types import StructType
 
 _SCHEMA_DDL = "slot bigint, raw string"
 FINALITY_LAG = 20  # reference: process up to latest-20 (src/main.rs:93-98)
+RPC_TIMEOUT_S = 30  # per JSON-RPC request, getBlock and getSlot alike
 
 _SYSTEM = "11111111111111111111111111111111"
 _TOKEN = "TokenkegQfeZyiNwAJbNbGKPFXCWuBvf9Ss623VQ5DA"
 _DEX = "675kPX9MHTjS2zt1qfr1NYHuzeLXfQM9H24wFSUt1Mp8"
 
 
-def synthetic_block(slot: int, txs_per_block: int = 4) -> str:
-    """Deterministic getBlock-shaped JSON for offline mode."""
+def synthetic_block(slot: int) -> str:
+    """Deterministic getBlock-shaped JSON for offline mode: four
+    transactions per block."""
     txs = []
-    for i in range(txs_per_block):
+    for i in range(4):
         kind = (slot + i) % 3
         if kind == 0:
             instr = {
@@ -193,7 +195,7 @@ def _with_retry(fn, max_retries: int = MAX_RETRIES,
             sleep(delay_s * attempt)
 
 
-def _rpc_call(url: str, method: str, params: list, timeout: int):
+def _rpc_call(url: str, method: str, params: list):
     """POST one JSON-RPC request and return its ``result``. An ``error``
     object raises :class:`RpcError`: it is never read as a null result."""
     import urllib.request
@@ -204,7 +206,7 @@ def _rpc_call(url: str, method: str, params: list, timeout: int):
     req = urllib.request.Request(
         url, data=payload, headers={"Content-Type": "application/json"}
     )
-    with urllib.request.urlopen(req, timeout=timeout) as resp:
+    with urllib.request.urlopen(req, timeout=RPC_TIMEOUT_S) as resp:
         body = json.load(resp)
     error = body.get("error")
     if error is not None:
@@ -212,7 +214,7 @@ def _rpc_call(url: str, method: str, params: list, timeout: int):
     return body.get("result")
 
 
-def _fetch_block_rpc(url: str, slot: int, timeout: int = 30):
+def _fetch_block_rpc(url: str, slot: int):
     """getBlock with the reference's params (src/rpc/mod.rs:64-83).
     Returns ``None`` for a slot with no block: ``result: null`` or a
     skipped-slot error code."""
@@ -223,7 +225,7 @@ def _fetch_block_rpc(url: str, slot: int, timeout: int = 30):
         "maxSupportedTransactionVersion": 0,
     }
     try:
-        return _rpc_call(url, "getBlock", [slot, config], timeout)
+        return _rpc_call(url, "getBlock", [slot, config])
     except RpcError as e:
         if e.code in _SKIPPED_SLOT_CODES:
             return None
@@ -234,7 +236,7 @@ def finalized_slot(url: str, max_retries: int, retry_delay: float) -> int:
     """The chain head less :data:`FINALITY_LAG`: the newest slot the
     reference's loop processes (src/main.rs:93-98)."""
     head = _with_retry(
-        lambda: _rpc_call(url, "getSlot", [], 30), max_retries, retry_delay
+        lambda: _rpc_call(url, "getSlot", []), max_retries, retry_delay
     )
     return head - FINALITY_LAG
 

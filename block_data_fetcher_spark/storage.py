@@ -110,21 +110,19 @@ def iter_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     )
 
 
-def write_partitioned(
-    df: DataFrame, path: str, partition_cols: Sequence[str], mode: str = "overwrite"
-) -> None:
+def write_partitioned(df: DataFrame, path: str, partition_cols: Sequence[str]) -> None:
     """Hive-layout parquet write. ``spark.read.parquet(path)`` on the
     result gets partition pruning for free: Catalyst turns filters on
     ``partition_cols`` into directory-level PartitionFilters, so a
     selective query never opens non-matching files."""
-    df.write.partitionBy(*partition_cols).mode(mode).parquet(path)
+    df.write.partitionBy(*partition_cols).mode("overwrite").parquet(path)
 
 
-def with_event_date(df: DataFrame, ts_col: str = "ts") -> DataFrame:
+def with_event_date(df: DataFrame) -> DataFrame:
     """Standard time-partition column: ``date(ts)`` — the engine's
     analog of the reference's ``idx_blocks_block_time``
     (``migrations/20251023000001_create_blocks.sql:22-24``)."""
-    return df.withColumn("event_date", F.to_date(F.col(ts_col)))
+    return df.withColumn("event_date", F.to_date(F.col("ts")))
 
 
 def write_bucketed(
@@ -132,21 +130,19 @@ def write_bucketed(
     table_name: str,
     bucket_cols: Sequence[str],
     n_buckets: int,
-    sort_cols: Sequence[str] | None = None,
     path: str | None = None,
 ) -> None:
     """Bucketed table: rows are hash-distributed into ``n_buckets``
-    files by ``bucket_cols`` at WRITE time, so any equi-join or
-    aggregation on those columns later runs with no shuffle — the
-    co-located-join contract for repeated fact⋈fact joins
-    (lineitem⋈orders here; transactions⋈instructions in the
-    reference's schema).
+    files by ``bucket_cols`` at WRITE time, sorted by them within each
+    file, so any equi-join or aggregation on those columns later runs
+    with no shuffle — the co-located-join contract for repeated
+    fact⋈fact joins (lineitem⋈orders here; transactions⋈instructions
+    in the reference's schema).
 
     ``path`` makes it an EXTERNAL table at an explicit location —
     use it when the caller must control where data lands (the
     session's warehouse dir follows the launching process's cwd)."""
-    writer = df.write.bucketBy(n_buckets, *bucket_cols)
-    writer = writer.sortBy(*(sort_cols or bucket_cols))
+    writer = df.write.bucketBy(n_buckets, *bucket_cols).sortBy(*bucket_cols)
     if path is not None:
         writer = writer.option("path", path)
     writer.mode("overwrite").format("parquet").saveAsTable(table_name)
@@ -228,7 +224,6 @@ def write_zordered(
     path: str,
     zkey: Column,
     n_files: int = 8,
-    mode: str = "overwrite",
 ) -> None:
     """Range-partition by the z-key and sort within partitions before
     writing: each output file covers a contiguous z-range, so its
@@ -238,22 +233,17 @@ def write_zordered(
         .repartitionByRange(n_files, "__z")
         .sortWithinPartitions("__z")
         .drop("__z")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 
 
-def repartition_for_write(
-    df: DataFrame, partition_cols: Sequence[str], files_per_partition: int = 1
-) -> DataFrame:
-    """Pre-shuffle so each hive partition is written by few tasks —
+def repartition_for_write(df: DataFrame, partition_cols: Sequence[str]) -> DataFrame:
+    """Pre-shuffle so each hive partition is written by one task —
     avoids the tiny-files problem (every task writing every partition
     yields tasks x partitions files; at 1000 executors that is the
     difference between 10^3 and 10^6 files per day)."""
-    cols = [F.col(c) for c in partition_cols]
-    if files_per_partition > 1:
-        cols.append(F.pmod(F.spark_partition_id(), F.lit(files_per_partition)))
-    return df.repartition(*cols)
+    return df.repartition(*partition_cols)
 
 
 def salted_join(
@@ -289,125 +279,6 @@ def salted_join(
     )
 
 
-SKEW_FACTOR = 4.0  # hottest key > 4× the uniform share ⇒ salt (q_skew_detect's flag rule)
-
-# (analyzed-plan semanticHash, input-file listing, key, factor,
-# sample) → flag. The profiling scan really does run once per
-# fact/key pair now (ADVICE r5: the docstring claimed caching the API
-# didn't provide — repeated skew_adaptive_join calls re-scanned the
-# fact table every time). The file-listing component is the
-# data-version key (ADVICE r6): a semantically-equal plan over
-# REWRITTEN data (new part files at the same path) must re-profile,
-# not serve the stale flag. Bounded FIFO so a long-lived driver
-# profiling many tables can't grow it without limit.
-_SKEW_CACHE: dict[tuple, bool] = {}
-_SKEW_CACHE_MAX = 256
-
-
-def clear_skew_cache() -> None:
-    """Drop all memoized skew flags. Needed only when data changes
-    UNDER an existing DataFrame in a way the file-listing key can't
-    see (e.g. a format that rewrites bytes in place keeping file
-    names); normal overwrites produce new part files and re-profile
-    automatically."""
-    _SKEW_CACHE.clear()
-
-
-def detect_join_skew(
-    df: DataFrame,
-    key: str,
-    skew_factor: float = SKEW_FACTOR,
-    sample_fraction: float | None = None,
-    cache: bool = True,
-) -> bool:
-    """The q_skew_detect flag as a decision input: True when the
-    hottest join key holds more than ``skew_factor`` times the uniform
-    per-key share. One map-side-combinable count per key + a 3-number
-    global agg — memoized on the DataFrame's analyzed-plan semantic
-    hash PLUS its input-file listing (the data-version component: an
-    overwrite at the same path produces new part files and therefore
-    re-profiles; see :func:`clear_skew_cache` for the one case it
-    can't see) so a pipeline pays the profiling scan ONCE per
-    (fact, key) pair no matter how many joins consult it. At 100 TB pass
-    ``sample_fraction`` (hot keys dominate any uniform sample — a 1%
-    sample of a 4×-skewed key is still ~4×-skewed in expectation) or
-    profile yesterday's partition and pass ``skewed=`` to
-    :func:`skew_adaptive_join` directly."""
-    ck = None
-    if cache:
-        try:
-            # inputFiles() is a driver-side listing (no job): it pins
-            # the cache entry to the exact part files profiled, so
-            # re-reading a path whose data was overwritten (new part
-            # files, same schema ⇒ same semanticHash) re-profiles
-            # instead of returning the stale flag.
-            ck = (
-                df._jdf.queryExecution().analyzed().semanticHash(),
-                tuple(sorted(df.inputFiles())),
-                key,
-                skew_factor,
-                sample_fraction,
-            )
-        except Exception:
-            ck = None
-        if ck is not None and ck in _SKEW_CACHE:
-            return _SKEW_CACHE[ck]
-    src = (
-        df.sample(fraction=sample_fraction, seed=7)
-        if sample_fraction is not None
-        else df
-    )
-    freq = src.groupBy(key).agg(F.count("*").alias("n"))
-    row = freq.agg(
-        F.max("n").alias("top_n"),
-        F.sum("n").alias("n_rows"),
-        F.count("*").alias("n_keys"),
-    ).head()
-    flag = bool(
-        row
-        and row["n_rows"]
-        and row["top_n"] * row["n_keys"] > skew_factor * row["n_rows"]
-    )
-    if ck is not None:
-        while len(_SKEW_CACHE) >= _SKEW_CACHE_MAX:
-            _SKEW_CACHE.pop(next(iter(_SKEW_CACHE)))
-        _SKEW_CACHE[ck] = flag
-    return flag
-
-
-def skew_adaptive_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    fact_key: str,
-    dim_key: str,
-    entropy_col: str,
-    n_salts: int = 8,
-    skew_factor: float = SKEW_FACTOR,
-    skewed: bool | None = None,
-    sample_fraction: float | None = None,
-) -> DataFrame:
-    """Measure-then-choose join (r4 VERDICT item 6 — the diagnostics
-    pass now DRIVES the physical choice instead of just reporting):
-    if :func:`detect_join_skew` flags the fact key, join via
-    :func:`salted_join` (dim replicated ``n_salts`` ways, hot key
-    spread over ``n_salts`` reducers); otherwise a plain equi join,
-    paying zero replication. Salting a uniform key would multiply the
-    dim shuffle for nothing; NOT salting a hot key melts one reducer
-    — the measured flag is what picks the right plan at 100 TB, and
-    both arms are plan-gated (tests/test_plans.py). Pass a
-    precomputed ``skewed`` flag (e.g. from yesterday's profile) to
-    skip the detection scan entirely, or ``sample_fraction`` to
-    profile a sample; otherwise detection is memoized per
-    (plan, key) so repeat joins don't re-scan the fact table."""
-    if skewed is None:
-        skewed = detect_join_skew(
-            fact, fact_key, skew_factor, sample_fraction=sample_fraction
-        )
-    if skewed:
-        return salted_join(fact, dim, fact_key, dim_key, n_salts, entropy_col)
-    return fact.join(dim, fact[fact_key] == dim[dim_key])
-
-
 def q_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The time-partitioned landing table end to end: events written
     hive-partitioned by ``event_date`` (pre-shuffled so each day is
@@ -440,9 +311,8 @@ def erase_partitions(
     path: str,
     doomed: Column,
     affected_days: list,
-    partition_col: str = "event_date",
 ) -> None:
-    """Rewrite the hive partitions listed in ``affected_days`` with
+    """Rewrite the ``event_date`` partitions listed in ``affected_days`` with
     the rows matching ``doomed`` removed.
 
     Dynamic partition overwrite only replaces partitions PRESENT in
@@ -460,22 +330,22 @@ def erase_partitions(
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
         cleaned = store.where(
-            F.col(partition_col).isin(affected_days) & ~doomed
+            F.col("event_date").isin(affected_days) & ~doomed
         )
         # partition list of the cleaned frame, collected BEFORE the
         # overwrite mutates the files `cleaned` lazily reads from
         surviving = {
-            r[partition_col]
-            for r in cleaned.select(partition_col).distinct().collect()
+            r["event_date"]
+            for r in cleaned.select("event_date").distinct().collect()
         }
-        repartition_for_write(cleaned, [partition_col]).write.partitionBy(
-            partition_col
+        repartition_for_write(cleaned, ["event_date"]).write.partitionBy(
+            "event_date"
         ).mode("overwrite").parquet(path)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     for day in affected_days:
         if day not in surviving:
-            part_dir = os.path.join(path, f"{partition_col}={day}")
+            part_dir = os.path.join(path, f"event_date={day}")
             shutil.rmtree(part_dir, ignore_errors=True)
 
 

@@ -293,17 +293,20 @@ def _record_stream_stats(q, name: str) -> None:
     }
 
 
-def _await_bounded(q, name: str, timeout: int = 3600) -> None:
+_AWAIT_TIMEOUT_S = 3600
+
+
+def _await_bounded(q, name: str) -> None:
     """availableNow triggers are self-terminating; the timeout is a
     deadlock guard, not a budget — and it must FAIL LOUDLY. Returning
     after a silent timeout would let the caller read a PARTIALLY
     FILLED sink/path: a wrong answer, not an error (r9 audit while
     fixing the sf100 dedup-state OOM; the old 300 s guard sat above
     every sf10 stream but below a 100M-event state build)."""
-    if not q.awaitTermination(timeout):
+    if not q.awaitTermination(_AWAIT_TIMEOUT_S):
         q.stop()
         raise RuntimeError(
-            f"stream {name} still running after {timeout} s — refusing "
+            f"stream {name} still running after {_AWAIT_TIMEOUT_S} s — refusing "
             "to read a partial result"
         )
     _record_stream_stats(q, name)

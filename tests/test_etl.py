@@ -20,7 +20,10 @@ from block_data_fetcher_spark.etl.parsers import (
     parse_token_transfer,
 )
 from block_data_fetcher_spark.etl.schema import TX_JSON_SCHEMA
-from block_data_fetcher_spark.etl.transform import classify_transaction
+from block_data_fetcher_spark.etl.transform import (
+    classify_program_types,
+    program_types,
+)
 
 SYSTEM_ID = "11111111111111111111111111111111"
 TOKEN_ID = "TokenkegQfeZyiNwAJbNbGKPFXCWuBvf9Ss623VQ5DA"
@@ -152,7 +155,10 @@ def test_parse_token_transfer_non_transfer(spark):
 )
 def test_classify_precedence(spark, ids, expected):
     df = spark.createDataFrame([(ids,)], "program_ids array<string>")
-    row = df.select(classify_transaction(F.col("program_ids")).alias("t")).head()
+    ids_col = F.col("program_ids")
+    row = df.select(
+        classify_program_types(ids_col, program_types(ids_col)).alias("t")
+    ).head()
     assert row.t == expected
 
 

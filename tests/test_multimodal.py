@@ -4,7 +4,6 @@ mapInPandas verified against plain-Python computation."""
 from __future__ import annotations
 
 from block_data_fetcher_spark.functions.multimodal import (
-    extract_features,
     frame_sample,
     synth_media,
 )
@@ -19,23 +18,6 @@ def test_media_schema(spark, sf_dir):
     assert "struct" in dt["meta"]
 
 
-def test_features_match_python(spark, sf_dir):
-    docs = {r.doc_id: r.text for r in table(spark, sf_dir, "documents").collect()}
-    feats = {r.media_id: r for r in extract_features(synth_media(spark, sf_dir)).collect()}
-    assert set(feats) == set(docs)
-    for doc_id, text in list(docs.items())[:50]:
-        payload = text.encode("utf-8")
-        f = feats[doc_id]
-        assert f.n_bytes == len(payload)
-        assert f.checksum == sum(payload) % 997
-        assert f.feat == [
-            float(len(payload)),
-            float(payload[0]),
-            float(payload[-1]),
-            float(sum(payload) % 997),
-        ]
-
-
 def test_frame_sample_reassembles(spark, sf_dir):
     media = synth_media(spark, sf_dir).where("media_id < 20")
     frames = frame_sample(media, every=64).collect()
@@ -46,21 +28,6 @@ def test_frame_sample_reassembles(spark, sf_dir):
     for mid, parts in by_id.items():
         joined = b"".join(p for _, p in sorted(parts))
         assert joined == docs[mid].encode("utf-8")
-
-
-def test_resize_downsamples_payload(spark, sf_dir):
-    media = synth_media(spark, sf_dir).where("media_id < 20")
-    from block_data_fetcher_spark.functions.multimodal import resize
-
-    small = {r.media_id: r for r in resize(media, factor=4).collect()}
-    orig = {r.media_id: r for r in media.collect()}
-    assert set(small) == set(orig)
-    for mid, r in small.items():
-        payload = bytes(orig[mid].data)
-        expect = payload[::4]
-        assert bytes(r.data) == expect
-        assert r.meta.n_bytes == len(expect)
-        assert r.meta.format.endswith(";ds4")
 
 
 def test_bmp_ppm_roundtrip_exact():

@@ -477,154 +477,6 @@ def test_triangle_count_no_cross_join(spark, sf_dir):
     assert "Cartesian" not in plan and "CrossJoin" not in plan, plan
 
 
-def test_skew_adaptive_join_flips_with_the_data(spark, sf_dir):
-    """r4 VERDICT item 6: the skew diagnostics must CHOOSE the join
-    plan. A fact table whose hottest key holds ~90% of rows must come
-    out salted (the (key, salt) equi-join keys appear in the plan);
-    a uniform fact table over the same dim must come out plain (no
-    salt column anywhere)."""
-    from pyspark.sql import functions as F
-
-    from block_data_fetcher_spark.storage import (
-        detect_join_skew,
-        skew_adaptive_join,
-    )
-
-    dim = spark.range(10).select(
-        F.col("id").alias("d_key"), (F.col("id") * 2).alias("payload")
-    )
-    # ~90% of rows on key 7, the rest spread over ~10 cold keys — the
-    # hottest key holds ~10x the uniform per-key share
-    skewed = spark.range(2_000).select(
-        F.col("id").alias("rid"),
-        F.when(F.col("id") % 10 < 9, F.lit(7))
-        .otherwise(F.col("id") % 100)
-        .alias("f_key"),
-    )
-    uniform = spark.range(2_000).select(
-        F.col("id").alias("rid"), (F.col("id") % 10).alias("f_key")
-    )
-    assert detect_join_skew(skewed, "f_key")
-    assert not detect_join_skew(uniform, "f_key")
-
-    salted_plan = formatted_plan(
-        skew_adaptive_join(skewed, dim, "f_key", "d_key", "rid")
-    )
-    plain_plan = formatted_plan(
-        skew_adaptive_join(uniform, dim, "f_key", "d_key", "rid")
-    )
-    assert "_fsalt" in salted_plan and "_dsalt" in salted_plan, salted_plan
-    assert "_fsalt" not in plain_plan and "_dsalt" not in plain_plan, plain_plan
-    # the chosen plans must agree on the answer
-    a = sorted(
-        (r["f_key"], r["payload"])
-        for r in skew_adaptive_join(skewed, dim, "f_key", "d_key", "rid")
-        .select("f_key", "payload")
-        .collect()
-    )
-    b = sorted(
-        (r["f_key"], r["payload"])
-        for r in skewed.join(dim, skewed["f_key"] == dim["d_key"])
-        .select("f_key", "payload")
-        .collect()
-    )
-    assert a == b
-
-
-def test_skew_cache_reprofiles_after_overwrite(spark, tmp_path):
-    """ADVICE r6: the skew memo must carry a data-version component.
-    Overwriting a path's data keeps the read plan semantically equal
-    (same schema ⇒ same semanticHash), so a hash-only key would serve
-    the stale flag; the input-file listing in the key forces a
-    re-profile of the rewritten data."""
-    from pyspark.sql import functions as F
-
-    from block_data_fetcher_spark import storage
-    from block_data_fetcher_spark.storage import (
-        clear_skew_cache,
-        detect_join_skew,
-    )
-
-    path = str(tmp_path / "facts")
-    uniform = spark.range(1_000).select(
-        (F.col("id") % 100).alias("f_key")
-    )
-    uniform.write.mode("overwrite").parquet(path)
-    clear_skew_cache()
-    try:
-        assert detect_join_skew(spark.read.parquet(path), "f_key") is False
-        # overwrite IN PLACE with a 9/10-hot key, same schema
-        skewed = spark.range(1_000).select(
-            F.when(F.col("id") % 10 < 9, F.lit(7))
-            .otherwise(F.col("id") % 100)
-            .alias("f_key")
-        )
-        skewed.write.mode("overwrite").parquet(path)
-        assert detect_join_skew(spark.read.parquet(path), "f_key") is True, (
-            "stale skew flag served for rewritten data — the cache key "
-            "is missing the input-file listing component"
-        )
-    finally:
-        clear_skew_cache()
-
-
-def test_skew_detection_is_memoized_and_overridable(spark, sf_dir):
-    """ADVICE r5: detect_join_skew must not re-scan the fact table on
-    every skew_adaptive_join call. The result is memoized per
-    (analyzed-plan, key, factor, sample); a precomputed ``skewed=``
-    flag skips detection entirely; ``sample_fraction`` profiles a
-    sample and still flags a 10×-hot key."""
-    from pyspark.sql import functions as F
-
-    from block_data_fetcher_spark import storage
-    from block_data_fetcher_spark.storage import (
-        detect_join_skew,
-        skew_adaptive_join,
-    )
-
-    dim = spark.range(10).select(
-        F.col("id").alias("d_key"), (F.col("id") * 2).alias("payload")
-    )
-    skewed = spark.range(2_000).select(
-        F.col("id").alias("rid"),
-        F.when(F.col("id") % 10 < 9, F.lit(7))
-        .otherwise(F.col("id") % 100)
-        .alias("f_key"),
-    )
-    # first call computes and caches; poisoning the cache then proves
-    # the second call is served from it (no second profiling job)
-    assert detect_join_skew(skewed, "f_key") is True
-    poisoned = {
-        k: not v
-        for k, v in storage._SKEW_CACHE.items()
-        if k[2] == "f_key"  # key name; [1] is the file-listing (r7)
-    }
-    assert poisoned, "detection result was not cached"
-    storage._SKEW_CACHE.update(poisoned)
-    try:
-        assert detect_join_skew(skewed, "f_key") is False  # cache hit
-    finally:
-        storage._SKEW_CACHE.clear()
-    # fresh after clear → recomputes
-    assert detect_join_skew(skewed, "f_key") is True
-    storage._SKEW_CACHE.clear()
-
-    # sampled profiling still sees the hot key (50% sample of 2k rows)
-    assert detect_join_skew(
-        skewed, "f_key", sample_fraction=0.5, cache=False
-    ) is True
-
-    # precomputed flag overrides detection in both directions
-    forced_plain = formatted_plan(
-        skew_adaptive_join(skewed, dim, "f_key", "d_key", "rid", skewed=False)
-    )
-    forced_salted = formatted_plan(
-        skew_adaptive_join(skewed, dim, "f_key", "d_key", "rid", skewed=True)
-    )
-    assert "_fsalt" not in forced_plain
-    assert "_fsalt" in forced_salted and "_dsalt" in forced_salted
-
-
 def test_embed_near_dup_join_is_cluster_blocked(spark, sf_dir):
     """r4 VERDICT item 2: the near-dup pair join must never be keyed
     label-wide (Σ n_label² quadratic — the catalog's last unbounded
