@@ -278,11 +278,11 @@ def main() -> None:
         if name.startswith("q_stream") and streaming_jobs.STREAM_STATS:
             for k, v in streaming_jobs.STREAM_STATS.items():
                 stream_stats.setdefault(k, v)
-        # Connected-components convergence telemetry (r10 VERDICT item
-        # 7): rounds / escaped / reason per CC-family query rides the
-        # artifact so sf100 convergence regressions are visible without
-        # a rerun. LAST_CC_STATS is cleared before each query, so a
-        # non-empty dict here is attributable to THIS query.
+        # Connected-components convergence telemetry: star_components'
+        # rounds / reason per CC-family query rides the artifact so
+        # convergence regressions are visible without a rerun.
+        # LAST_CC_STATS is cleared before each query, so a non-empty
+        # dict here is attributable to THIS query.
         if hashing.LAST_CC_STATS:
             cc_stats[name] = dict(hashing.LAST_CC_STATS)
         # Incremental artifact: a pass that dies at query N (ENOSPC,

@@ -53,6 +53,27 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def fixture_bytes(sf_dir: str, name: str) -> int | None:
+    """On-disk size of the ``<sf_dir>/<name>.parquet`` fixture, or None
+    if unreadable. The fixture may be a single file (every shipped
+    fixture) or a directory of part files (any Spark-written fixture),
+    whose data-file sizes are summed, skipping _SUCCESS/.crc."""
+    import os
+
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    try:
+        if os.path.isdir(path):
+            return sum(
+                os.path.getsize(os.path.join(root, f))
+                for root, _dirs, files in os.walk(path)
+                for f in files
+                if not f.startswith(("_", "."))
+            )
+        return os.path.getsize(path)
+    except OSError:
+        return None
+
+
 def fixture_buckets(
     sf_dir: str,
     name: str,
@@ -63,32 +84,19 @@ def fixture_buckets(
     constant (VERDICT r8 weak #1): a fixed ``mod 64`` key caps a
     cogroup stage at 64 tasks and makes per-task pandas state 1/64 of
     the table — linear in corpus size, an OOM/straggler at the 100×
-    target. Sizing from the on-disk bytes (same policy as
-    ``streaming.jobs._stream_partitions`` and the AQE initial-partition
-    sizing in ``session.py``) keeps per-bucket state ~constant
-    (~32 MB parquet ≈ low hundreds of MB in Arrow/pandas) while task
-    count grows with the data: sf0.1 (2 MB events) stays at the floor
-    where more buckets is pure per-call overhead; a 1 TB events table
-    gets ~32k buckets.
+    target. Sizing from the on-disk bytes (:func:`fixture_bytes`, the
+    same signal as ``streaming.jobs._stream_partitions`` and the AQE
+    initial-partition sizing in ``session.py``) keeps per-bucket state
+    ~constant (~32 MB parquet ≈ low hundreds of MB in Arrow/pandas)
+    while task count grows with the data: sf0.1 (2 MB events) stays at
+    the floor where more buckets is pure per-call overhead; a 1 TB
+    events table gets ~32k buckets.
 
-    Walks a directory fixture the same way ``_stream_partitions``
-    does (skipping _SUCCESS/.crc); non-local storage falls back to
-    the floor rather than failing the query — on a real cluster the
+    An unreadable fixture (or non-local storage) falls back to the
+    floor rather than failing the query — on a real cluster the
     caller should size from the catalog's table statistics instead."""
-    import os
-
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        if os.path.isdir(path):
-            size = sum(
-                os.path.getsize(os.path.join(root, f))
-                for root, _dirs, files in os.walk(path)
-                for f in files
-                if not f.startswith(("_", "."))
-            )
-        else:
-            size = os.path.getsize(path)
-    except OSError:
+    size = fixture_bytes(sf_dir, name)
+    if size is None:
         return floor
     return max(floor, int(size // bytes_per_bucket))
 

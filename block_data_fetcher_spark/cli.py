@@ -45,6 +45,13 @@ class Args:
             raise ValueError("Batch size must be greater than 0")
         if self.max_retries <= 0:
             raise ValueError("Max retries must be greater than 0")
+        # time.sleep rejects a negative length, which would turn the
+        # first transient RPC error into a ValueError instead of a retry
+        if self.retry_delay < 0:
+            raise ValueError("Retry delay must not be negative")
+        # calculate_end_slot would put the end below the start
+        if self.num_blocks is not None and self.num_blocks < 1:
+            raise ValueError("Number of blocks must be at least 1")
 
     def calculate_end_slot(self, start_slot: int) -> int:
         """Reference ``Cli::calculate_end_slot`` (cli.rs:75-83)."""

@@ -433,261 +433,15 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup groups a curation pipeline actually consumes (keep one per
     cluster).
 
-    Iterative min-label propagation as pure DataFrame ops: each round
-    joins the symmetric edge list to the current labels, takes the
-    neighborhood min, and converges when the label sum stops falling
-    (the sum is strictly monotone, so one scalar per round decides —
-    no row-diff join). Rounds are bounded by component diameter;
-    LSH-bucket cliques keep that small (fixture max component = 4).
-
-    Each round's label frame is checkpointed via
-    ``storage.iter_checkpoint`` (lazily — the round's convergence
-    aggregate is the materializing action): lineage truncates to the
-    checkpoint instead of stacking 12 joins deep (the r1 VERDICT
-    lineage-growth item), and unlike persist() no CacheManager entry
-    outlives the call — blocks are freed by the ContextCleaner when
-    the caller drops the frame. The helper picks localCheckpoint only
-    on a pure-local master; on a distributed master it requires and
-    uses a reliable checkpoint dir (executor loss would otherwise
-    lose blocks with no lineage to rebuild them — r8 VERDICT item 3).
-    A pathological giant component calls for the
-    large-star/small-star variant, which this loop's join shape
-    extends to directly. The DuckDB oracle computes the same fixpoint
-    as a recursive CTE over the identical edge SQL."""
-    spark = _iter_session(spark)
-    docs = table(spark, sf_dir, "documents")
-    pairs = minhash_pairs(parallelize(docs, spark)).where(
-        F.col("est_sim") >= 0.5
-    )
-    # pairs_canonical: minhash_pairs emits a unique doc_a<doc_b set by
-    # construction (first-collision-band dedup) — same contract
-    # q_cc_star asserts with canonical=True.
-    return min_label_components(
-        spark, docs.select("doc_id"), pairs, pairs_canonical=True
-    )
+    The dedup family's name for :func:`q_cc_star`: the same
+    alternating-star components over the identical edge set, checked
+    against the same recursive-CTE oracle."""
+    return q_cc_star(spark, sf_dir)
 
 
-# Last min_label_components run in this process: round count, whether
-# the contract-then-star escape fired, and why ("converged" | "stalled"
-# — the adaptive convergence-rate trigger | "budget"). Read by tests
-# and the scale scripts; purely observational.
+# Last star_components run in this process: {rounds, reason}. Read by
+# bench.py's cc_stats; purely observational.
 LAST_CC_STATS: dict[str, object] = {}
-
-# Stall trigger: escape to contract-then-star when a label round
-# retires less than a 1/CC_STALL_DECAY fraction of the previous
-# frontier. r10 shipped 2 (strictly "less than half") and the sf100
-# single pass measured the consequence: the dup graph's frontier decays
-# at ~1.7×/round for six rounds before the trigger fired — 928 s vs
-# q_cc_star's 433 s (2.14×, just over the ≤2× criterion). Geometric
-# collapse on bounded-diameter LSH-clique graphs is far steeper than 4×
-# (the fixtures retire the whole frontier in one round), so requiring
-# ≥4× decay to KEEP propagating fires the escape ~3 rounds earlier on
-# diameter-dominated graphs while still never firing on graphs that
-# converge outright. The escape is exact from any partial state, so
-# this constant is purely a cost dial.
-CC_STALL_DECAY = 4
-
-# Scale routing (VERDICT r12 item 4): above this many UNDIRECTED edge
-# pairs, min_label_components skips label propagation entirely and
-# runs alternating-star from round one. Label-prop's only edge over
-# star is fewer/cheaper rounds on tiny bounded-diameter graphs; its
-# per-round cost is a full-|E| join either way, and the r12 sf100
-# decade pass measured the big-graph outcome directly — the dup graph
-# (455M pairs at sf100) stalled after 2 label rounds and rode the
-# star escape to 863.7 s, 1.98× the 435.7 s of running star outright
-# (q_cc_star, same graph). Every shipped fixture's dup graph is ≤ ~1k
-# pairs (sf0.1: 809), five orders of magnitude under the cutoff, so
-# fixture behavior (and the round-count pins in tests) is unchanged.
-CC_LABEL_PROP_MAX_EDGES = 200_000
-
-
-def min_label_components(
-    spark: SparkSession,
-    nodes: DataFrame,
-    pairs: DataFrame,
-    max_rounds: int = 12,
-    pairs_canonical: bool = False,
-) -> DataFrame:
-    """Reusable min-label-propagation connected components (the
-    q_dup_clusters loop, extracted so other match graphs — e.g. the
-    entity-resolution SNM edges — can cluster with the same machinery).
-    ``nodes``: (doc_id); ``pairs``: (doc_a, doc_b) undirected match
-    edges. Returns (doc_id, cluster_id = component min).
-
-    DIAMETER ESCAPE HATCH (r8): label propagation is O(diameter)
-    rounds, and at sf100 the LSH dup graph grew a component deeper
-    than the round budget (the exact failure mode the docstrings had
-    only predicted; the r7 code raised). Instead of raising, the loop
-    now CONTRACTS the graph by the partial labels — after k rounds
-    every component of diameter ≤ k has collapsed to a self-loop and
-    vanishes; only the deep components survive, with label values as
-    super-nodes — and finishes that (much smaller) residual graph
-    with the O(log d) alternating-star rounds. Labels only ever
-    decrease and the component minimum labels itself, so
-    star-min-of-labels == component-min-of-nodes: the escalated
-    result is EXACTLY the converged fixpoint, and the recursive-CTE
-    oracle is unchanged. Unit-pinned on a path graph 4× deeper than
-    the budget."""
-    spark = _iter_session(spark)
-    # Canonicalize and checkpoint the UNDIRECTED pair set FIRST — half
-    # the rows of the symmetric union — because the routing decision
-    # and both algorithms derive from it. ``pairs_canonical`` callers
-    # (minhash_pairs output is a unique a<b set by construction) skip
-    # the distinct: at sf100 that exchange carries the whole 455M-pair
-    # candidate graph once more, the exact cost q_cc_star's
-    # canonical=True flag exists to avoid. The first routed decade run
-    # paid for skipping this split: it checkpointed the 910M-row
-    # symmetric union and then let star re-canonicalize it with a
-    # 910M-row distinct — 791 s, 1.66× q_cc_star on the same graph.
-    canon = pairs.select(
-        F.least("doc_a", "doc_b").alias("doc_a"),
-        F.greatest("doc_a", "doc_b").alias("doc_b"),
-    ).where(F.col("doc_a") != F.col("doc_b"))
-    if not pairs_canonical:
-        canon = canon.distinct()
-    # eager: materialized ONCE at full parallelism (the expensive
-    # candidate build), reused by the route taken below
-    canon = iter_checkpoint(canon)
-    n_pairs = canon.count()
-    _size_rounds_to(spark, 2 * n_pairs)
-    if n_pairs > CC_LABEL_PROP_MAX_EDGES:
-        # Big graph: go straight to alternating-star (O(log d) rounds,
-        # giant-component safe) instead of burning label rounds that
-        # the stall trigger would abandon anyway. The checkpointed
-        # canonical pairs feed star directly (canonical=True — no
-        # distinct, no symmetric blow-up). Result is the identical
-        # fixpoint (component-min labels), so the recursive-CTE oracle
-        # is unchanged.
-        # Reset telemetry: star's label-prop-finisher branch keys off
-        # LAST_CC_STATS["algo"], which a PREVIOUS call in this process
-        # may have left at "label_prop" — without the clear, a routed
-        # run would mis-report the stale escape stats.
-        LAST_CC_STATS.clear()
-        # n_edges: canon is checkpointed and counted just above — star
-        # must not re-materialize it (ADVICE r13: the first routed
-        # shape paid one redundant full write+read+count of the
-        # ~455M-pair graph before round one).
-        out = star_components(
-            spark, nodes, canon, canonical=True, n_edges=n_pairs
-        )
-        LAST_CC_STATS.update(routed="edge_threshold", edge_pairs=n_pairs)
-        return out
-    edges = canon.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).union(
-        canon.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    )
-    labels = nodes.select(
-        "doc_id", F.col("doc_id").alias("cluster_id")
-    ).transform(lambda d: iter_checkpoint(d, eager=False))
-
-    def propagate(lab: DataFrame) -> DataFrame:
-        nbr = (
-            edges.join(lab, edges.dst == lab.doc_id)
-            .groupBy("src")
-            .agg(F.min("cluster_id").alias("nbr_min"))
-        )
-        return lab.join(nbr, lab.doc_id == nbr.src, "left").select(
-            "doc_id",
-            F.least(
-                F.col("cluster_id"),
-                F.coalesce("nbr_min", F.col("cluster_id")),
-            ).alias("cluster_id"),
-            # frontier size — the convergence-RATE signal the adaptive
-            # escape reads; rides the round's aggregate for free
-            (F.col("nbr_min") < F.col("cluster_id"))
-            .cast("long")
-            .alias("chg"),
-        )
-
-    # The identity sum rides the first round's aggregate instead of
-    # costing its own job (labels only DECREASE, so sum equality is a
-    # complete convergence test). One hop per round: deeper fused
-    # multi-hop plans were tried and lose — per-round codegen compile
-    # outweighs the saved actions at any SF where rounds are few.
-    #
-    # ADAPTIVE ESCAPE (r10, VERDICT r9 item 6): waiting for the full
-    # 12-round budget cost sf100 1574 s vs q_cc_star's 397 s — eight
-    # full-graph rounds grinding down a deep chain one hop each. The
-    # measured signal: on bounded-diameter (clique-ish LSH) graphs the
-    # changed-label count COLLAPSES geometrically per round, while on
-    # a deep path it stays ~flat (each unconverged node improves by
-    # one hop every round). So when a round retires less than half
-    # the previous frontier, the residue is diameter-dominated and
-    # the O(log d) contract-then-star finish is strictly cheaper than
-    # continuing — escape NOW instead of at the budget. The escape is
-    # exact from ANY partial label state (see docstring), so the
-    # trigger point is purely a cost choice; every shipped fixture
-    # converges before the signal can fire (round-count pinned in
-    # tests).
-    cur_sum = None
-    prev_changed = None
-    reason = "budget"
-    for rnd in range(max_rounds):
-        new = iter_checkpoint(propagate(labels), eager=False)
-        row = new.agg(
-            F.sum("cluster_id").alias("s"),
-            F.sum("doc_id").alias("ident"),
-            F.sum("chg").alias("nc"),
-        ).first()
-        if cur_sum is None:
-            cur_sum = row.ident
-        labels = new.select("doc_id", "cluster_id")
-        if row.s == cur_sum:
-            LAST_CC_STATS.update(
-                rounds=rnd + 1, escaped=False, reason="converged",
-                algo="label_prop",
-            )
-            return labels
-        if (
-            prev_changed is not None
-            and (row.nc or 0) * CC_STALL_DECAY > prev_changed
-        ):
-            reason = "stalled"
-            LAST_CC_STATS.update(
-                rounds=rnd + 1, escaped=True, reason=reason,
-                algo="label_prop",
-            )
-            break
-        prev_changed = row.nc or 0
-        cur_sum = row.s
-    else:
-        # Round budget exhausted: a component deeper than max_rounds.
-        LAST_CC_STATS.update(
-            rounds=max_rounds, escaped=True, reason=reason,
-            algo="label_prop",
-        )
-    # Deep components survive: contract the graph by the partial
-    # labels (collapsed components become self-loops and drop out)
-    # and finish the (much smaller) residual with O(log d) star
-    # rounds.
-    la = labels.select(
-        F.col("doc_id").alias("src"), F.col("cluster_id").alias("la")
-    )
-    lb = labels.select(
-        F.col("doc_id").alias("dst"), F.col("cluster_id").alias("lb")
-    )
-    contracted = (
-        edges.join(la, "src")
-        .join(lb, "dst")
-        .where(F.col("la") != F.col("lb"))
-        .select(
-            F.least("la", "lb").alias("doc_a"),
-            F.greatest("la", "lb").alias("doc_b"),
-        )
-        .distinct()
-    )
-    super_nodes = labels.select(
-        F.col("cluster_id").alias("doc_id")
-    ).distinct()
-    star = star_components(
-        spark, super_nodes, contracted, canonical=True
-    ).select(
-        F.col("doc_id").alias("la"), F.col("cluster_id").alias("root")
-    )
-    return labels.join(star, labels.cluster_id == star.la).select(
-        "doc_id", F.col("root").alias("cluster_id")
-    )
 
 
 def _iter_session(spark: SparkSession) -> SparkSession:
@@ -788,28 +542,31 @@ def q_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components via alternating LARGE-STAR / SMALL-STAR
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SoCC'14) over the same MinHash-LSH dup graph as
-    :func:`q_dup_clusters` — the giant-component-safe variant that r1
-    flagged as the scale escape hatch for min-label propagation.
+    :func:`q_dup_clusters`, which runs this same query.
 
-    Why it scales where label propagation stalls: propagation needs
-    O(diameter) rounds (a path-shaped component of length L takes L
-    rounds); star rounds square away long paths in O(log L) by
-    re-pointing every node at its neighborhood minimum. Each phase is
-    one window-min over the node key + an edge rewrite — no
-    collect, no driver-side graph.
+    Star rounds need O(log diameter) rounds where min-label
+    propagation needs O(diameter) (a path-shaped component of length L
+    takes L label rounds): every round re-points each node at its
+    neighborhood minimum. Each phase is one window-min over the node
+    key + an edge rewrite — no collect, no driver-side graph.
 
     - large-star(u): for neighbors v > u, emit (v, min Γ⁺(u));
     - small-star(u): for neighbors v < u plus u itself, emit
       (v, min Γ⁺(u)).
 
     The undirected edge set is canonicalized (a < b, no self-loops,
-    distinct) and localCheckpoint-ed per round; convergence = the
-    canonical set's (count, hash-sum) signature repeating. At the
-    fixpoint every component is a star centered on its minimum, so the
-    label read-off is a single grouped min. The oracle is the SAME
-    recursive-CTE fixpoint as q_dup_clusters: both algorithms must
-    land on identical clusters."""
-    spark = _iter_session(spark)
+    distinct) and checkpointed per round via
+    ``storage.iter_checkpoint`` (lazily — the round's convergence
+    signature is the materializing action), so the returned labels
+    read a checkpointed scan instead of stacking every round's joins,
+    and unlike persist() no CacheManager entry outlives the call.
+    Convergence = the canonical set's (count, hash) signature
+    repeating. At the fixpoint every component is a star centered on
+    its minimum, so the label read-off is a single grouped min. The
+    DuckDB oracle computes the same fixpoint as a recursive CTE over
+    the identical edge SQL. ``canonical=True``: minhash_pairs emits a
+    unique doc_a < doc_b set by construction (first-collision-band
+    dedup)."""
     docs = table(spark, sf_dir, "documents")
     pairs = minhash_pairs(parallelize(docs, spark)).where(
         F.col("est_sim") >= 0.5
@@ -822,45 +579,28 @@ def star_components(
     nodes: DataFrame,
     pairs: DataFrame,
     canonical: bool = False,
-    n_edges: int | None = None,
 ) -> DataFrame:
-    """Reusable alternating-star connected components (the q_cc_star
-    loop, extracted): O(log diameter) rounds, safe for the long
-    path-shaped match chains that stall O(diameter) label propagation
-    (the sf1 entity-resolution failure mode — SNM windows chain
-    near-duplicates hundreds deep). ``nodes``: (doc_id); ``pairs``:
-    (doc_a, doc_b). Returns (doc_id, cluster_id = component min).
+    """Alternating-star connected components (the q_cc_star loop,
+    shared by q_dup_clusters and q_entity_resolution): O(log
+    diameter) rounds, safe for the long path-shaped match chains that
+    SNM windows build (near-duplicates chained hundreds deep).
+    ``nodes``: (doc_id), unique; ``pairs``: (doc_a, doc_b), both ends
+    in ``nodes``. Returns (doc_id, cluster_id = component min).
 
     ``canonical=True`` asserts the caller's pairs are already unique
     with doc_a < doc_b (true for :func:`minhash_pairs`, whose
     first-collision-band dedup makes its union a set) and skips the
     canonicalization ``distinct()`` — at sf100 that exchange carried
-    the whole candidate graph a second time before round one.
-
-    ``n_edges`` (ADVICE r13): set by a caller that ALREADY
-    checkpointed and counted the canonical pair set (the
-    edge-threshold route in :func:`min_label_components` does exactly
-    that to make its routing decision). With it, the one-round-zero
-    checkpoint+count here is skipped — at sf100 that redundant
-    write+read+count carries the ~455M-pair candidate graph once more
-    before the first star round. Only meaningful with
-    ``canonical=True``; the pairs must be checkpoint-backed so the
-    star rounds don't re-derive the candidate build from lineage."""
+    the whole candidate graph a second time before round one."""
     spark = _iter_session(spark)
-    if canonical and n_edges is not None:
-        edges = pairs.select(
-            F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
-        )
-        _size_rounds_to(spark, n_edges)
-    else:
-        edges = pairs.select(
-            F.least("doc_a", "doc_b").alias("a"),
-            F.greatest("doc_a", "doc_b").alias("b"),
-        ).where(F.col("a") != F.col("b"))
-        if not canonical:
-            edges = edges.distinct()
-        edges = iter_checkpoint(edges)
-        _size_rounds_to(spark, edges.count())
+    edges = pairs.select(
+        F.least("doc_a", "doc_b").alias("a"),
+        F.greatest("doc_a", "doc_b").alias("b"),
+    ).where(F.col("a") != F.col("b"))
+    if not canonical:
+        edges = edges.distinct()
+    edges = iter_checkpoint(edges)
+    _size_rounds_to(spark, edges.count())
 
     def sym(e: DataFrame) -> DataFrame:
         # One explode, not a self-union (r16, guide §2.4): inside a
@@ -936,32 +676,22 @@ def star_components(
         edges = iter_checkpoint(edges, eager=False)
         cur = signature(edges)
         if cur == prev:
-            if LAST_CC_STATS.get("algo") == "label_prop":
-                # Running as the contract-then-star FINISHER of an
-                # escaped label-prop pass: keep that pass's stats
-                # (tests pin them) and append the residual's rounds.
-                LAST_CC_STATS.update(star_rounds=rnd + 1)
-            else:
-                LAST_CC_STATS.update(
-                    rounds=rnd + 1, escaped=False, reason="converged",
-                    algo="star",
-                )
+            LAST_CC_STATS.update(rounds=rnd + 1, reason="converged")
             break
         prev = cur
     else:
         raise RuntimeError("cc_star: no fixpoint in 15 rounds")
 
-    members = sym(edges).groupBy("a").agg(F.min("b").alias("mn"))
-    labels = members.select(
-        F.col("a").alias("doc_id"),
-        F.least("mn", F.col("a")).alias("cluster_id"),
-    )
+    # Each node labels itself; at the fixpoint every component is a
+    # star on its minimum, so the grouped min over self ∪ neighbors is
+    # the component minimum — a union, not a join back to the nodes,
+    # so the result reads only the checkpointed edges and the nodes.
     return (
-        nodes.select("doc_id")
-        .join(labels, "doc_id", "left")
-        .select(
-            "doc_id", F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id")
-        )
+        nodes.select(F.col("doc_id").alias("a"), F.col("doc_id").alias("b"))
+        .union(sym(edges))
+        .groupBy("a")
+        .agg(F.min("b").alias("cluster_id"))
+        .withColumnRenamed("a", "doc_id")
     )
 
 

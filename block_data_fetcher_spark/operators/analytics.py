@@ -2996,8 +2996,8 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-iteration PageRank over the trade graph (edge u→v when a
     customer in nation u bought from a supplier in nation v) — the
     second iterative graph operator next to connected components
-    (q_dup_clusters / q_cc_star): importance propagation instead of
-    label propagation.
+    (q_cc_star's alternating-star rounds): importance propagation
+    instead of component labeling.
 
     Dataflow per iteration (the shape that matters at 100 TB): ranks
     stay DISTRIBUTED — contributions are edges ⋈ ranks on src (one

@@ -1,7 +1,8 @@
 """Graph analytics over the trade graph.
 
 Third graph-operator family next to connected components
-(``functions/hashing.py`` q_dup_clusters / q_cc_star) and PageRank
+(``functions/hashing.py`` star_components, behind q_cc_star and
+q_dup_clusters) and PageRank
 (``operators/analytics.py`` q_pagerank): triangle counting (clustering
 structure) and multi-source BFS (reachability / hop distance).  The
 reference repo delegates all querying to Postgres; these are the graph
@@ -102,8 +103,8 @@ def q_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     one shuffle per round on the edge key, frontier size bounded by
     node count; the visited set grows monotonically and is min-merged
     with a map-side-combinable groupBy. Fixed depth keeps the plan
-    statically bounded; an open-ended BFS would localCheckpoint per
-    round like q_dup_clusters."""
+    statically bounded; an open-ended BFS would checkpoint per round
+    (``storage.iter_checkpoint``) like star_components."""
     spark = _iter_session(spark)
     edges = _trade_edges(spark, sf_dir).filter(F.col("src") != F.col("dst")).persist(ITER_STORAGE)
     _size_rounds_to(spark, edges.count())  # loop shuffles sized to the bounded graph

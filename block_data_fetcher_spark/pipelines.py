@@ -513,11 +513,10 @@ def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     with Sorted Neighborhood (q_fuzzy_match's lead-window candidates,
     N·W by construction), (2) SCORE candidates by edit distance, (3)
     take scoring pairs as MATCH edges, (4) CLUSTER them with
-    alternating-star connected components (star_components — NOT the
-    min-label loop: SNM edges are sort-ADJACENCY, so match components
-    are long PATHS whose diameter grows with the corpus, and label
-    propagation's O(diameter) rounds hit its round cap at sf1 while
-    star rounds square paths away in O(log L)), (5) emit one GOLDEN
+    alternating-star connected components (star_components, the
+    q_cc_star loop: SNM edges are sort-ADJACENCY, so match components
+    are long PATHS whose diameter grows with the corpus, and star
+    rounds square paths away in O(log L)), (5) emit one GOLDEN
     RECORD per multi-member entity: canonical id (= component min),
     member count, and how many languages the duplicates span.
 

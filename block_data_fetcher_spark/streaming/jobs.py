@@ -47,6 +47,7 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
+from ..catalog import fixture_bytes
 from ..etl.load import (
     _atomic_swap,
     _exists,
@@ -110,7 +111,7 @@ def _split_events_source(spark: SparkSession, sf_dir: str) -> str:
     import time
 
     src = os.path.join(sf_dir, "events.parquet")
-    n = _split_slices(_source_bytes(sf_dir) or 0)
+    n = _split_slices(fixture_bytes(sf_dir, "events") or 0)
     tag = re.sub(r"\W+", "_", os.path.abspath(sf_dir)).strip("_")
     out = scratch_dir(spark, "stream_src", f"events_{tag}_{n}")
     if not os.path.isfile(os.path.join(out, "_SUCCESS")):
@@ -149,7 +150,7 @@ def events_stream(
     # glob-filter to the events file. Watermarks demand TIMESTAMP
     # (LTZ), not NTZ — cast under the pinned-UTC session, which maps
     # each naive micros value to the same instant the oracle sees.
-    if split and (_source_bytes(sf_dir) or 0) >= _SPLIT_THRESHOLD:
+    if split and (fixture_bytes(sf_dir, "events") or 0) >= _SPLIT_THRESHOLD:
         return (
             spark.readStream.schema(_EVENTS_RAW_SCHEMA)
             .option("maxFilesPerTrigger", 1)  # one time slice per batch
@@ -165,28 +166,6 @@ def events_stream(
     )
 
 
-def _source_bytes(sf_dir: str, filename: str = "events.parquet") -> int | None:
-    """On-disk size of a streamed source file, or None if unreadable.
-
-    The source may be a single file (every shipped fixture) or a
-    directory of part files (any Spark-written fixture) — a directory
-    is walked and its data-file sizes summed, so a future multi-file
-    fixture sizes correctly instead of silently hitting the OSError
-    floor (r6 verdict nit)."""
-    path = os.path.join(sf_dir, filename)
-    try:
-        if os.path.isdir(path):
-            return sum(
-                os.path.getsize(os.path.join(root, f))
-                for root, _dirs, files in os.walk(path)
-                for f in files
-                if not f.startswith(("_", "."))  # skip _SUCCESS/.crc
-            )
-        return os.path.getsize(path)
-    except OSError:
-        return None
-
-
 def _stream_partitions(sf_dir: str) -> int:
     """State-store partition count sized to the SOURCE (the analog of
     sizing to |executors| at stream start on a real cluster — the
@@ -195,7 +174,7 @@ def _stream_partitions(sf_dir: str) -> int:
     growing toward the core count once the events file is large
     enough that state-op parallelism dominates (r6: the flat 8 capped
     sf10's 6M-event state stages at a quarter of the cores)."""
-    size = _source_bytes(sf_dir)
+    size = fixture_bytes(sf_dir, "events")
     if size is None:
         return 8
     return min(32, max(8, int(size // (4 << 20))))
@@ -218,7 +197,7 @@ _HEAP_STATE_MAX_SRC_BYTES = 64 << 20
 def _state_provider(
     sf_dir: str,
     *,
-    source: str = "events.parquet",
+    source: str = "events",
     weight: int = 1,
 ) -> str:
     """State-store provider sized to the SOURCE (r15, guide §5.1).
@@ -244,7 +223,7 @@ def _state_provider(
     within one availableNow trigger: stream-stream joins buffer both
     sides' horizons, so they pass weight=2 — halving the effective
     heap threshold."""
-    size = _source_bytes(sf_dir, source)
+    size = fixture_bytes(sf_dir, source)
     if size is not None and size * weight <= _HEAP_STATE_MAX_SRC_BYTES:
         return _PROVIDER_HEAP
     return _PROVIDER_ROCKSDB
@@ -1383,7 +1362,7 @@ def q_stream_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
             token_count("text").alias("n_tokens"),
         )
     )
-    return _run_to_memory(curated, "stream_curate", "append", _stream_partitions(sf_dir), _state_provider(sf_dir, source="documents.parquet"))
+    return _run_to_memory(curated, "stream_curate", "append", _stream_partitions(sf_dir), _state_provider(sf_dir, source="documents"))
 
 
 def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -32,6 +32,11 @@ def test_validation():
         _args(batch_size=0).validate()
     with pytest.raises(ValueError, match="Max retries"):
         _args(max_retries=0).validate()
+    with pytest.raises(ValueError, match="Retry delay"):
+        _args(retry_delay=-1).validate()
+    with pytest.raises(ValueError, match="Number of blocks"):
+        _args(num_blocks=0).validate()
+    _args(retry_delay=0, num_blocks=1).validate()  # ok
     _args(start_slot=5, end_slot=10).validate()  # ok
 
 

@@ -1,8 +1,8 @@
 """Cluster-safety tests for iterative-loop state (VERDICT r8 item 3).
 
 ``storage.iter_checkpoint`` is the single chokepoint every iterative
-operator (CC label propagation, alternating-star CC, k-means
-assignment, profile-stats count reuse, corpus-curate stage reuse) uses
+operator (alternating-star CC, k-means assignment, profile-stats
+count reuse, corpus-curate stage reuse) uses
 to cut lineage.  Its contract:
 
 * pure local master, no checkpoint dir  → ``localCheckpoint`` with
@@ -167,9 +167,10 @@ _CLUSTER_SCRIPT = textwrap.dedent(
     """
 )
 
-# Representative queries per multi-node risk class: the two iterative
-# CC loops (reliable checkpoint), a RocksDB-backed stream with a file
-# sink, an Arrow/pandas path, and a scratch-keyed format sink. The
+# Representative queries per multi-node risk class: both catalog names
+# of the iterative CC loop (reliable checkpoint), a RocksDB-backed
+# stream with a file sink, an Arrow/pandas path, and a scratch-keyed
+# format sink. The
 # ENTIRE 253-query gate replica runs on this master out of band —
 # `python scripts/driver_gate.py --master local-cluster[2,2,2048]`,
 # recorded as GATE_CLUSTER_r10.json (253/253, 0 failed).

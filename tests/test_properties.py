@@ -14,6 +14,7 @@ oracle suite covers volume.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -764,53 +765,69 @@ def test_fuzzy_snm_invariants(spark, texts):
                 assert (a, b) in got, (a, b, pairs)
 
 
-def test_star_components_handles_long_paths(spark):
-    """The regression behind the sf1 entity-resolution failure: on a
-    PATH graph of length L, min-label propagation needs L rounds (and
-    escalated at its cap since r8) while alternating-star converges
-    in O(log L) — and both must agree with the ground truth on graphs
-    where the label loop still converges."""
-    from block_data_fetcher_spark.functions.hashing import (
-        min_label_components,
-        star_components,
-    )
+# two 4-cliques plus an isolated node: the bounded-diameter shape the
+# LSH dup graph takes
+_CLIQUES = [
+    (a, b)
+    for grp in ([0, 1, 2, 3], [10, 11, 12, 13])
+    for a in grp
+    for b in grp
+    if a < b
+]
+_CLIQUE_NODES = [0, 1, 2, 3, 10, 11, 12, 13, 99]
+_CLIQUE_LABELS = {0: 0, 1: 0, 2: 0, 3: 0, 10: 10, 11: 10, 12: 10, 13: 10, 99: 99}
 
-    # path 0-1-2-...-39 plus isolated nodes 40..44
-    edges = [(i, i + 1) for i in range(39)]
+
+@pytest.mark.parametrize(
+    "edges, node_ids, canonical, want",
+    [
+        # path 0-1-...-39 (the SNM match-chain shape) plus isolated
+        # nodes 40..44
+        pytest.param(
+            [(i, i + 1) for i in range(39)],
+            range(45),
+            False,
+            {i: 0 for i in range(40)} | {i: i for i in range(40, 45)},
+            id="path",
+        ),
+        pytest.param(
+            [(0, 1), (1, 2), (10, 11)],
+            range(13),
+            False,
+            {i: i for i in range(13)} | {1: 0, 2: 0, 11: 10},
+            id="shallow",
+        ),
+        pytest.param(_CLIQUES, _CLIQUE_NODES, False, _CLIQUE_LABELS, id="cliques"),
+        # reversed and duplicate orientations: the default path must
+        # canonicalize them away
+        pytest.param(
+            _CLIQUES + [(1, 0), (13, 12), (2, 3)],
+            _CLIQUE_NODES,
+            False,
+            _CLIQUE_LABELS,
+            id="cliques_noncanonical",
+        ),
+        pytest.param(
+            _CLIQUES, _CLIQUE_NODES, True, _CLIQUE_LABELS, id="cliques_canonical"
+        ),
+    ],
+)
+def test_star_components_labels_component_min(
+    spark, edges, node_ids, canonical, want
+):
+    """Alternating-star labels every node with its component's
+    minimum, isolated nodes with themselves — on a path graph whose
+    diameter far exceeds the star round count, on a shallow graph,
+    and on cliques given canonical or with reversed duplicates."""
+    from block_data_fetcher_spark.functions.hashing import star_components
+
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    nodes = spark.createDataFrame(
-        [(i,) for i in range(45)], "doc_id long"
-    )
+    nodes = spark.createDataFrame([(i,) for i in node_ids], "doc_id long")
     got = {
         r["doc_id"]: r["cluster_id"]
-        for r in star_components(spark, nodes, pairs).collect()
+        for r in star_components(spark, nodes, pairs, canonical).collect()
     }
-    want = {i: 0 for i in range(40)} | {i: i for i in range(40, 45)}
     assert got == want
-
-    # the label loop's former failure mode on the same input: since r8
-    # it escalates (contract by partial labels, star-finish) instead
-    # of raising, and must land on the identical ground truth
-    lab = {
-        r["doc_id"]: r["cluster_id"]
-        for r in min_label_components(spark, nodes, pairs).collect()
-    }
-    assert lab == want
-
-    # and agreement on a shallow graph (where both are valid)
-    shallow = spark.createDataFrame(
-        [(0, 1), (1, 2), (10, 11)], "doc_a long, doc_b long"
-    )
-    n2 = spark.createDataFrame([(i,) for i in range(13)], "doc_id long")
-    a = {
-        r["doc_id"]: r["cluster_id"]
-        for r in star_components(spark, n2, shallow).collect()
-    }
-    b = {
-        r["doc_id"]: r["cluster_id"]
-        for r in min_label_components(spark, n2, shallow).collect()
-    }
-    assert a == b
 
 
 @given(
@@ -1031,153 +1048,3 @@ def test_minhash_empty_docs_pair_exactly_once(spark):
         (r.doc_a, r.doc_b, r.est_sim) for r in minhash_pairs(docs).collect()
     ]
     assert pairs == [(0, 1, 0.0)], pairs
-
-
-def test_min_label_escalates_past_round_budget(spark):
-    """r8 diameter escape hatch: a path graph 4x deeper than the round
-    budget must still land on the exact component minimum via the
-    contract-then-star escalation (the sf100 q_dup_clusters failure
-    mode), and isolated nodes must keep their own label."""
-    from block_data_fetcher_spark.functions.hashing import (
-        min_label_components,
-        star_components,
-    )
-
-    n = 40
-    nodes = spark.createDataFrame(
-        [(i,) for i in range(n)] + [(999,)], "doc_id long"
-    )
-    path = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
-    )
-    got = {
-        r.doc_id: r.cluster_id
-        for r in min_label_components(spark, nodes, path, max_rounds=3).collect()
-    }
-    want = {i: 0 for i in range(n)}
-    want[999] = 999
-    assert got == want
-    # and it agrees with the pure star implementation
-    star = {
-        r.doc_id: r.cluster_id
-        for r in star_components(spark, nodes, path, canonical=True).collect()
-    }
-    assert star == want
-    # n_edges fast path (ADVICE r13): a caller that already
-    # checkpointed+counted the canonical pairs skips star's own
-    # round-zero materialization yet lands on the identical fixpoint
-    from block_data_fetcher_spark.functions.hashing import iter_checkpoint
-
-    canon = iter_checkpoint(path)
-    n_pairs = canon.count()
-    star2 = {
-        r.doc_id: r.cluster_id
-        for r in star_components(
-            spark, nodes, canon, canonical=True, n_edges=n_pairs
-        ).collect()
-    }
-    assert star2 == want
-
-
-def test_min_label_adaptive_escape_fires_early_on_path(spark):
-    """r10 (VERDICT r9 item 6): on a diameter-dominated graph the
-    escape must fire from the MEASURED convergence-rate signal (a
-    round retiring less than half the previous frontier), well before
-    the round budget — not at it — and still land on the exact
-    component minimum."""
-    from block_data_fetcher_spark.functions import hashing
-    from block_data_fetcher_spark.functions.hashing import (
-        min_label_components,
-    )
-
-    n = 60
-    nodes = spark.createDataFrame(
-        [(i,) for i in range(n)] + [(999,)], "doc_id long"
-    )
-    path = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
-    )
-    got = {
-        r.doc_id: r.cluster_id
-        for r in min_label_components(spark, nodes, path).collect()
-    }
-    want = {i: 0 for i in range(n)}
-    want[999] = 999
-    assert got == want
-    stats = dict(hashing.LAST_CC_STATS)
-    assert stats["escaped"] and stats["reason"] == "stalled", stats
-    # a 59-deep path under a 12-round budget: the rate signal must cut
-    # the label-prop phase to a handful of rounds
-    assert stats["rounds"] <= 4, stats
-
-
-def test_min_label_shallow_graph_converges_without_escape(spark):
-    """The adaptive signal must NOT fire on the bounded-diameter
-    (LSH-clique-shaped) graphs the fixtures produce — cliques retire
-    their whole frontier in one round."""
-    from block_data_fetcher_spark.functions import hashing
-    from block_data_fetcher_spark.functions.hashing import (
-        min_label_components,
-    )
-
-    # two 4-cliques plus an isolated node
-    edges = [
-        (a, b)
-        for grp in ([0, 1, 2, 3], [10, 11, 12, 13])
-        for a in grp
-        for b in grp
-        if a < b
-    ]
-    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    nodes = spark.createDataFrame(
-        [(i,) for i in [0, 1, 2, 3, 10, 11, 12, 13, 99]], "doc_id long"
-    )
-    got = {
-        r.doc_id: r.cluster_id
-        for r in min_label_components(spark, nodes, pairs).collect()
-    }
-    want = {0: 0, 1: 0, 2: 0, 3: 0, 10: 10, 11: 10, 12: 10, 13: 10, 99: 99}
-    assert got == want
-    stats = dict(hashing.LAST_CC_STATS)
-    assert not stats["escaped"] and stats["reason"] == "converged", stats
-    assert stats["algo"] == "label_prop", stats
-
-
-def test_min_label_routes_to_star_above_edge_threshold(spark, monkeypatch):
-    """r13 (VERDICT r12 item 4): above CC_LABEL_PROP_MAX_EDGES
-    symmetric edge rows, min_label_components must run alternating-star
-    from round one — same fixpoint, no label-prop rounds, no 'escaped'
-    stats (the sf100 decade pass burned two stalled label rounds before
-    admitting star was the right algorithm)."""
-    from block_data_fetcher_spark.functions import hashing
-    from block_data_fetcher_spark.functions.hashing import (
-        min_label_components,
-    )
-
-    edges = [
-        (a, b)
-        for grp in ([0, 1, 2, 3], [10, 11, 12, 13])
-        for a in grp
-        for b in grp
-        if a < b
-    ]
-    # reversed + duplicate orientations: the default (non-canonical)
-    # path must canonicalize them away — edge_pairs stays 12
-    edges += [(1, 0), (13, 12), (2, 3)]
-    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    nodes = spark.createDataFrame(
-        [(i,) for i in [0, 1, 2, 3, 10, 11, 12, 13, 99]], "doc_id long"
-    )
-    # 12 undirected pairs > 4: routing must fire
-    monkeypatch.setattr(hashing, "CC_LABEL_PROP_MAX_EDGES", 4)
-    got = {
-        r.doc_id: r.cluster_id
-        for r in min_label_components(spark, nodes, pairs).collect()
-    }
-    want = {0: 0, 1: 0, 2: 0, 3: 0, 10: 10, 11: 10, 12: 10, 13: 10, 99: 99}
-    assert got == want
-    stats = dict(hashing.LAST_CC_STATS)
-    assert stats["algo"] == "star", stats
-    assert not stats["escaped"], stats
-    assert stats["routed"] == "edge_threshold", stats
-    assert stats["edge_pairs"] == 12, stats

@@ -15,7 +15,7 @@ from block_data_fetcher_spark.streaming.jobs import (
     q_stream_tumbling,
     q_stream_upsert,
 )
-from block_data_fetcher_spark.catalog import table
+from block_data_fetcher_spark.catalog import fixture_bytes, table
 
 
 def _rows(df):
@@ -693,8 +693,8 @@ def test_state_provider_sized_by_actual_source(sf_dir, monkeypatch):
     # per-source signal must be read, not the events default.
     lo, hi = sorted((ev, docs))
     monkeypatch.setattr(J, "_HEAP_STATE_MAX_SRC_BYTES", lo)
-    small_src = "events.parquet" if ev == lo else "documents.parquet"
-    big_src = "documents.parquet" if ev == lo else "events.parquet"
+    small_src = "events" if ev == lo else "documents"
+    big_src = "documents" if ev == lo else "events"
     assert J._state_provider(sf_dir, source=small_src) == J._PROVIDER_HEAP
     assert J._state_provider(sf_dir, source=big_src) == J._PROVIDER_ROCKSDB
 
@@ -762,7 +762,7 @@ def test_stream_dedup_multibatch_evicts_and_matches(spark, sf_dir, monkeypatch):
         for r in jobs.q_stream_dedup(spark, sf_dir).collect()
     )
 
-    monkeypatch.setattr(jobs, "_SPLIT_THRESHOLD", jobs._source_bytes(sf_dir))
+    monkeypatch.setattr(jobs, "_SPLIT_THRESHOLD", fixture_bytes(sf_dir, "events"))
     split = sorted(
         tuple(r)
         for r in jobs.q_stream_dedup(spark, sf_dir).collect()
@@ -796,7 +796,7 @@ def test_stream_stream_join_multibatch_matches(spark, sf_dir, monkeypatch):
         for r in jobs.q_stream_stream_left_join(spark, sf_dir).collect()
     )
 
-    monkeypatch.setattr(jobs, "_SPLIT_THRESHOLD", jobs._source_bytes(sf_dir))
+    monkeypatch.setattr(jobs, "_SPLIT_THRESHOLD", fixture_bytes(sf_dir, "events"))
     split_inner = sorted(
         tuple(r) for r in jobs.q_stream_stream_join(spark, sf_dir).collect()
     )
