@@ -204,18 +204,10 @@ def main() -> None:
         spark.range(1).select(F.filter(F.array(F.lit(1)), lambda x: x > 0)).collect()
     except Exception:
         pass
-    try:  # Python DataSource worker init (q_etl_* use the RPC source)
-        from block_data_fetcher_spark.sources.rpc import SolanaRpcDataSource
+    try:  # mapInArrow worker init (q_etl_* read the RPC source with it)
+        from block_data_fetcher_spark.sources.rpc import read_slots
 
-        spark.dataSource.register(SolanaRpcDataSource)
-        (
-            spark.read.format("solana_rpc")
-            .option("start_slot", 0)
-            .option("end_slot", 0)
-            .option("mode", "offline")
-            .load()
-            .count()
-        )
+        read_slots(spark, {"start_slot": 0, "end_slot": 0}).count()
     except Exception:
         pass
     try:  # streaming machinery (StreamExecution, state store) init

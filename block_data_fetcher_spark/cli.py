@@ -5,11 +5,14 @@ switch invocation-for-invocation.
 
 The run itself is the Spark pipeline: RPC source (offline by default;
 pass --rpc-url for a live endpoint) → :func:`.etl.load.load_blocks`,
-which writes both tables from one fetch of each slot. ``--continuous``
-runs the Structured Streaming job the reference's loop only stubbed
-(``src/main.rs:144-147``) and hands each micro-batch to the same
-function; both modes read with the same options. Its checkpoint lives
-at ``<output>/_checkpoint``, so a restart into the same output resumes
+which writes both tables from one fetch of each slot. A batch run reads
+the slot range with :func:`.sources.rpc.read_slots` (a ``mapInArrow``
+over ``spark.range``, so no Python DataSource is planned).
+``--continuous`` runs the Structured Streaming job the reference's loop
+only stubbed (``src/main.rs:144-147``) over the ``solana_rpc`` stream
+reader and hands each micro-batch to the same function; both modes read
+with the same options and the same fetch loop. Its checkpoint lives at
+``<output>/_checkpoint``, so a restart into the same output resumes
 after the last committed micro-batch.
 """
 
@@ -123,9 +126,12 @@ def run(args: Args) -> dict:
     whatever the start."""
     from .etl.load import load_blocks
     from .session import get_spark
-    from .sources.rpc import SolanaRpcDataSource, finalized_slot
+    from .sources.rpc import SolanaRpcDataSource, finalized_slot, read_slots
 
     spark = get_spark("block-data-fetcher-spark")
+    # the stream reader's source; batch runs read through read_slots, but
+    # perfbench's staged backfill trace reads format("solana_rpc") on the
+    # session cli.run made
     spark.dataSource.register(SolanaRpcDataSource)
     start = args.start_slot
     if start is None:
@@ -155,7 +161,7 @@ def run(args: Args) -> dict:
         q.awaitTermination()
         return {}
 
-    raw = spark.read.format("solana_rpc").options(**options).load()
+    raw = read_slots(spark, options)
     loaded = load_blocks(raw, args.output)
     n_txs, n_ok = loaded["transactions_loaded"], loaded["successful_transactions"]
     report = {

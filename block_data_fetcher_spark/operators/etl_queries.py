@@ -22,19 +22,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..etl.extract import account_activity, extract_transactions
-from ..sources.rpc import SolanaRpcDataSource
+from ..sources.rpc import read_slots
 
 _SLOTS = (1000, 1049)  # 50 blocks x 4 txs in offline mode
 
 
 def _raw_blocks(spark: SparkSession) -> DataFrame:
-    spark.dataSource.register(SolanaRpcDataSource)
-    return (
-        spark.read.format("solana_rpc")
-        .option("start_slot", _SLOTS[0])
-        .option("end_slot", _SLOTS[1])
-        .option("mode", "offline")
-        .load()
+    return read_slots(
+        spark, {"start_slot": _SLOTS[0], "end_slot": _SLOTS[1], "mode": "offline"}
     )
 
 

@@ -1,19 +1,26 @@
-"""Solana JSON-RPC block source as a Spark 4 Python DataSource
-(reference S1/S2/ST1: ``src/rpc/mod.rs:64-90``, ``src/main.rs:123-148``).
+"""Solana JSON-RPC block source (reference S1/S2/ST1:
+``src/rpc/mod.rs:64-90``, ``src/main.rs:123-148``).
 
-Batch: a slot range is split into per-partition chunks (the
-``spark.range`` of SURVEY §3) and each partition fetches its blocks —
-the distributed restatement of the reference's strictly sequential
-fetch loop (one block per 100 ms, ``src/etl/extract.rs:284-286``; its
-README lists parallel fetching as future work — partitioned fetch IS
-that future work).
+Batch: :func:`read_slots` splits a slot range into ``batch_size``
+chunks, one row per chunk of a ``spark.range``, and
+``mapInArrow`` fetches each chunk's blocks — the distributed
+restatement of the reference's strictly sequential fetch loop (one
+block per 100 ms, ``src/etl/extract.rs:284-286``; its README lists
+parallel fetching as future work — partitioned fetch IS that future
+work). No Python DataSource planner runs, so a load starts no planning
+processes.
 
-Stream: ``SimpleDataSourceStreamReader`` whose offsets are slot
-positions; ``latestOffset`` polls the chain head minus a 20-slot
-finality lag — the reference's continuous mode (which its code never
-finished: the loop only logs, ``src/main.rs:144-147``).
+Stream: ``SolanaRpcStreamReader``, a Spark 4 Python DataSource
+``SimpleDataSourceStreamReader`` whose offsets are slot positions;
+``latestOffset`` polls the chain head minus a 20-slot finality lag —
+the reference's continuous mode (which its code never finished: the
+loop only logs, ``src/main.rs:144-147``).
 
-Both readers run one fetch loop (``_SlotFetcher._blocks``) over one
+The batch DataSource reader ``SolanaRpcReader`` (``format("solana_rpc")``)
+is kept only for the staged trace of ``perfbench``'s ``backfill``; it
+splits the range by the same chunk rule as :func:`read_slots`.
+
+Every reader runs one fetch loop (``_SlotFetcher._blocks``) over one
 JSON-RPC request helper (``_rpc_call``); ``cli.run`` reads the source
 once in either mode and hands it to :func:`..etl.load.load_blocks`.
 
@@ -29,6 +36,7 @@ from __future__ import annotations
 
 import json
 
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -241,15 +249,9 @@ def finalized_slot(url: str, max_retries: int, retry_delay: float) -> int:
     return head - FINALITY_LAG
 
 
-class _SlotRangePartition(InputPartition):
-    def __init__(self, start: int, end: int):
-        self.start = start
-        self.end = end
-
-
 class _SlotFetcher:
-    """The options both readers share, and the one per-slot fetch loop
-    they both run."""
+    """The options every reader shares, and the one per-slot fetch loop
+    they all run."""
 
     def __init__(self, options: dict):
         self.start = int(options.get("start_slot", 0))
@@ -277,19 +279,55 @@ class _SlotFetcher:
                 yield (slot, json.dumps(result))
 
 
-class SolanaRpcReader(_SlotFetcher, DataSourceReader):
+class _SlotRange(_SlotFetcher):
+    """A batch read's slots ``start..end``, fetched in chunks of
+    ``batch_size`` slots: the one chunk rule of both batch readers."""
+
     def __init__(self, options: dict):
         super().__init__(options)
         self.end = int(options.get("end_slot", self.start + 9))
 
-    def partitions(self):
-        return [
-            _SlotRangePartition(s, min(s + self.batch_size - 1, self.end))
-            for s in range(self.start, self.end + 1, self.batch_size)
-        ]
+    def firsts(self) -> range:
+        """The first slot of each chunk."""
+        return range(self.start, self.end + 1, self.batch_size)
 
-    def read(self, partition: _SlotRangePartition):
-        return self._blocks(partition.start, partition.end)
+    def chunk(self, first: int):
+        """Yield ``(slot, raw)`` for the chunk that starts at ``first``."""
+        return self._blocks(first, min(first + self.batch_size - 1, self.end))
+
+
+def read_slots(spark: SparkSession, options: dict) -> DataFrame:
+    """Batch read of slots ``start_slot..end_slot`` as ``(slot, raw)``
+    rows, one partition per chunk: a ``spark.range`` with one row per
+    chunk's first slot, whose ``mapInArrow`` fetches the chunk. Each
+    fetched block becomes its own Arrow batch, so a worker holds one
+    block at a time. Takes the options of ``format("solana_rpc")``."""
+    slots = _SlotRange(options)
+    firsts = slots.firsts()
+
+    def fetch(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            for first in batch.column(0).to_pylist():
+                for slot, raw in slots.chunk(first):
+                    yield pa.RecordBatch.from_pydict({"slot": [slot], "raw": [raw]})
+
+    return spark.range(
+        firsts.start, firsts.stop, firsts.step, numPartitions=len(firsts)
+    ).mapInArrow(fetch, _SCHEMA_DDL)
+
+
+class SolanaRpcReader(_SlotRange, DataSourceReader):
+    """The batch reader of ``format("solana_rpc")``: a partition per
+    chunk of :class:`_SlotRange`, as :func:`read_slots` reads them. Only
+    ``perfbench``'s staged ``backfill`` trace still reads through it."""
+
+    def partitions(self):
+        return [InputPartition(first) for first in self.firsts()]
+
+    def read(self, partition: InputPartition):
+        return self.chunk(partition.value)
 
 
 class SolanaRpcStreamReader(_SlotFetcher, SimpleDataSourceStreamReader):

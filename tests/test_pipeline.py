@@ -16,6 +16,7 @@ from block_data_fetcher_spark.etl.extract import (
 from block_data_fetcher_spark.etl.load import upsert_parquet
 from block_data_fetcher_spark.sources.rpc import (
     SolanaRpcDataSource,
+    read_slots,
     synthetic_block,
 )
 
@@ -758,6 +759,61 @@ def test_rpc_error_objects_skip_retry_or_fail(rpc_registered, spark, rpc_stub):
             spark, rpc_stub, rpc_stub.FATAL_SLOT, rpc_stub.FATAL_SLOT
         ).collect()
     assert rpc_stub.hits[rpc_stub.FATAL_SLOT] == 1
+
+
+# read_slots: the batch read cli.run and the ETL catalog queries use, a
+# mapInArrow over spark.range running the same per-slot fetch loop
+
+
+def _read_slots_online(spark, stub, start, end):
+    return read_slots(spark, {
+        "mode": "online", "url": stub.url, "start_slot": start,
+        "end_slot": end, "retry_delay": 0.05,
+    })
+
+
+def test_read_slots_offline_partitions_and_schema(spark):
+    raw = read_slots(spark, {"start_slot": 0, "end_slot": 99, "batch_size": 10})
+    assert raw.rdd.getNumPartitions() == 10
+    assert raw.schema.simpleString() == "struct<slot:bigint,raw:string>"
+    rows = raw.collect()
+    assert sorted(r.slot for r in rows) == list(range(100))
+    assert all(r.raw == synthetic_block(r.slot) for r in rows)
+
+
+def test_read_slots_online_skips_retries_and_fails_fast(spark, rpc_stub):
+    rows = _read_slots_online(spark, rpc_stub, 100, 109).collect()
+    assert {r.slot for r in rows} == set(range(100, 110)) - {rpc_stub.NULL_SLOT}
+    assert {s: rpc_stub.hits[s] for s in range(100, 110)} == {
+        s: 2 if s == rpc_stub.FLAKY_SLOT else 1 for s in range(100, 110)
+    }
+    with pytest.raises(Exception):
+        _read_slots_online(
+            spark, rpc_stub, rpc_stub.MISSING_SLOT, rpc_stub.MISSING_SLOT
+        ).collect()
+    assert rpc_stub.hits[rpc_stub.MISSING_SLOT] == 1
+
+
+def test_read_slots_error_object_is_not_a_skipped_slot(spark, rpc_stub):
+    """Only the slot-skipped codes skip a slot; an error object with any
+    other code fails the read instead of reading as an empty slot."""
+    got = {r.slot for r in _read_slots_online(spark, rpc_stub, 111, 115).collect()}
+    assert got == set(rpc_stub.TRANSIENT_SLOTS)
+    with pytest.raises(Exception, match="-32602"):
+        _read_slots_online(
+            spark, rpc_stub, rpc_stub.FATAL_SLOT, rpc_stub.FATAL_SLOT
+        ).collect()
+    assert rpc_stub.hits[rpc_stub.FATAL_SLOT] == 1
+
+
+def test_read_slots_plan_is_map_in_arrow_over_range(spark):
+    raw = read_slots(spark, {"start_slot": 0, "end_slot": 39})
+    plan = raw._jdf.queryExecution().optimizedPlan()
+    assert plan.nodeName() == "MapInArrow"
+    assert plan.children().size() == 1
+    assert plan.children().apply(0).nodeName() == "Range"
+    assert "RelationV2" not in plan.toString()
+    assert "solana_rpc" not in plan.toString()
 
 
 def _cli_online(stub, out, *flags):
